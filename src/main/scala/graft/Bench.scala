@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main. Runs every registered query against a `noop`-format
@@ -32,32 +31,7 @@ import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_SHUFFLE_PARTITIONS decouples shuffle width from thread
-    // count for the partition-sensitivity measurements (PERF.md); default
-    // keeps the one-partition-per-core production setting
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // round 17, re-justified round 18: lets the planner use a streaming
-      // SortAggregate when an aggregation's input is ALREADY sorted on the
-      // grouping keys (it never introduces a sort). The r17 comment
-      // credited this for the pair-mine win — wrong (the advisor's medium
-      // finding: EliminateSorts drops the miners' sortWithinPartitions, so
-      // the rule never fires there; those inert sorts are now removed).
-      // Where it DOES fire is aggregations fed by a same-key window sort
-      // (22 registered queries: ml_train_predict, paragraph_clean,
-      // gold_trial_stats, length_quantiles, table_profile, …) — an r18
-      // on/off A/B over exactly those 22 measured 40.2 vs 49.1 s at
-      // sf0.1/local[32] (comparable calib), so the conf stays on merit.
-      .config("spark.sql.execution.replaceHashWithSortAgg",
-        sys.env.getOrElse("SPARK_GRAFT_SORTAGG", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     // BOX-STATE CALIBRATION (round 17 — the r16 verdict's process order):
     // two rounds have paid a worktree A/B to adjudicate same-code bench

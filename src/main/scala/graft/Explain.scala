@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted physical plans for registered queries.
   * `runMain graft.Explain [names…]` — no args = all queries. Used for the
   * per-round plan audit (pushdown, broadcasts, no stray cartesians,
@@ -9,18 +7,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // round 17, re-justified round 18: SortAggregate for aggregations
-      // whose input is already sorted on the grouping keys — fires at the
-      // window→agg sites, NOT the pair miners (see Bench.scala for the
-      // r18 A/B). Kept aligned with Bench so plans audit what Bench runs.
-      .config("spark.sql.execution.replaceHashWithSortAgg", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>

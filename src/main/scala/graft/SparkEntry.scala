@@ -231,7 +231,7 @@ object SparkEntry {
     // …and its planned consumers (the hybridJaccardPlanned pattern):
     // exact oracles either way — at gate SFs the plan says brute, the
     // LSH arm is spec-pinned on a planted replica corpus and measured
-    // at 10x (MeasureGeometry --advisor)
+    // at 10x (PERF.md "Round-15: the LSH geometry advisor")
     "knn_mutual_planned" -> ((s, d) =>
       LshGeometryPlan.knnMutualPlannedQ(Tables.embeddings(s, d))),
     "embedding_dedup_planned" -> ((s, d) =>

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,21 +8,7 @@ object Verify {
     // optional extra args = query-name subset (local iteration; the driver
     // always passes exactly two, so its gate still dumps everything)
     val only: Set[String] = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // round 17, re-justified round 18: SortAggregate for aggregations
-      // whose input is already sorted on the grouping keys — fires at the
-      // window→agg sites (22 queries), NOT the pair miners (the r17
-      // attribution was wrong; see Bench.scala for the A/B). Kept aligned
-      // with Bench so Verify checks the plans Bench times.
-      .config("spark.sql.execution.replaceHashWithSortAgg", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -23,8 +23,8 @@ import org.apache.spark.sql.functions._
   *   est_cost(B) = cold_pair_mass(B) + [[HotProbeCostFactor]] · hot_postings(B)
   *
   * with the factor the measured order-of-magnitude premium of a probed
-  * posting over a join-emitted candidate row (StressPrefix regimes,
-  * PERF.md: hotonly plain 8.8 s / 12.5M candidates vs hybrid 1.2 s on
+  * posting over a join-emitted candidate row (PERF.md "Prefix filter
+  * regime": hotonly plain 8.8 s / 12.5M candidates vs hybrid 1.2 s on
   * postings-linear work). The recommendation is the cost argmin over
   * candidate bands — the distinct OBSERVED df values (the only points
   * where the cost changes), ties to the LARGEST band (prefer the plain
@@ -57,7 +57,7 @@ object BandPlan {
 
   /** Pair-equivalents a hot POSTING costs relative to a cold candidate
     * PAIR row (rank window + prefix join + probes) — order-of-magnitude
-    * from the StressPrefix regime table (PERF.md). A plan dial, not a
+    * from PERF.md's "Prefix filter regime" table. A plan dial, not a
     * correctness input. */
   val HotProbeCostFactor = 8L
 

@@ -265,9 +265,9 @@ object Curation {
 
   /** Max multiplicity over `g2` as max run of adjacent equals after
     * array_sort — O(len·log len) per row (the round-6 O(distinct·len) form
-    * measured 30× slower on 100×-length docs; StressLongDocs A/Bs this
-    * exact constant against the quadratic form, so the equivalence
-    * evidence tracks the shipping expression). Aggregate over an empty
+    * measured 30× slower on 100×-length docs; PERF.md "Long-document
+    * stress" A/Bs this exact constant against the quadratic form, so the
+    * equivalence evidence tracks the shipping expression). Aggregate over an empty
     * array returns the finish of the zero state, so the degenerate case is
     * 0 without a coalesce. */
   private[graft] val Top2RunLenExpr: String =
@@ -281,7 +281,7 @@ object Curation {
       |  acc -> acc.best)""".stripMargin
 
   /** The word-bigram array over `w` (no distinct — multiplicities matter
-    * here, unlike [[Dedup]]'s shingle sets). Shared with StressLongDocs.
+    * here, unlike [[Dedup]]'s shingle sets).
     * greatest(…, 0): `w` can now be EMPTY (NULL text coalesces to array())
     * and a bare size-1 slice length of -1 is an ANSI error. */
   private[graft] val G2Expr: String =
@@ -304,7 +304,7 @@ object Curation {
     * per-distinct-gram filter counts) was O(distinct·len), quadratic in
     * document length: fine on this corpus's ~30-word docs but measured
     * 30× slower at 100×-length documents of the SAME total token volume
-    * (10.5 s vs 0.35 s — StressLongDocs, PERF.md), a gap that grows
+    * (10.5 s vs 0.35 s — PERF.md "Long-document stress"), a gap that grows
     * linearly with doc length; same value on every doc (cross-checked in
     * the tool and by the relational spec).
     *

@@ -93,13 +93,13 @@ object Dedup {
     * exceeds both the mean per-reducer share of Σ df² and an absolute
     * floor ([[HotDfFloor]]) are salted `salt`-ways; every other shingle
     * takes the untouched plain join. Blanket salting was measured NET
-    * NEGATIVE at 10× gate volume (StressDf2: replicating the whole right
-    * side 32× cost 54 s vs 31 s unsalted on a corpus whose hot task only
-    * cost ~10 s) — the fix for "one reducer owns df²=25M rows" must not
-    * tax the 76M rows that were already balanced. Same output row-for-row
-    * (spec-pinned); Σ df² total work is unchanged — this fixes WHERE the
-    * work lands, not how much there is; combine with maxDf when the total
-    * itself is the problem. */
+    * NEGATIVE at 10× gate volume (PERF.md "Σ df² dials": replicating the
+    * whole right side 32× cost 54 s vs 31 s unsalted on a corpus whose hot
+    * task only cost ~10 s) — the fix for "one reducer owns df²=25M rows"
+    * must not tax the 76M rows that were already balanced. Same output
+    * row-for-row (spec-pinned); Σ df² total work is unchanged — this fixes
+    * WHERE the work lands, not how much there is; combine with maxDf when
+    * the total itself is the problem. */
   def ngramJaccardPairs(documents: DataFrame, threshold: Double = JaccardThreshold,
                         maxDf: Option[Long] = None,
                         saltCandidates: Option[Int] = None,
@@ -133,12 +133,13 @@ object Dedup {
       // SHUFFLED-HASH hint (round 17, guide §3.1): the candidate self-join
       // carries 16-byte rows on a dense shingle key — SMJ's per-partition
       // sort + duplicate-group buffering measured 5.7 s vs SHJ's 1.2 s at
-      // sf0.1 (MeasureAgg V0/V3; the sorts dominate because every key has
-      // df² outputs to re-scan). HONESTY NOTE (r17 advisor): the hint is
-      // UNCONDITIONAL where AQE's own SMJ→SHJ rewrite is size-gated by
-      // maxShuffledHashJoinLocalMapThreshold — the per-partition build is
-      // gramStream/shuffle.partitions rows, so at a fixed partition count
-      // an adversarially dense 100 TB corpus makes the forced build an
+      // sf0.1 (OPTIMIZATION_r17.md §1, V0/V3; the sorts dominate because
+      // every key has df² outputs to re-scan). HONESTY NOTE (r17
+      // advisor): the hint is UNCONDITIONAL where AQE's own SMJ→SHJ
+      // rewrite is size-gated by maxShuffledHashJoinLocalMapThreshold —
+      // the per-partition build is gramStream/shuffle.partitions rows, so
+      // at a fixed partition count an adversarially dense 100 TB corpus
+      // makes the forced build an
       // OOM class, not a slowdown. `shuffleHashCandidates` is therefore a
       // dial (the broadcastSizes pattern): true (default) keeps the
       // measured plan for every partition-sized invocation; false drops
@@ -166,7 +167,8 @@ object Dedup {
       // sorted child); the measured win (14.9 → 4.75 s on the τ=0 index)
       // was the SHJ candidate join + this single pair-keyed exchange.
       // Re-measured r18 with the inert sort removed: identical
-      // (MeasureAgg V7 vs V10). Output is row-identical by construction.
+      // (OPTIMIZATION_r18.md §1, V7 vs V10). Output is row-identical by
+      // construction.
       .repartition(col("id1"), col("id2"))
       .groupBy("id1", "id2")
       .agg(count(lit(1)).as("inter"))
@@ -571,7 +573,8 @@ object Dedup {
     // rounds) it cut rounds only 11 → 10 — the binding constraint is the
     // neighbor-min's one-edge-hop information flow, not pointer depth —
     // while TRIPLING per-round materializations (propagateMinLabels
-    // 4.3 → 33.4 s at sf0.1, MeasureTail cc). One jump per round stays.
+    // 4.3 → 33.4 s at sf0.1, OPTIMIZATION_r18.md "Not yet optimized").
+    // One jump per round stays.
     prop.as("a")
       .join(prop.as("b"), col("a.label") === col("b.doc_id"))
       .select(col("a.doc_id"), col("a.old").as("old"), col("b.label").as("label"))
@@ -835,9 +838,10 @@ object Dedup {
     * the hint forces. false drops every batch-side hint — the candidate
     * join and the n1 sizes dim plan as shuffles (or whatever AQE picks
     * from real sizes) — with row-identical output (spec-pinned both
-    * settings). Measured crossover (StressIncrBatch, PERF.md): on the 10×
-    * corpus the broadcast wins at a 20% batch and already LOSES at a 50%
-    * backfill batch (6.6 s shuffled vs 7.7 s broadcast) — the dial's
+    * settings). Measured crossover (PERF.md "Incremental-batch broadcast
+    * dial"): on the 10× corpus the broadcast wins at a 20% batch and
+    * already LOSES at a 50% backfill batch (6.6 s shuffled vs 7.7 s
+    * broadcast) — the dial's
     * threshold arrives well before broadcast memory does. */
   def dedupIncremental(documents: DataFrame,
                        batchMod: Long = IncrementalBatchMod,

@@ -63,7 +63,7 @@ object EditDistance {
       .select(col("doc_id"), expr("xxhash64(g)").as("gh"))
     // SHJ hint + pair-keyed exchange before the shared-gram count — the
     // round-17 Dedup.ngramJaccardPairs treatment applied here in round 18
-    // (measured: 1.08 → 0.61 s on this stage at sf0.1, MeasureTail edit).
+    // (measured: 1.08 → 0.61 s on this stage at sf0.1, OPTIMIZATION_r18.md §6).
     // Build side is the 4-gram stream — low-df by construction (the
     // operator's whole premise), so the per-partition build is small.
     val cand = ex.select(col("doc_id").as("id1"), col("gh")).hint("shuffle_hash")
@@ -83,7 +83,7 @@ object EditDistance {
     // its banded dist is EXACT; a -1 row has dist > k ≥ τ-infeasible and
     // was filtered anyway — output is row-identical to the full DP
     // (proven by in-run comparison at sf0.1: 255 rows, full equality;
-    // MeasureTail edit2) and the DuckDB oracle keeps the exact 2-arg form,
+    // OPTIMIZATION_r18.md §6) and the DuckDB oracle keeps the exact 2-arg form,
     // so the gate re-proves it every round. Measured 4.68 → 1.12 s.
     val kPct = math.round((1.0 - threshold) * 100)
     cand

@@ -57,7 +57,7 @@ object EquidepthHist {
   }
 
   /** Range-partitioned SCALE form (round 9) — the deployment rewrite the
-    * Scaladoc above promised and StressRelational's sf1 battery priced
+    * Scaladoc above promised and PERF.md "Relational classics at sf1" priced
     * (the window form's global sort is a single-reducer: 4.6× at 10×
     * volume and the only WindowExec-unpartitioned warning in the
     * battery; this form removes the ceiling). Two moves:

@@ -34,8 +34,8 @@ object Ivf {
     *    under local[8] yet a miss at nProbe=12 under local[4]. The
     *    deterministic spherical k-means below replaces it: every step is a
     *    pure function of the data VALUES, and the measured assignment
-    *    fingerprint is identical across local[4]/local[8] (MeasureRecall;
-    *    the partitioning-independence spec in AnnOracleSpec pins it).
+    *    fingerprint is identical across local[4]/local[8] (the
+    *    partitioning-independence spec in AnnOracleSpec pins it).
     *
     * 2. (inherent) the corpus itself is unclustered (top cosine ~0.5, no
     *    cluster structure), so true neighbors spread across cells and

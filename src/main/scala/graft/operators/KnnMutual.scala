@@ -83,8 +83,8 @@ object KnnMutual {
     * a missed true neighbor SHIFTS ranks within candidates, so the
     * mutual filter can also emit FALSE pairs (measured mp=1 at sf0.01:
     * 924 pairs vs 921 exact), not just miss true ones; precision is
-    * exact only at recall 1. Measured (MeasureRecall at sf0.01,
-    * MeasureMutual at sf0.1): mp=0 recall 0.49; mp=1 0.97 (3 false
+    * exact only at recall 1. Measured (SURVEY.md row #238, sf0.01 and
+    * sf0.1): mp=0 recall 0.49; mp=1 0.97 (3 false
     * pairs); mp=2 full-row equal at sf0.01 but 1 of 3800 pairs short at
     * sf0.1 — the mutual contract needs ALL top-k neighbors including
     * mid-cosine ones the threshold miner never looks at, so its
@@ -94,7 +94,8 @@ object KnnMutual {
     * query share `knnMutualSql` as its oracle (the #36
     * embedding_dedup_lsh promotion pattern). At 100 TB you raise `bits`
     * so buckets stay ~constant-size and retune mp — and since round 14
-    * that dial is a REAL parameter, measured (MeasureMutual --x10, 10×
+    * that dial is a REAL parameter, measured (PERF.md "Round-14:
+    * mutual-kNN candidate path", 10×
     * vectors): the registered bits=5 geometry loses to brute at 10×
     * (76 vs 38 s — buckets grow with n, so Σ bucket² grows with n²),
     * while bits=8/mp=2 reads 35 s, crossing UNDER exact while staying
@@ -158,7 +159,7 @@ object KnnMutual {
   }
 
   /** Probe width at which the mutual graph provably equals the exact
-    * operator at BOTH gate SFs — measured (MeasureRecall/MeasureMutual;
+    * operator at BOTH gate SFs — measured (SURVEY.md row #238;
     * see [[knnMutualLsh]]'s doc for the per-width numbers): full-row
     * equality spec-pinned (AnnOracleSpec); a corpus change that breaks
     * it fails loudly there. One step wider than the threshold miner's

@@ -79,7 +79,7 @@ object Lsh {
     // composed lazily the verify stage re-plans the whole signature+bucket
     // lineage around the array joins and the measured query read 4.4 s
     // where the verify itself costs 0.5 s on the materialized frame
-    // (MeasureTail mh2/mh2b). Materializing a candidate-pair id frame is
+    // (OPTIMIZATION_r18.md §7). Materializing a candidate-pair id frame is
     // the same economics as clustersFromPairs' pair checkpoint.
     val cand = buckets.as("a")
       .join(buckets.as("b"), col("a.bkey") === col("b.bkey") && col("a.doc_id") < col("b.doc_id"))
@@ -88,7 +88,7 @@ object Lsh {
       .localCheckpoint()
     // exact verification; at corpus scale this join ships only candidate
     // shingle sets (|candidates| << n²). Round-18 restructure (measured
-    // 4.4 → 0.5 s on the verify stage, MeasureTail mh2b): sizes ride a
+    // 4.4 → 0.5 s on the verify stage, OPTIMIZATION_r18.md §7): sizes ride a
     // CHECKPOINTED scalar frame and the candidate pairs are
     // SIZE-FEASIBILITY-pruned BEFORE the array joins — jaccard ≤
     // min(n)/max(n), so `100·min ≥ floor(τ·100)·max` is implied by the
@@ -293,7 +293,7 @@ object Lsh {
   }
 
   /** Registered-query probe width. Measured on the gate corpus (sf0.01,
-    * MeasureRecall): mp=0 recall 0.64, mp=1 recall 0.96, mp=2 recall 1.0
+    * SURVEY.md row #32): mp=0 recall 0.64, mp=1 recall 0.96, mp=2 recall 1.0
     * with the top-k set EXACTLY equal to brute — so at mp=2 the brute
     * oracle is valid (candidates ⊇ true top-k, and the rerank is the same
     * codegen'd graft_dot + (cos DESC, vec_id) window as brute, so agreement
@@ -365,8 +365,9 @@ object Lsh {
     // side a2 is the multi-probe-EXPLODED stream (C(bits,≤mp) ≈ 16× a1 at
     // the registered width) while the build side a1 is one 24-byte row
     // per (vec, table) — SMJ paid a per-partition sort of the exploded
-    // stream plus duplicate-bucket-group buffering. Measured (MeasureTail,
-    // sf0.1): candidates+dropDuplicates 7.24 s → 3.10 s with the hint.
+    // stream plus duplicate-bucket-group buffering. Measured
+    // (OPTIMIZATION_r18.md "Baseline measurement", sf0.1):
+    // candidates+dropDuplicates 7.24 s → 3.10 s with the hint.
     // Same honesty note as Dedup.ngramJaccardPairs' candidate hint: the
     // hint is unconditional where AQE's own SMJ→SHJ rewrite is size-gated
     // — but here the build is the UN-exploded id-only bucket frame
@@ -385,7 +386,7 @@ object Lsh {
   }
 
   /** Probe width at which pair mining provably equals the exact operator
-    * on the gate corpus — measured (MeasureRecall): mp=0 recall 0.53, mp=1
+    * on the gate corpus — measured (SURVEY.md row #36): mp=0 recall 0.53, mp=1
     * recall 0.98, mp=2 recall 1.0, full-row equality spec-pinned
     * (AnnOracleSpec).
     *

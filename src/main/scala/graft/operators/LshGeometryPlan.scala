@@ -61,7 +61,7 @@ import org.apache.spark.sql.functions._
   * hybridJaccardPlanned pattern): at the gate SFs the honest
   * recommendation IS brute; the LSH arm's end-to-end equality is
   * pinned on a planted replica corpus (LshGeometrySpec) and measured
-  * at 10× (MeasureGeometry --advisor, PERF.md). */
+  * at 10× (PERF.md "Round-15: the LSH geometry advisor"). */
 object LshGeometryPlan {
 
   /** Per-pair certificate floor: miss probability below 10⁻⁶. */

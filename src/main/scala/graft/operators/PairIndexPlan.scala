@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   *  - one inline τ=0 mine's join volume = Σ_s df(s)²   (`mine_rows` —
   *    every posting meets every posting of its shingle in the
   *    self-join; this is the measured cost driver of the slowest-8
-  *    family, StressPairIndex)
+  *    family, PERF.md "Persisted pair index (round 12)")
   *  - one from-index consumer's volume  = Σ_s C(df(s), 2) (`pair_rows`
   *    — the stored candidate-pair stream WITH multiplicity bound; the
   *    distinct-pair frame is ≤ this, so the indexed side's cost is
@@ -30,8 +30,8 @@ import org.apache.spark.sql.functions._
   *
   * Emits one row per consumer count k = 1..[[MaxConsumers]] with both
   * integer costs and the strict `use_index` verdict. Empirical anchor
-  * for the model's shape: StressPairIndex measured six inline
-  * consumers at 123.9 s vs build+consume 24.2 s at sf0.1 (PERF.md) —
+  * for the model's shape: six inline consumers measured 123.9 s vs
+  * build+consume 24.2 s at sf0.1 (PERF.md "Persisted pair index") —
   * the model's k=6 ratio on the same corpus calls the same winner.
   *
   * Scale: ONE map-combinable exploded-shingle aggregation (the

@@ -12,11 +12,12 @@ import org.apache.spark.sql.functions._
   * Six of the bench's slowest-8 (ngram_jaccard, cluster, keep_best,
   * threshold_sweep, split_leakage, source_dup_rate) are τ=0 exact
   * re-miners of the SAME Σ df² inverted-index join. The round-12 answer
-  * (InfraSpec + StressPairIndex: 123.9 s inline vs 24.2 s build+consume
-  * at sf0.1) was mine-once-consume-many — but only the INLINE forms were
-  * driver-gated. The `*_indexed` twins below close that: each mines the
-  * τ=0 index ONCE per corpus into an on-disk parquet store, and every
-  * consumer (and every later query over the same corpus) reads the
+  * (InfraSpec + PERF.md "Persisted pair index": 123.9 s inline vs 24.2 s
+  * build+consume at sf0.1) was mine-once-consume-many — but only the
+  * INLINE forms were driver-gated. The `*_indexed` twins below close
+  * that: each mines the τ=0 index ONCE per corpus into an on-disk
+  * parquet store, and every consumer (and every later query over the
+  * same corpus) reads the
   * stored stats — row-identical to its inline twin BY CONSTRUCTION
   * (the inline forms all end in a jaccard filter over exactly these five
   * columns; InfraSpec pins identity), so each shares its twin's oracle.

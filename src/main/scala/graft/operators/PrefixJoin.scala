@@ -100,7 +100,7 @@ object PrefixJoin {
   }
 
   /** Pure-prefix form with the [[Dedup.ngramJaccardQ]] projection; kept
-    * for the regime measurements (StressPrefix) and its spec. */
+    * for its spec (regime numbers: PERF.md "Prefix filter regime"). */
   def prefixJaccardQ(documents: DataFrame): DataFrame =
     prefixJaccardPairs(documents)
       .select(col("id1"), col("id2"), col("n1"), col("n2"), col("inter"),
@@ -118,7 +118,8 @@ object PrefixJoin {
     * splits at runtime (partial aggregation has already collapsed the
     * build side to one row per shingle). Same verdict the substring
     * family reached for grams (SubstringDedup.dupPositionsSemi); A/B at
-    * planted hot-shingle skew in StressPrefix, PERF.md. The exploded
+    * planted hot-shingle skew in PERF.md "Round-14: hybrid shingle-df
+    * A/B". The exploded
     * stream feeds the df agg + the join-back (2 consumers) →
     * checkpointed; the result feeds the cold join, the hot probes, the
     * hot-heavy stats, and (in the auto form) the band calibrator's
@@ -131,14 +132,15 @@ object PrefixJoin {
     ex.join(dfs, Seq("sh")).localCheckpoint()
   }
 
-  /** MEASUREMENT-ONLY window-df twin (the SubstringDedup demoted-window
-    * precedent): the pre-round-14 production shape, df via `count over
-    * Window.partitionBy(sh)`. Kept private so StressPrefix can state the
-    * A/B honestly and PrefixJoinSpec can pin row identity — its 100 TB
-    * failure mode (one un-splittable reducer owning a df~10⁹ shingle's
-    * whole partition) is structural and NOT reachable on one box, so the
-    * gate numbers only bound the join-back's overhead, never demonstrate
-    * the window's failure. */
+  /** Window-df twin (the SubstringDedup demoted-window precedent): the
+    * pre-round-14 production shape, df via `count over
+    * Window.partitionBy(sh)`. Kept private as PrefixJoinSpec's row-identity
+    * reference for the join-back form; the A/B between the two is PERF.md
+    * "Round-14: hybrid shingle-df A/B". Its 100 TB failure mode (one
+    * un-splittable reducer owning a df~10⁹ shingle's whole partition) is
+    * structural and NOT reachable on one box, so the gate numbers only
+    * bound the join-back's overhead, never demonstrate the window's
+    * failure. */
   private[graft] def hybridJaccardPairsWindowDf(documents: DataFrame,
                                                 dfBand: Long = Dedup.HotDfFloor): DataFrame =
     hybridCore(documents,

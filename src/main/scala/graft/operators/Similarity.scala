@@ -250,7 +250,7 @@ object Similarity {
     * pair is harmless whenever the component stays connected through
     * other collisions. [[ClusterProbeGate]] is the measured probe width
     * where the LSH pair graph induces the IDENTICAL component labeling
-    * on the gate corpus (MeasureRecall CLUSTER rows; spec-pinned
+    * on the gate corpus (SURVEY.md row #187; spec-pinned
     * row-identity in AnnOracleSpec — a corpus change that breaks it
     * fails loudly there), so the registered query shares
     * [[embeddingClustersSql]]'s recursive-closure oracle verbatim. */
@@ -270,8 +270,8 @@ object Similarity {
   }
 
   /** Probe width at which the LSH pair graph provably induces the exact
-    * component labeling on the gate corpus — measured (MeasureRecall
-    * CLUSTER rows): mp=0 diverges on 27 labels, mp=1 on 1, mp=2 on 0;
+    * component labeling on the gate corpus — measured (SURVEY.md row
+    * #187): mp=0 diverges on 27 labels, mp=1 on 1, mp=2 on 0;
     * pinned end-to-end in AnnOracleSpec. Affordable because the pair
     * stage's id-only join-back (see [[Lsh.PairProbeRecallOne]]) collapsed
     * the mp=2 cost from 42 s to ~7 s at sf0.1. */

@@ -31,7 +31,8 @@ object Skew {
     * (a small one-column frame, broadcast); all other keys take the plain
     * equi-join. Result equals `left.join(right, key)` row-for-row.
     *
-    * Why this exists (measured, StressDf2 at 10× gate volume): blanket
+    * Why this exists (measured at 10× gate volume, PERF.md "Σ df² dials
+    * at 10× gate volume"): blanket
     * [[saltedJoin]] replicates the ENTIRE right side `salt`×, and on a
     * 104M-candidate join that replication cost MORE than the hot task it
     * spread (54 s vs 31 s unsalted). Salting pays only when applied to the

@@ -128,8 +128,10 @@ object SubstringDedup {
       .select("doc_id", "pos")
   }
 
-  /** The count-window twin kept for measurement (one corpus scan, one
-    * full shuffle + sort, un-splittable hot partitions). */
+  /** The count-window twin (one corpus scan, one full shuffle + sort,
+    * un-splittable hot partitions), kept as SubstringDedupSpec's
+    * row-identity reference for the semi-join form; the A/B between the
+    * two is PERF.md "dedup_substring at 10×". */
   private[graft] def substringDedupViaWindow(documents: DataFrame,
                                              l: Int = MinRunTokens): DataFrame =
     spansFromDupPositions(

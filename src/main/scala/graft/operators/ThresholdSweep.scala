@@ -27,7 +27,8 @@ import org.apache.spark.sql.functions._
   * (lossy volume cap — at τ=0 the pair stream inherits the exact
   * contract's Σ df² in FULL, with none of the 0.8 filter's tail
   * discount, so on a dense near-dup corpus maxDf is the dial that
-  * keeps the sweep affordable; StressCuration numbers in PERF.md).
+  * keeps the sweep affordable; numbers in PERF.md "Curation suite at 10×
+  * gate volume").
   */
 object ThresholdSweep {
 

@@ -182,11 +182,6 @@ object CommitLog {
   def commits(table: String, asOf: Long): Seq[Commit] =
     (0L to asOf).map(commits0(table, _))
 
-  /** ONE commit, parsed — the bounded single-file read (round 16, r15
-    * advice: recovery walks that called `commits(table, v).last` paid a
-    * full 0..v prefix parse per probe, O(head²) over a walk). */
-  def commitAt(table: String, v: Long): Commit = commits0(table, v)
-
   /** The version whose commit carries the txn action (appId,
     * txnVersion), walking BACKWARD one commit file per step — O(head)
     * file reads total (the recovery-walk primitive; r15 advice). None

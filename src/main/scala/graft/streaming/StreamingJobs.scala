@@ -894,7 +894,8 @@ object StreamingJobs {
     *    .CommitLog.readPruned]] — file skipping WITHOUT the residual
     *    row filter, because the sh equi-join already implies it — so
     *    per-batch corpus cost tracks TOUCHED index files, not index
-    *    size (StressStreaming measures the census). Pruning is a
+    *    size (census in PERF.md "Round-17: the pruned gram-index
+    *    probe"). Pruning is a
     *    NECESSARY-condition file cut: store==fresh mine identity is
     *    unchanged (ClusterStreamSpec);
     *  - `labelsTable` — the label CATALOG ((doc_id, cluster_id) only:

@@ -91,7 +91,7 @@ class AnnOracleSpec extends AnyFunSuite {
     // the registered knn_cosine_lsh query runs at MultiProbeGate and is
     // oracled by the BRUTE SQL — valid iff the full rows (ranks and cosines
     // included) are identical on the gate corpus. Measured mp=2 recall is
-    // 1.0 (MeasureRecall); this pins it so a corpus change fails loudly.
+    // 1.0 (SURVEY.md row #32); this pins it so a corpus change fails loudly.
     val emb = Tables.embeddings(spark, gateSf)
     def rows(df: DataFrame): Array[String] =
       df.select("query_id", "neighbor_id", "rank", "cos", "label")
@@ -196,7 +196,7 @@ class AnnOracleSpec extends AnyFunSuite {
   test("mutual-kNN LSH at the gate probe width equals the exact operator row-for-row") {
     // the round-14 registered knn_mutual_lsh shares knnMutualSql as its
     // oracle — valid iff ranks AND cosines are identical at MutualProbeGate
-    // on the gate corpus (measured recall 1, MeasureRecall). Pins the
+    // on the gate corpus (measured recall 1, SURVEY.md row #238). Pins the
     // within-candidate rerank's rank fidelity too: below recall-1 width a
     // missed neighbor SHIFTS ranks and can create FALSE mutual pairs, so
     // set recall alone would be too weak a pin.

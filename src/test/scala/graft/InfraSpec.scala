@@ -260,7 +260,7 @@ class InfraSpec extends AnyFunSuite {
     // stored stats — this spec pins (a) row identity of every from-index
     // form vs its registered inline twin and (b) that no from-index plan
     // contains the miner's xxhash64 signature (nothing re-mines).
-    // Amortized cost at sf0.1: StressPairIndex → PERF.md.
+    // Amortized cost at sf0.1: PERF.md "Persisted pair index (round 12)".
     import graft.operators.{Dedup, Parity, SourceDupRate, SplitLeakage, ThresholdSweep}
     val docs = Tables.documents(spark, sf)
     try {

@@ -71,7 +71,8 @@ class PlanAdvisorSpec extends AnyFunSuite {
     assert(byK(2L) == ((24L, 18L, true)), s"k=2: ${byK(2L)}")
     assert(byK(6L) == ((72L, 30L, true)), s"k=6: ${byK(6L)}")
     // the gate corpus (six registered indexed twins exist): k=6 must
-    // recommend the index — the StressPairIndex measurement's answer
+    // recommend the index — the measured answer in PERF.md "Persisted
+    // pair index (round 12)"
     val gate = PairIndexPlan.pairIndexPlan(docs4Gate).collect()
       .find(_.getLong(0) == 6L).get
     assert(gate.getBoolean(3), "k=6 on the corpus must recommend indexing")

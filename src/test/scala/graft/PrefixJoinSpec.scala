@@ -127,8 +127,9 @@ class PrefixJoinSpec extends AnyFunSuite {
   test("window-df measurement twin is row-identical to the join-back production form") {
     // round 14: production df moved to the map-combinable groupBy +
     // join-back (the unbounded-key skew invariant); the demoted window
-    // twin stays private for StressPrefix's A/B — identity here keeps
-    // the measurement honest (same rows, only the df PLUMBING differs)
+    // twin stays private as the reference for the A/B in PERF.md
+    // "Round-14: hybrid shingle-df A/B" — identity here keeps that
+    // measurement honest (same rows, only the df PLUMBING differs)
     val a = PrefixJoin.hybridJaccardPairs(docs).collect().map(_.toString).sorted
     val b = PrefixJoin.hybridJaccardPairsWindowDf(docs).collect().map(_.toString).sorted
     assert(a.nonEmpty && a.sameElements(b))
