@@ -36,16 +36,19 @@ import graft.sources.CommitLog
   */
 object CommitLogRead {
 
+  /** The committed version; the gate scripts run single-writer, so a
+    * [[CommitLog.Conflict]] is a bug. */
+  private def must(r: Either[CommitLog.Conflict, Long]): Long = r match {
+    case Right(v) => v
+    case Left(c) => throw new IllegalStateException(s"unexpected conflict: $c")
+  }
+
   /** Builds the six-version verb-script table from the corpus and returns
     * its path — shared by the read-at query and [[commitLogHistoryQ]]. */
   private[graft] def buildScriptTable(documents: DataFrame): String = {
     val spark = documents.sparkSession
     val base = documents.select(col("doc_id"), col("source"), col("n_chars"))
     val table = Files.createTempDirectory("graft_cl_q").resolve("t").toString
-    def must(r: Either[CommitLog.Conflict, Long]): Long = r match {
-      case Right(v) => v
-      case Left(c) => throw new IllegalStateException(s"unexpected conflict: $c")
-    }
     CommitLog.append(spark, table, base.filter(col("doc_id") % 3 === 0)) // v0
     CommitLog.append(spark, table, base.filter(col("doc_id") % 3 === 1)) // v1
     val kept = CommitLog.read(spark, table, Some(1L))
@@ -164,10 +167,6 @@ object CommitLogRead {
     val spark = documents.sparkSession
     val base = documents.select(col("doc_id"), col("source"), col("n_chars"))
     val table = Files.createTempDirectory("graft_cl_ren").resolve("t").toString
-    def must(r: Either[CommitLog.Conflict, Long]): Long = r match {
-      case Right(v) => v
-      case Left(c) => throw new IllegalStateException(s"unexpected conflict: $c")
-    }
     CommitLog.append(spark, table, base.filter(col("doc_id") % 3 === 0)) // v0
     // empty-corpus table: an all-empty append stages no data files, so
     // there is no schema to rewrite — the normalized output is empty
@@ -213,10 +212,6 @@ object CommitLogRead {
     val spark = documents.sparkSession
     val base = documents.select(col("doc_id"), col("source"), col("n_chars"))
     val table = Files.createTempDirectory("graft_cl_del").resolve("t").toString
-    def must(r: Either[CommitLog.Conflict, Long]): Long = r match {
-      case Right(v) => v
-      case Left(c) => throw new IllegalStateException(s"unexpected conflict: $c")
-    }
     CommitLog.append(spark, table, base.filter(col("doc_id") % 3 === 0)) // v0
     val untouched = CommitLog.append(spark, table,
       base.filter(col("doc_id") % 3 === 1 && col("doc_id") % 5 =!= 0)) // v1
@@ -261,10 +256,6 @@ object CommitLogRead {
     val spark = documents.sparkSession
     val base = documents.select(col("doc_id"), col("source"), col("n_chars"))
     val table = Files.createTempDirectory("graft_cl_upd").resolve("t").toString
-    def must(r: Either[CommitLog.Conflict, Long]): Long = r match {
-      case Right(v) => v
-      case Left(c) => throw new IllegalStateException(s"unexpected conflict: $c")
-    }
     CommitLog.append(spark, table, base.filter(col("doc_id") % 3 === 0)) // v0
     val untouched = CommitLog.append(spark, table,
       base.filter(col("doc_id") % 3 === 1 && col("doc_id") % 5 =!= 0)) // v1
@@ -428,10 +419,6 @@ object CommitLogRead {
     if (base.isEmpty)
       return base.limit(0).select(lit(0L).as("version"), col("doc_id"),
         col("source"), col("n_chars"), col("n_chars").as("len_kb"))
-    def must(r: Either[CommitLog.Conflict, Long]): Long = r match {
-      case Right(v) => v
-      case Left(c) => throw new IllegalStateException(s"unexpected conflict: $c")
-    }
     CommitLog.append(spark, table, base.filter(col("doc_id") % 3 === 0)
       .withColumn("len_kb", expr("n_chars div 1000"))) // v0
     must(CommitLog.addGeneratedColumn(spark, table, "len_kb", "n_chars div 1000"))
@@ -500,10 +487,6 @@ object CommitLogRead {
     val spark = documents.sparkSession
     val base = documents.select(col("doc_id"), col("source"), col("n_chars"))
     val table = Files.createTempDirectory("graft_cl_mrg").resolve("t").toString
-    def must(r: Either[CommitLog.Conflict, Long]): Long = r match {
-      case Right(v) => v
-      case Left(c) => throw new IllegalStateException(s"unexpected conflict: $c")
-    }
     CommitLog.append(spark, table, base.filter(col("doc_id") % 3 === 0)) // v0
     val untouched = CommitLog.append(spark, table,
       base.filter(col("doc_id") % 3 === 1 && col("doc_id") % 5 =!= 0)) // v1
@@ -818,10 +801,6 @@ object CommitLogRead {
     val v0r = CommitLog.read(spark, table, Some(0L))
     if (v0r.columns.isEmpty || v0r.isEmpty) return out(base.limit(0), 0L)
     val before = CommitLog.liveFiles(table, 0L)
-    def must(r: Either[CommitLog.Conflict, Long]): Long = r match {
-      case Right(v) => v
-      case Left(c) => throw new IllegalStateException(s"unexpected conflict: $c")
-    }
     must(CommitLog.deleteWhereDv(spark, table, col("doc_id") % 7 === 0)) // v1
     require(CommitLog.liveFiles(table, 1L) == before,
       "a DV delete must not rewrite or remove any data file")
@@ -883,10 +862,6 @@ object CommitLogRead {
       val withSchema = if (df.columns.isEmpty) base.limit(0) else df
       withSchema.select(lit(v).as("version"), col("doc_id"), col("source"),
         col("n_chars"))
-    }
-    def must(r: Either[CommitLog.Conflict, Long]): Long = r match {
-      case Right(v) => v
-      case Left(c) => throw new IllegalStateException(s"unexpected conflict: $c")
     }
     CommitLog.append(spark, table,
       base.repartitionByRange(8, col("doc_id"))
@@ -968,10 +943,6 @@ object CommitLogRead {
     val spark = documents.sparkSession
     val base = documents.select(col("doc_id"), col("source"), col("n_chars"))
     val table = Files.createTempDirectory("graft_cl_cdf").resolve("t").toString
-    def must(r: Either[CommitLog.Conflict, Long]): Long = r match {
-      case Right(v) => v
-      case Left(c) => throw new IllegalStateException(s"unexpected conflict: $c")
-    }
     CommitLog.append(spark, table, base.filter(col("doc_id") % 3 === 0)) // v0
     CommitLog.append(spark, table, base.filter(col("doc_id") % 3 === 1)) // v1
     val v1r = CommitLog.read(spark, table, Some(1L))
@@ -1035,10 +1006,6 @@ object CommitLogRead {
     val spark = documents.sparkSession
     val base = documents.select(col("doc_id"), col("source"), col("n_chars"))
     val table = Files.createTempDirectory("graft_cl_con").resolve("t").toString
-    def must(r: Either[CommitLog.Conflict, Long]): Long = r match {
-      case Right(v) => v
-      case Left(c) => throw new IllegalStateException(s"unexpected conflict: $c")
-    }
     def out(df: DataFrame, tag: Long): DataFrame = {
       val withSchema = if (df.columns.isEmpty) base.limit(0) else df
       withSchema.select(lit(tag).as("version"), col("doc_id"), col("source"),
@@ -1184,10 +1151,6 @@ object CommitLogRead {
     val base = ZOrder.baseFrame(events)
     val out = base.groupBy("user_id", "day").agg(count(lit(1)).as("n")).limit(0)
     val table = Files.createTempDirectory("graft_cl_zo").resolve("t").toString
-    def must(r: Either[CommitLog.Conflict, Long]): Long = r match {
-      case Right(v) => v
-      case Left(c) => throw new IllegalStateException(s"unexpected conflict: $c")
-    }
     CommitLog.append(spark, table, base) // v0
     val v0r = CommitLog.read(spark, table, Some(0L))
     // day-one: an empty corpus (no schema, or schema over zero rows)

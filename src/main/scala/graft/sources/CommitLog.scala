@@ -2,6 +2,7 @@ package graft.sources
 
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 
+import scala.collection.immutable.VectorMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -27,19 +28,24 @@ import org.apache.spark.sql.types.{BooleanType, ByteType, DateType, DoubleType, 
   *   <table>/<uuid>-part-NNNNN.parquet   immutable data files
   *   <table>/_graft_log/<v%020d>.json    one commit per version, v = 0..
   * }}}
-  * A commit file is JSON LINES, one action per line:
-  * `{"add":"<file>"}` or `{"remove":"<file>"}`. Table state at version v
-  * = fold of actions 0..v (adds minus removes); data files are never
-  * mutated, so a reader that resolved its file list at version v is
-  * isolated from every later commit (and from vacuum, as long as v is
-  * inside the retention window).
+  * A commit file is JSON LINES, one action per line (the 13 line kinds
+  * are listed at [[encode]], the one codec). Table state at version v =
+  * [[fold]] of commits 0..v; data files are never mutated, so a reader
+  * that resolved its file list at version v is isolated from every
+  * later commit (and from vacuum, as long as v is inside the retention
+  * window).
   *
-  * CONCURRENCY: the exclusivity primitive is `CREATE_NEW` on the commit
-  * file — exactly one writer can create `<v>.json`, so version numbers
-  * are totally ordered with no coordinator. (On a local/POSIX or HDFS
-  * filesystem create-exclusive is atomic; an object-store deployment
-  * would swap in a put-if-absent — same protocol, different primitive.)
-  * Appends commute, so [[append]] retries blindly at the next version.
+  * CONCURRENCY: the exclusivity primitive is a hard link. A writer
+  * writes the whole commit body to a temp file in `_graft_log`, then
+  * publishes it with `Files.createLink(<v>.json, temp)`, which fails if
+  * `<v>.json` exists — exactly one writer can publish each version, so
+  * version numbers are totally ordered with no coordinator, and a
+  * reader never sees a partial body: a crash before the link leaves
+  * only an unpublished temp file (never named `*.json`, so no reader
+  * looks at it). An object-store deployment would swap in a
+  * put-if-absent — same protocol, different primitive (the Delta
+  * log-store contract). Appends commute, so [[append]] retries blindly
+  * at the next version.
   * [[replaceFiles]] (the copy-on-write half of MERGE/compaction) is
   * SERIALIZABLE: it commits at exactly `readVersion + 1` or reports a
   * [[Conflict]] — the caller re-reads the new snapshot and recomputes,
@@ -51,13 +57,15 @@ import org.apache.spark.sql.types.{BooleanType, ByteType, DateType, DoubleType, 
   * reads hand Spark a closed file list so partition pruning and column
   * pruning work unchanged. Log growth is handled by [[checkpoint]]
   * (the Delta `_checkpoint` design): a checkpoint materializes the
-  * folded live-file state at a version, and [[liveFiles]] replays only
-  * the commit suffix past the newest checkpoint — O(suffix) per read
-  * instead of O(commits).
+  * folded state at a version, and [[snapshot]] replays only the commit
+  * suffix past the newest checkpoint — O(suffix) per read instead of
+  * O(commits).
   */
 object CommitLog {
 
-  /** One commit's actions, already parsed. `txns` carries the
+  /** One commit's actions, already parsed — the only action type: a
+    * commit file, a checkpoint body and [[tryCommit]]'s arguments all
+    * go through [[encode]]/[[decode]] as one of these. `txns` carries the
     * idempotent-writer watermarks recorded by [[appendIdempotent]]
     * (Delta's txnAppId/txnVersion design, public); `meta` the
     * base64-encoded schema JSON recorded by [[evolveSchema]] (Delta's
@@ -65,7 +73,10 @@ object CommitLog {
     * (base64 JSON — Delta's add-action `stats` field, public design;
     * round 15); `ctsMillis` the commit's own wall timestamp recorded IN
     * the action lines (round 15 — deterministic under file copy, unlike
-    * Delta's legacy mtime fallback). */
+    * Delta's legacy mtime fallback); `dvs` deletion-vector attachments
+    * (dv file, target data file) — the merge-on-read DELETE actions
+    * (round 16); `dvRms` explicit DV clears (restore re-emitting an
+    * older version's DV state). */
   case class Commit(version: Long, adds: Vector[String], removes: Vector[String],
                     txns: Vector[(String, Long)] = Vector.empty,
                     meta: Option[String] = None,
@@ -86,76 +97,117 @@ object CommitLog {
   private def commitFile(table: String, v: Long): Path =
     logDir(table).resolve(f"$v%020d.json")
 
+  // ------------------------------------------------- the action codec
+
+  /** Checkpoint format version. v2 (round 14) checkpoints are COMPLETE:
+    * a v2 checkpoint is the whole folded [[Snapshot]] at its version
+    * (the Delta checkpoint design — its checkpoints carry txn and
+    * metaData actions, public), marked with a `{"cpv":2}` header line,
+    * so every reader can STOP at it: absence of a txn/meta/constraint
+    * entry there means none exists at or below it. A checkpoint file
+    * WITHOUT the header is a legacy adds-only snapshot; [[snapshot]]
+    * folds from genesis past it (the old full-scan cost, never a wrong
+    * answer). */
+  val CheckpointFormatVersion = 2
+
+  private val CpvRe = """\{"cpv":(\d+)\}""".r
+  private val CtsRe = """\{"cts":(\d+)\}""".r
+  private val MetaRe = """\{"meta":\{"schemaB64":"([A-Za-z0-9+/=]+)"\}\}""".r
+  private val TxnRe = """\{"txn":\{"app":"([^"]+)","version":(\d+)\}\}""".r
+  private val RemoveRe = """\{"remove":"([^"]+)"\}""".r
+  private val ConstraintRmRe = """\{"constraintrm":"([A-Za-z0-9_]+)"\}""".r
+  private val ConstraintRe =
+    """\{"constraint":\{"name":"([A-Za-z0-9_]+)","exprB64":"([A-Za-z0-9+/=]+)"\}\}""".r
+  private val GencolRmRe = """\{"gencolrm":"([A-Za-z0-9_]+)"\}""".r
+  private val GencolRe =
+    """\{"gencol":\{"name":"([A-Za-z0-9_]+)","exprB64":"([A-Za-z0-9+/=]+)"\}\}""".r
+  private val DvRmRe = """\{"dvrm":"([^"]+)"\}""".r
+  private val DvRe = """\{"dv":\{"path":"([^"]+)","target":"([^"]+)"\}\}""".r
   private val AddRe = """\{"add":"([^"]+)"\}""".r
   private val AddStatsRe =
     """\{"add":\{"path":"([^"]+)","statsB64":"([A-Za-z0-9+/=]+)"\}\}""".r
-  private val RemoveRe = """\{"remove":"([^"]+)"\}""".r
-  private val TxnRe = """\{"txn":\{"app":"([^"]+)","version":(\d+)\}\}""".r
-  private val MetaRe = """\{"meta":\{"schemaB64":"([A-Za-z0-9+/=]+)"\}\}""".r
-  private val CtsRe = """\{"cts":(\d+)\}""".r
-  private val DvRe = """\{"dv":\{"path":"([^"]+)","target":"([^"]+)"\}\}""".r
-  private val DvRmRe = """\{"dvrm":"([^"]+)"\}""".r
-  private val ConstraintRe =
-    """\{"constraint":\{"name":"([A-Za-z0-9_]+)","exprB64":"([A-Za-z0-9+/=]+)"\}\}""".r
-  private val ConstraintRmRe = """\{"constraintrm":"([A-Za-z0-9_]+)"\}""".r
-  private val GencolRe =
-    """\{"gencol":\{"name":"([A-Za-z0-9_]+)","exprB64":"([A-Za-z0-9+/=]+)"\}\}""".r
-  private val GencolRmRe = """\{"gencolrm":"([A-Za-z0-9_]+)"\}""".r
 
-  /** Parsed action lines of one commit or checkpoint body. `dvs` =
-    * deletion-vector attachments (dvfile, target data file) — the
-    * merge-on-read DELETE actions (round 16); `dvRms` explicit DV
-    * clears (restore re-emitting an older version's DV state). */
-  private case class Actions(adds: Vector[String], removes: Vector[String],
-                             txns: Vector[(String, Long)], meta: Option[String],
-                             addStats: Map[String, String],
-                             ctsMillis: Option[Long],
-                             dvs: Vector[(String, String)],
-                             dvRms: Vector[String],
-                             constraints: Vector[(String, String)],
-                             constraintRms: Vector[String],
-                             gencols: Vector[(String, String)],
-                             gencolRms: Vector[String])
+  /** The one renderer of action lines, for commit and checkpoint bodies
+    * alike. The 13 line kinds, in the order a body carries them:
+    * {{{
+    *   {"cpv":2}                                           checkpoint header
+    *   {"cts":<millis>}                                    commit timestamp
+    *   {"meta":{"schemaB64":"<b64>"}}                      schema JSON
+    *   {"txn":{"app":"<app>","version":<n>}}               writer watermark
+    *   {"remove":"<file>"}
+    *   {"constraintrm":"<name>"}
+    *   {"constraint":{"name":"<name>","exprB64":"<b64>"}}  CHECK predicate
+    *   {"gencolrm":"<name>"}
+    *   {"gencol":{"name":"<name>","exprB64":"<b64>"}}      generation expr
+    *   {"dvrm":"<file>"}                                   clear file's DV
+    *   {"dv":{"path":"<dv file>","target":"<file>"}}       attach a DV
+    *   {"add":"<file>"}
+    *   {"add":{"path":"<file>","statsB64":"<b64>"}}        add + column stats
+    * }}}
+    * A checkpoint's `cts` is the running max over the versions it
+    * folds, and it carries no remove or clear lines. Names go in
+    * unescaped ([[requireSafeName]], `[A-Za-z0-9_]+`) and every payload
+    * is base64, so one line pattern per kind is the whole grammar
+    * ([[decode]]). */
+  private def encode(c: Commit): Seq[String] =
+    c.ctsMillis.map(ms => s"""{"cts":$ms}""").toSeq ++
+      c.meta.map(b64 => s"""{"meta":{"schemaB64":"$b64"}}""") ++
+      c.txns.map { case (app, v) => s"""{"txn":{"app":"$app","version":$v}}""" } ++
+      c.removes.map(f => s"""{"remove":"$f"}""") ++
+      c.constraintRms.map(n => s"""{"constraintrm":"$n"}""") ++
+      c.constraints.map { case (n, b64) =>
+        s"""{"constraint":{"name":"$n","exprB64":"$b64"}}""" } ++
+      c.gencolRms.map(n => s"""{"gencolrm":"$n"}""") ++
+      c.gencols.map { case (n, b64) => s"""{"gencol":{"name":"$n","exprB64":"$b64"}}""" } ++
+      c.dvRms.map(t => s"""{"dvrm":"$t"}""") ++
+      c.dvs.map { case (p, t) => s"""{"dv":{"path":"$p","target":"$t"}}""" } ++
+      c.adds.map(f => c.addStats.get(f) match {
+        case Some(b64) => s"""{"add":{"path":"$f","statsB64":"$b64"}}"""
+        case None => s"""{"add":"$f"}"""
+      })
 
-  /** Parse one commit's lines, FAILING LOUDLY on anything that matches
-    * no action pattern — a malformed or future-extended line must
-    * not yield a silently wrong snapshot (the commits() contract). Blank
-    * trailing lines are tolerated (every writer ends the file with \n). */
-  private def parseActions(lines: Iterable[String], where: Path): Actions = {
-    val adds = Vector.newBuilder[String]
-    val removes = Vector.newBuilder[String]
-    val txns = Vector.newBuilder[(String, Long)]
-    val stats = Map.newBuilder[String, String]
-    val dvs = Vector.newBuilder[(String, String)]
-    val dvRms = Vector.newBuilder[String]
-    val constraints = Vector.newBuilder[(String, String)]
-    val constraintRms = Vector.newBuilder[String]
-    val gencols = Vector.newBuilder[(String, String)]
-    val gencolRms = Vector.newBuilder[String]
-    var meta: Option[String] = None
-    var cts: Option[Long] = None
-    lines.foreach {
-      case AddRe(f) => adds += f
-      case AddStatsRe(f, b64) => adds += f; stats += (f -> b64)
-      case RemoveRe(f) => removes += f
-      case TxnRe(app, v) => txns += (app -> v.toLong)
-      case MetaRe(b64) => meta = Some(b64)
-      case CtsRe(ms) => cts = Some(ms.toLong)
-      case DvRe(p, t) => dvs += (p -> t)
-      case DvRmRe(t) => dvRms += t
-      case ConstraintRe(n, b64) => constraints += (n -> b64)
-      case ConstraintRmRe(n) => constraintRms += n
-      case GencolRe(n, b64) => gencols += (n -> b64)
-      case GencolRmRe(n) => gencolRms += n
-      case l if l.trim.isEmpty => ()
-      case l => throw new IllegalStateException(
+  /** Parse one body's lines into `version`'s actions, FAILING LOUDLY on
+    * anything that matches no action pattern — a malformed or
+    * future-extended line must not yield a silently wrong snapshot (the
+    * commits() contract). Blank lines are tolerated (every writer ends
+    * the file with \n). */
+  private def decode(version: Long, lines: Iterable[String], where: Path): Commit =
+    lines.foldLeft(Commit(version, Vector.empty, Vector.empty)) {
+      case (c, CtsRe(ms)) => c.copy(ctsMillis = Some(ms.toLong))
+      case (c, MetaRe(b64)) => c.copy(meta = Some(b64))
+      case (c, TxnRe(app, v)) => c.copy(txns = c.txns :+ (app -> v.toLong))
+      case (c, RemoveRe(f)) => c.copy(removes = c.removes :+ f)
+      case (c, ConstraintRmRe(n)) => c.copy(constraintRms = c.constraintRms :+ n)
+      case (c, ConstraintRe(n, b64)) => c.copy(constraints = c.constraints :+ (n -> b64))
+      case (c, GencolRmRe(n)) => c.copy(gencolRms = c.gencolRms :+ n)
+      case (c, GencolRe(n, b64)) => c.copy(gencols = c.gencols :+ (n -> b64))
+      case (c, DvRmRe(t)) => c.copy(dvRms = c.dvRms :+ t)
+      case (c, DvRe(p, t)) => c.copy(dvs = c.dvs :+ (p -> t))
+      case (c, AddRe(f)) => c.copy(adds = c.adds :+ f)
+      case (c, AddStatsRe(f, b64)) =>
+        c.copy(adds = c.adds :+ f, addStats = c.addStats + (f -> b64))
+      case (c, l) if l.trim.isEmpty => c
+      case (_, l) => throw new IllegalStateException(
         s"unparseable action line in $where: '$l'")
     }
-    Actions(adds.result(), removes.result(), txns.result(), meta,
-      stats.result(), cts, dvs.result(), dvRms.result(),
-      constraints.result(), constraintRms.result(),
-      gencols.result(), gencolRms.result())
-  }
+
+  /** A checkpoint body: the `cpv` header, then the snapshot's actions. */
+  private def encodeCheckpoint(s: Snapshot): Seq[String] =
+    s"""{"cpv":$CheckpointFormatVersion}""" +: encode(s.asCommit)
+
+  /** A checkpoint body back to its actions; None for a legacy
+    * checkpoint (no `cpv` header). A checkpoint holds folded state, so a
+    * remove or clear line in one is corruption. */
+  private def decodeCheckpoint(v: Long, lines: Seq[String], where: Path): Option[Commit] =
+    if (!lines.exists(CpvRe.matches)) None
+    else {
+      val c = decode(v, lines.filterNot(CpvRe.matches), where)
+      require(c.removes.isEmpty, s"checkpoint $where contains removes")
+      require(c.dvRms.isEmpty, s"checkpoint $where contains dv clears")
+      require(c.constraintRms.isEmpty, s"checkpoint $where contains constraint drops")
+      require(c.gencolRms.isEmpty, s"checkpoint $where contains gencol drops")
+      Some(c)
+    }
 
   /** Data-file names are embedded in JSON string literals without
     * escaping; [[stage]] generates uuid-part-NNNNN names so this never
@@ -163,6 +215,54 @@ object CommitLog {
   private def requireSafeName(f: String): Unit =
     require(!f.exists(c => c == '"' || c == '\\' || c < ' '),
       s"data file name contains a JSON-breaking character: '$f'")
+
+  // ------------------------------------------------- the snapshot fold
+
+  /** Table state folded over commits 0..version: live files in
+    * first-added order with their stats payload, live deletion vectors
+    * (target → dv file), per-app txn watermarks (max per app —
+    * [[appendIdempotent]] requires per-app monotonicity, so max =
+    * latest), the newest schema meta, live CHECK constraints and
+    * generated columns (name → base64 SQL), and the running max of the
+    * commit timestamps (−1 before any). A v2 checkpoint is this value,
+    * encoded. */
+  private case class Snapshot(version: Long = -1L,
+                              files: VectorMap[String, Option[String]] = VectorMap.empty,
+                              dvs: VectorMap[String, String] = VectorMap.empty,
+                              txns: VectorMap[String, Long] = VectorMap.empty,
+                              meta: Option[String] = None,
+                              constraints: VectorMap[String, String] = VectorMap.empty,
+                              gencols: VectorMap[String, String] = VectorMap.empty,
+                              ctsMax: Long = -1L) {
+    def live: Vector[String] = files.keys.toVector
+    def schema: Option[StructType] = meta.map(decodeSchema)
+    def asCommit: Commit = Commit(version, live, Vector.empty,
+      txns.toVector, meta, files.collect { case (f, Some(st)) => f -> st },
+      Some(ctsMax).filter(_ >= 0), dvs.toVector.map(_.swap),
+      constraints = constraints.toVector, gencols = gencols.toVector)
+  }
+
+  /** Apply one commit: removes, then adds (both clear the file's DV),
+    * then DV attachments (the newest per target wins), then DV clears. */
+  private def fold(s: Snapshot, c: Commit): Snapshot = Snapshot(c.version,
+    files = c.adds.foldLeft(s.files -- c.removes)((m, f) => m.updated(f, c.addStats.get(f))),
+    dvs = s.dvs -- c.removes -- c.adds ++ c.dvs.map(_.swap) -- c.dvRms,
+    txns = c.txns.foldLeft(s.txns) { case (m, (app, tv)) =>
+      m.updated(app, math.max(m.getOrElse(app, -1L), tv)) },
+    meta = c.meta.orElse(s.meta),
+    constraints = s.constraints ++ c.constraints -- c.constraintRms,
+    gencols = s.gencols ++ c.gencols -- c.gencolRms,
+    ctsMax = c.ctsMillis.fold(s.ctsMax)(math.max(s.ctsMax, _)))
+
+  /** The folded state at `asOf` (empty below version 0): starts at the
+    * newest checkpoint ≤ asOf when that one is complete (v2), at
+    * genesis otherwise, and replays only the commit suffix —
+    * O(suffix) log reads. */
+  private def snapshot(table: String, asOf: Long): Snapshot = {
+    val start = latestCheckpoint(table, asOf).flatMap(readCheckpoint(table, _))
+      .fold(Snapshot())(fold(Snapshot(), _))
+    ((start.version + 1) to asOf).foldLeft(start)((s, v) => fold(s, commits0(table, v)))
+  }
 
   /** Latest committed version, -1 for a table with no commits. */
   def latestVersion(table: String): Long = {
@@ -181,6 +281,11 @@ object CommitLog {
     * table → fail loudly. */
   def commits(table: String, asOf: Long): Seq[Commit] =
     (0L to asOf).map(commits0(table, _))
+
+  private def commits0(table: String, v: Long): Commit = {
+    val f = commitFile(table, v)
+    decode(v, Files.readAllLines(f).asScala, f)
+  }
 
   /** The version whose commit carries the txn action (appId,
     * txnVersion), walking BACKWARD one commit file per step — O(head)
@@ -209,6 +314,17 @@ object CommitLog {
     None
   }
 
+  /** Write `lines` to a fresh temp file in the log directory and hand it
+    * to `publish`, which moves or links it into place. The temp name
+    * never ends in `.json`, so no reader ever lists a partial body, and
+    * it is gone afterwards either way. */
+  private def viaTemp[A](table: String, lines: Seq[String])(publish: Path => A): A = {
+    val tmp = logDir(table).resolve(s".tmp_${java.util.UUID.randomUUID()}")
+    Files.write(tmp, lines.mkString("", "\n", "\n").getBytes("UTF-8"),
+      StandardOpenOption.CREATE_NEW)
+    try publish(tmp) finally Files.deleteIfExists(tmp)
+  }
+
   // ------------------------------------------------- log checkpointing
 
   private def checkpointFile(table: String, v: Long): Path =
@@ -230,180 +346,52 @@ object CommitLog {
     }
   }
 
-  /** Checkpoint format version. v2 (round 14) checkpoints are COMPLETE:
-    * they fold live files AND the per-app txn watermark map AND the
-    * schema metadata as of their version (the Delta checkpoint design —
-    * its checkpoints carry txn and metaData actions, public), marked
-    * with a `{"cpv":2}` header line. [[txnLatest]] and [[schemaAt]] can
-    * therefore STOP at a complete checkpoint: absence of a txn/meta
-    * entry there means none exists at or below it. A checkpoint file
-    * WITHOUT the header is a legacy adds-only snapshot — file state may
-    * be trusted, but txn/schema walks must fall through past it (the
-    * old full-scan cost, never a wrong answer). */
-  val CheckpointFormatVersion = 2
-
-  private val CpvRe = """\{"cpv":(\d+)\}""".r
-
-  /** Parsed checkpoint state; `complete` = carries the v2 header;
-    * `ctsMax` the MONOTONIZED commit-timestamp running max folded over
-    * 0..cp (round 16 — lets [[versionAtTimestamp]] start at the
-    * checkpoint instead of walking to genesis; a legacy checkpoint
-    * without the line reads None and the walk falls through, old cost,
-    * never wrong). */
-  private case class Cp(adds: Vector[String], txns: Vector[(String, Long)],
-                        meta: Option[String], complete: Boolean,
-                        addStats: Map[String, String],
-                        ctsMax: Option[Long],
-                        dvs: Vector[(String, String)],
-                        constraints: Vector[(String, String)],
-                        gencols: Vector[(String, String)])
-
-  private def readCheckpoint(table: String, v: Long): Cp = {
+  private def readCheckpoint(table: String, v: Long): Option[Commit] = {
     val f = checkpointFile(table, v)
-    val lines = Files.readAllLines(f).asScala.toVector
-    val complete = lines.exists(CpvRe.matches)
-    val a = parseActions(lines.filterNot(CpvRe.matches), f)
-    require(a.removes.isEmpty, s"checkpoint $f contains removes")
-    require(a.dvRms.isEmpty, s"checkpoint $f contains dv clears")
-    require(a.constraintRms.isEmpty, s"checkpoint $f contains constraint drops")
-    require(a.gencolRms.isEmpty, s"checkpoint $f contains gencol drops")
-    Cp(a.adds, a.txns, a.meta, complete, a.addStats, a.ctsMillis, a.dvs,
-      a.constraints, a.gencols)
+    decodeCheckpoint(v, Files.readAllLines(f).asScala.toSeq, f)
   }
 
   /** Write a checkpoint of the folded state AT `version` — the log-
     * compaction growth path: after N commits, replaying N JSON files per
-    * read is the bottleneck, so a checkpoint materializes the folded
-    * state and readers replay only the suffix (the Delta `_checkpoint`
-    * design). Folds all three state kinds (see
-    * [[CheckpointFormatVersion]]): live files, per-app txn watermarks
-    * (max per app — [[appendIdempotent]] requires per-app monotonicity,
-    * so max = latest), and the newest schema action — making
-    * [[txnLatest]] and [[schemaAt]] O(suffix) from any checkpoint, so a
-    * long-running idempotent sink is O(1) per batch once anyone
-    * checkpoints. Safe to write at any time by anyone — it duplicates
-    * derivable state, so a torn/competing checkpoint write can at worst
-    * be ignored; correctness never depends on it (tryCommit's
-    * CREATE_NEW stays the only coordination point). */
+    * read is the bottleneck, so a checkpoint materializes the
+    * [[Snapshot]] and readers replay only the suffix (the Delta
+    * `_checkpoint` design). Everything the snapshot holds folds through —
+    * live files with their stats (round 15, so data skipping survives
+    * log compaction), txn watermarks (so a long-running idempotent sink
+    * is O(1) per batch once anyone checkpoints), the schema, the cts
+    * running max (round 16 — TIMESTAMP AS OF is a left fold too), DVs
+    * (round 16 — a checkpointed table must not resurrect merge-on-read
+    * deletes) and constraints and generated columns (round 17 —
+    * enforcement must survive log compaction). Safe to write at any time
+    * by anyone — it duplicates derivable state, so a torn/competing
+    * checkpoint write can at worst be ignored; correctness never depends
+    * on it (tryCommit's link stays the only coordination point). */
   def checkpoint(table: String, version: Long = -1L): Long = {
     val v = if (version >= 0) version else latestVersion(table)
     require(v >= 0, s"commit-log table $table has no commits")
-    val live = scala.collection.mutable.LinkedHashSet.empty[String]
-    val txns = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    val stats = scala.collection.mutable.Map.empty[String, String]
-    val dvs = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val cons = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val gens = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    var meta: Option[String] = None
-    var ctsMax = -1L
-    commits(table, v).foreach { c =>
-      c.removes.foreach { f => live.remove(f); stats.remove(f); dvs.remove(f) }
-      c.adds.foreach { f => live.add(f); dvs.remove(f) }
-      stats ++= c.addStats
-      c.dvs.foreach { case (p, t) => dvs(t) = p }
-      c.dvRms.foreach(dvs.remove)
-      c.constraints.foreach { case (n, b64) => cons(n) = b64 }
-      c.constraintRms.foreach(cons.remove)
-      c.gencols.foreach { case (n, b64) => gens(n) = b64 }
-      c.gencolRms.foreach(gens.remove)
-      c.txns.foreach { case (app, tv) =>
-        txns(app) = math.max(txns.getOrElse(app, -1L), tv)
-      }
-      c.meta.foreach(m => meta = Some(m))
-      ctsMax = math.max(ctsMax, c.ctsMillis.getOrElse(ctsMax))
-    }
-    // per-file stats fold through checkpoints (round 15): a stats-carrying
-    // add keeps its object form, so data skipping survives log compaction;
-    // the cts running max folds too (round 16 — TIMESTAMP AS OF resolution
-    // is a left fold like the txn watermarks, so a checkpoint can answer
-    // for everything at or below it)
-    val body = (Seq(s"""{"cpv":$CheckpointFormatVersion}""") ++
-      (if (ctsMax >= 0) Seq(s"""{"cts":$ctsMax}""") else Nil) ++
-      meta.map(b64 => s"""{"meta":{"schemaB64":"$b64"}}""").toSeq ++
-      txns.map { case (app, tv) => s"""{"txn":{"app":"$app","version":$tv}}""" } ++
-      // live CHECK constraints fold through (round 17) — enforcement
-      // must survive log compaction like every other table invariant
-      cons.map { case (n, b64) =>
-        s"""{"constraint":{"name":"$n","exprB64":"$b64"}}""" } ++
-      // live generated-column definitions fold through (round 17)
-      gens.map { case (n, b64) =>
-        s"""{"gencol":{"name":"$n","exprB64":"$b64"}}""" } ++
-      // live deletion-vector attachments fold through too (round 16) —
-      // a checkpointed table must not resurrect merge-on-read deletes
-      dvs.map { case (t, p) => s"""{"dv":{"path":"$p","target":"$t"}}""" } ++
-      live.toVector.map(f => stats.get(f) match {
-        case Some(b64) => s"""{"add":{"path":"$f","statsB64":"$b64"}}"""
-        case None => s"""{"add":"$f"}"""
-      }))
-      .mkString("", "\n", "\n")
-    val tmp = logDir(table).resolve(s".cp_tmp_${java.util.UUID.randomUUID().toString.take(8)}")
-    Files.write(tmp, body.getBytes("UTF-8"))
-    Files.move(tmp, checkpointFile(table, v),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    viaTemp(table, encodeCheckpoint(snapshot(table, v)))(tmp =>
+      Files.move(tmp, checkpointFile(table, v),
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING))
     v
   }
 
-  /** Data files live at version asOf, in first-added order. Starts from
-    * the newest checkpoint ≤ asOf when one exists and replays only the
-    * commit suffix — O(suffix), not O(asOf). */
+  /** Data files live at version asOf, in first-added order — O(suffix)
+    * past the newest checkpoint ([[snapshot]]). */
   def liveFiles(table: String, asOf: Long): Seq[String] =
-    liveAdds(table, asOf).map(_._1)
+    snapshot(table, asOf).live
 
   /** Live (file, statsB64) pairs at version asOf — the data-skipping
-    * read's input ([[readWhere]]). Same checkpoint-suffix economics as
-    * [[liveFiles]] (stats fold through v2 checkpoints); a file whose add
-    * carried no stats maps to None and is never pruned. */
-  def liveAdds(table: String, asOf: Long): Seq[(String, Option[String])] = {
-    val live = scala.collection.mutable.LinkedHashMap.empty[String, Option[String]]
-    def fold(adds: Seq[String], removes: Seq[String],
-             stats: Map[String, String]): Unit = {
-      removes.foreach(live.remove)
-      adds.foreach(f => live(f) = stats.get(f))
-    }
-    latestCheckpoint(table, asOf) match {
-      case None =>
-        commits(table, asOf).foreach(c => fold(c.adds, c.removes, c.addStats))
-      case Some(cp) =>
-        val s = readCheckpoint(table, cp)
-        fold(s.adds, Nil, s.addStats)
-        ((cp + 1) to asOf).foreach { v =>
-          val c = commits0(table, v)
-          fold(c.adds, c.removes, c.addStats)
-        }
-    }
-    live.toVector
-  }
+    * read's input ([[readWhere]]); a file whose add carried no stats
+    * maps to None and is never pruned. */
+  def liveAdds(table: String, asOf: Long): Seq[(String, Option[String])] =
+    snapshot(table, asOf).files.toVector
 
   /** Live deletion-vector attachments at `asOf`: data file → its
     * CURRENT dv file (the newest dv action wins; a remove/re-add/dvrm
-    * of the target clears it). Same checkpoint-suffix economics as
-    * [[liveAdds]] — dv actions fold through v2 checkpoints. */
-  def liveDvs(table: String, asOf: Long): Map[String, String] = {
-    val dvs = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def fold(c: Commit): Unit = {
-      c.removes.foreach(dvs.remove)
-      c.adds.foreach(dvs.remove)
-      c.dvs.foreach { case (p, t) => dvs(t) = p }
-      c.dvRms.foreach(dvs.remove)
-    }
-    latestCheckpoint(table, asOf) match {
-      case None =>
-        commits(table, asOf).foreach(fold)
-      case Some(cp) =>
-        val s = readCheckpoint(table, cp)
-        s.dvs.foreach { case (p, t) => dvs(t) = p }
-        ((cp + 1) to asOf).foreach(v => fold(commits0(table, v)))
-    }
-    dvs.toMap
-  }
-
-  private def commits0(table: String, v: Long): Commit = {
-    val f = commitFile(table, v)
-    val a = parseActions(Files.readAllLines(f).asScala, f)
-    Commit(v, a.adds, a.removes, a.txns, a.meta, a.addStats, a.ctsMillis,
-      a.dvs, a.dvRms, a.constraints, a.constraintRms, a.gencols, a.gencolRms)
-  }
+    * of the target clears it). */
+  def liveDvs(table: String, asOf: Long): Map[String, String] =
+    snapshot(table, asOf).dvs.toMap
 
   // ------------------------------------------------- schema evolution
 
@@ -449,15 +437,36 @@ object CommitLog {
     }
     val b64 = java.util.Base64.getEncoder
       .encodeToString(schema.json.getBytes("UTF-8"))
+    commitNext(table, "evolveSchema", maxRetries)(
+      tryCommit(table, _, Nil, Nil, meta = Some(b64)))._1
+  }
+
+  /** Blind retry: commit at the first free version past the head, moving
+    * on after each lost race. Returns the version and the races lost. */
+  private def commitNext(table: String, verb: String, maxRetries: Int)
+                        (commitAt: Long => Boolean): (Long, Int) = {
     var v = latestVersion(table) + 1
     var tries = 0
-    while (!tryCommit(table, v, Nil, Nil, meta = Some(b64))) {
+    while (!commitAt(v)) {
       tries += 1
-      require(tries <= maxRetries,
-        s"evolveSchema lost $maxRetries commit races on $table")
+      require(tries <= maxRetries, s"$verb lost $maxRetries commit races on $table")
       v = math.max(v + 1, latestVersion(table) + 1)
     }
-    v
+    (v, tries)
+  }
+
+  /** Serializable commit: at exactly `v`, or the [[Conflict]]. */
+  private def commitExactly(table: String, v: Long)
+                           (commitAt: Long => Boolean): Either[Conflict, Long] =
+    if (commitAt(v)) Right(v) else Left(Conflict(v, latestVersion(table)))
+
+  /** `res`, after deleting the `staged` files when it lost the race — no
+    * commit references them, so retry loops would leak them (vacuum's
+    * orphan sweep is the backstop for a writer that crashes first). */
+  private def cleaningUp(table: String, staged: Seq[String])
+                        (res: Either[Conflict, Long]): Either[Conflict, Long] = {
+    if (res.isLeft) staged.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
+    res
   }
 
   private def decodeSchema(b64: String): org.apache.spark.sql.types.StructType = {
@@ -467,32 +476,12 @@ object CommitLog {
   }
 
   /** The table's schema AS OF a version: the newest metadata action at
-    * or below it (backward scan, stops at the first hit — the
-    * [[txnLatest]] walk — OR at the newest COMPLETE checkpoint, whose
-    * folded meta answers for everything at or below it; r13 advice: a
-    * never-evolved table's read used to re-scan every commit back to 0
-    * on every snapshot read even when a checkpoint bounded the file
-    * fold). None = no evolution ever committed; readers then take the
-    * parquet footers' word as before. */
+    * or below it, O(suffix) past the newest checkpoint ([[snapshot]]).
+    * None = no evolution ever committed; readers then take the parquet
+    * footers' word as before. */
   def schemaAt(table: String, asOf: Long = -2L)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    val vMax = if (asOf == -2L) latestVersion(table) else asOf
-    val cp = latestCheckpoint(table, vMax)
-      .map(c => c -> readCheckpoint(table, c))
-    val floor = cp match {
-      case Some((c, s)) if s.complete => c // checkpoint answers ≤ c
-      case _ => -1L                        // legacy/none: walk to genesis
-    }
-    var v = vMax
-    while (v > floor) {
-      commits0(table, v).meta match {
-        case Some(b64) => return Some(decodeSchema(b64))
-        case None => v -= 1
-      }
-    }
-    cp.collect { case (c, s) if s.complete && c <= vMax => s.meta }
-      .flatten.map(decodeSchema)
-  }
+      : Option[org.apache.spark.sql.types.StructType] =
+    snapshot(table, if (asOf == -2L) latestVersion(table) else asOf).schema
 
   /** Snapshot-isolated read. `asOf = None` pins the latest version AT
     * CALL TIME — the returned frame never sees later commits. When the
@@ -503,7 +492,8 @@ object CommitLog {
   def read(spark: SparkSession, table: String, asOf: Option[Long] = None): DataFrame = {
     val v = asOf.getOrElse(latestVersion(table))
     require(v >= 0, s"commit-log table $table has no commits")
-    readAt(spark, table, v, schemaAt(table, v))
+    val s = snapshot(table, v)
+    readAt(spark, table, s, s.schema)
   }
 
   /** TIMESTAMP AS OF resolution (round 15 — the r14 verdict's #3 order):
@@ -533,9 +523,7 @@ object CommitLog {
     val head = latestVersion(table)
     require(head >= 0, s"commit-log table $table has no commits")
     val cp = latestCheckpoint(table, head)
-      .map(c => c -> readCheckpoint(table, c))
-      .collect { case (c, s) if s.complete && s.ctsMax.isDefined =>
-        (c, s.ctsMax.get) }
+      .flatMap(c => readCheckpoint(table, c).flatMap(_.ctsMillis).map(c -> _))
     var mono = -1L
     var resolved = -1L
     val start = cp match {
@@ -569,17 +557,22 @@ object CommitLog {
                       tsMillis: Long): DataFrame =
     read(spark, table, Some(versionAtTimestamp(table, tsMillis)))
 
-  private def readAt(spark: SparkSession, table: String, v: Long,
-                     schema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
-    val files = liveFiles(table, v).map(f => Paths.get(table, f).toString)
-    val base = (files.isEmpty, schema) match {
-      case (true, Some(s)) =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
+  /** `s`'s live files read under `schema`, deletion vectors applied. */
+  private def readAt(spark: SparkSession, table: String, s: Snapshot,
+                     schema: Option[StructType]): DataFrame =
+    applyDvs(spark, table, frame(spark, table, s.live, schema), s.dvs)
+
+  /** A frame over the table's data `files` under `schema` (else the
+    * parquet footers'); no files gives an empty frame of that schema. */
+  private def frame(spark: SparkSession, table: String, files: Seq[String],
+                    schema: Option[StructType]): DataFrame = {
+    val paths = files.map(f => Paths.get(table, f).toString)
+    (paths.isEmpty, schema) match {
+      case (true, Some(s)) => spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
       case (true, None) => spark.emptyDataFrame
-      case (false, Some(s)) => spark.read.schema(s).parquet(files: _*)
-      case (false, None) => spark.read.parquet(files: _*)
+      case (false, Some(s)) => spark.read.schema(s).parquet(paths: _*)
+      case (false, None) => spark.read.parquet(paths: _*)
     }
-    applyDvs(spark, table, base, liveDvs(table, v))
   }
 
   private def baseName(f: String): String =
@@ -885,9 +878,14 @@ object CommitLog {
                       asOf: Option[Long] = None): Seq[String] = {
     val v = asOf.getOrElse(latestVersion(table))
     require(v >= 0, s"commit-log table $table has no commits")
-    val adds = liveAdds(table, v)
+    pruned(spark, table, snapshot(table, v), cond)
+  }
+
+  private def pruned(spark: SparkSession, table: String, s: Snapshot,
+                     cond: Column): Seq[String] = {
+    val adds = s.files.toVector
     if (adds.isEmpty) return Nil
-    val schema = schemaAt(table, v).getOrElse(
+    val schema = s.schema.getOrElse(
       spark.read.parquet(Paths.get(table, adds.head._1).toString).schema)
     val eligible = schema.fields.filter(statsEligible).map(_.name).toSet
     val condE = resolvedPredicate(spark, schema, cond)
@@ -896,7 +894,7 @@ object CommitLog {
     val dec = java.util.Base64.getDecoder
     import spark.implicits._
     val rows = adds.map { case (f, st) =>
-      (f, st.map(s => new String(dec.decode(s), "UTF-8")).orNull)
+      (f, st.map(b64 => new String(dec.decode(b64), "UTF-8")).orNull)
     }
     rows.toDF("file", "js")
       .withColumn("st", from_json(col("js"), statsStruct(schema)))
@@ -949,54 +947,37 @@ object CommitLog {
                  asOf: Option[Long] = None): DataFrame = {
     val v = asOf.getOrElse(latestVersion(table))
     require(v >= 0, s"commit-log table $table has no commits")
-    val schema = schemaAt(table, v)
-    val kept = prunedLiveFiles(spark, table, cond, Some(v))
-    val files = kept.map(f => Paths.get(table, f).toString)
-    val base = (files.isEmpty, schema) match {
-      case (true, Some(s)) =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
+    val s = snapshot(table, v)
+    val kept = pruned(spark, table, s, cond)
+    val base = (kept.isEmpty, s.schema) match {
       case (true, None) =>
         // every file pruned on a footer-schema table: serve the schema
         // from one live footer, zero rows (limit 0 reads no row groups)
-        liveFiles(table, v).headOption match {
+        s.live.headOption match {
           case Some(f) =>
             spark.read.parquet(Paths.get(table, f).toString).limit(0)
           case None => spark.emptyDataFrame
         }
-      case (false, Some(s)) => spark.read.schema(s).parquet(files: _*)
-      case (false, None) => spark.read.parquet(files: _*)
+      case _ => frame(spark, table, kept, s.schema)
     }
     // a DV'd file's stats describe a SUPERSET of its live rows (min/max
     // over pre-delete content) — pruning stays sound, merely less tight
     if (base.columns.isEmpty) base
-    else applyDvs(spark, table, base, liveDvs(table, v))
+    else applyDvs(spark, table, base, s.dvs)
   }
 
   // ------------------------------------------------ CHECK constraints
 
   /** Live CHECK constraints at `asOf`: name → SQL predicate text
     * (round 17 — Delta's public constraints surface, the enforcement
-    * half of the expectations_report advisor). Folds add/drop actions
-    * with the same checkpoint-suffix economics as [[liveDvs]]. */
-  def constraintsAt(table: String, asOf: Long = -2L): Map[String, String] = {
-    val v = if (asOf == -2L) latestVersion(table) else asOf
-    if (v < 0) return Map.empty
-    val cons = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def fold(c: Commit): Unit = {
-      c.constraints.foreach { case (n, b64) => cons(n) = b64 }
-      c.constraintRms.foreach(cons.remove)
-    }
-    latestCheckpoint(table, v) match {
-      case None => commits(table, v).foreach(fold)
-      case Some(cp) =>
-        val s = readCheckpoint(table, cp)
-        s.constraints.foreach { case (n, b64) => cons(n) = b64 }
-        ((cp + 1) to v).foreach(u => fold(commits0(table, u)))
-    }
-    cons.map { case (n, b64) =>
+    * half of the expectations_report advisor). */
+  def constraintsAt(table: String, asOf: Long = -2L): Map[String, String] =
+    decodedSql(snapshot(table, if (asOf == -2L) latestVersion(table) else asOf).constraints)
+
+  private def decodedSql(byName: VectorMap[String, String]): Map[String, String] =
+    byName.map { case (n, b64) =>
       n -> new String(java.util.Base64.getDecoder.decode(b64), "UTF-8")
     }.toMap
-  }
 
   /** Enforce the table's live CHECK constraints on rows about to land
     * (the write-side half — Delta validates staged rows the same way).
@@ -1066,9 +1047,7 @@ object CommitLog {
     }
     val b64 = java.util.Base64.getEncoder
       .encodeToString(exprSql.getBytes("UTF-8"))
-    if (tryCommit(table, head + 1, Nil, Nil, constraints = Seq(name -> b64)))
-      Right(head + 1)
-    else Left(Conflict(head + 1, latestVersion(table)))
+    commitExactly(table, head + 1)(tryCommit(table, _, Nil, Nil, constraints = Seq(name -> b64)))
   }
 
   /** DROP CONSTRAINT — a metadata action; fails loudly on an unknown
@@ -1079,9 +1058,7 @@ object CommitLog {
     require(head >= 0, s"commit-log table $table has no commits")
     require(constraintsAt(table, head).contains(name),
       s"no constraint '$name' on $table")
-    if (tryCommit(table, head + 1, Nil, Nil, constraintRms = Seq(name)))
-      Right(head + 1)
-    else Left(Conflict(head + 1, latestVersion(table)))
+    commitExactly(table, head + 1)(tryCommit(table, _, Nil, Nil, constraintRms = Seq(name)))
   }
 
   // ------------------------------------------------ generated columns
@@ -1089,25 +1066,8 @@ object CommitLog {
   /** Live generated-column definitions at `asOf`: column → SQL
     * expression text (round 17 — Delta's public generated-columns
     * surface; same metadata fold as [[constraintsAt]]). */
-  def generatedAt(table: String, asOf: Long = -2L): Map[String, String] = {
-    val v = if (asOf == -2L) latestVersion(table) else asOf
-    if (v < 0) return Map.empty
-    val gens = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def fold(c: Commit): Unit = {
-      c.gencols.foreach { case (n, b64) => gens(n) = b64 }
-      c.gencolRms.foreach(gens.remove)
-    }
-    latestCheckpoint(table, v) match {
-      case None => commits(table, v).foreach(fold)
-      case Some(cp) =>
-        val s = readCheckpoint(table, cp)
-        s.gencols.foreach { case (n, b64) => gens(n) = b64 }
-        ((cp + 1) to v).foreach(u => fold(commits0(table, u)))
-    }
-    gens.map { case (n, b64) =>
-      n -> new String(java.util.Base64.getDecoder.decode(b64), "UTF-8")
-    }.toMap
-  }
+  def generatedAt(table: String, asOf: Long = -2L): Map[String, String] =
+    decodedSql(snapshot(table, if (asOf == -2L) latestVersion(table) else asOf).gencols)
 
   /** The write-side half of generated columns: a frame LACKING a
     * generated column gets it MATERIALIZED from the expression (the
@@ -1181,9 +1141,7 @@ object CommitLog {
     }
     val b64 = java.util.Base64.getEncoder
       .encodeToString(exprSql.getBytes("UTF-8"))
-    if (tryCommit(table, head + 1, Nil, Nil, gencols = Seq(name -> b64)))
-      Right(head + 1)
-    else Left(Conflict(head + 1, latestVersion(table)))
+    commitExactly(table, head + 1)(tryCommit(table, _, Nil, Nil, gencols = Seq(name -> b64)))
   }
 
   /** DROP a generated-column definition (metadata only — the column and
@@ -1194,19 +1152,20 @@ object CommitLog {
     require(head >= 0, s"commit-log table $table has no commits")
     require(generatedAt(table, head).contains(name),
       s"no generated column '$name' on $table")
-    if (tryCommit(table, head + 1, Nil, Nil, gencolRms = Seq(name)))
-      Right(head + 1)
-    else Left(Conflict(head + 1, latestVersion(table)))
+    commitExactly(table, head + 1)(tryCommit(table, _, Nil, Nil, gencolRms = Seq(name)))
   }
 
   /** Stage a frame's rows as immutable data files in the table directory
     * WITHOUT committing them — invisible to every reader until a commit
     * references them (the two-phase shape both [[append]] and
     * copy-on-write rewrites share). Returns the staged file names. */
-  def stage(table: String, df: DataFrame): Seq[String] = {
+  def stage(table: String, df: DataFrame): Seq[String] = stageAs(table, df, "part")
+
+  /** [[stage]] under the `<uuid8>-<kind>-NNNNN.parquet` name shape. */
+  private def stageAs(table: String, df: DataFrame, kind: String): Seq[String] = {
     Files.createDirectories(Paths.get(table))
     val prefix = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = Paths.get(table, s"_tmp_$prefix")
+    val tmp = Paths.get(table, s"_tmp_${kind}_$prefix")
     df.write.mode("overwrite").parquet(tmp.toString)
     val parts = {
       val s = Files.list(tmp)
@@ -1216,7 +1175,7 @@ object CommitLog {
       finally s.close()
     }
     val named = parts.zipWithIndex.map { case (p, i) =>
-      val name = f"$prefix-part-$i%05d.parquet"
+      val name = f"$prefix-$kind-$i%05d.parquet"
       Files.move(p, Paths.get(table, name))
       name
     }
@@ -1228,7 +1187,7 @@ object CommitLog {
   }
 
   /** Try to create commit `version` exactly — true iff THIS writer won
-    * the create-exclusive race for that version number. `txn` records an
+    * the put-if-absent race for that version number. `txn` records an
     * idempotent-writer watermark action alongside the file actions;
     * `addStats` per-file column stats riding the add actions (round 15);
     * `ctsMillis` overrides the commit timestamp action (tests/scripts —
@@ -1270,29 +1229,14 @@ object CommitLog {
     val cts = ctsMillis.getOrElse(System.currentTimeMillis())
     require(cts >= 0, s"commit timestamp must be >= 0, got $cts")
     Files.createDirectories(logDir(table))
-    val body = (Seq(s"""{"cts":$cts}""") ++
-      meta.map(b64 => s"""{"meta":{"schemaB64":"$b64"}}""").toSeq ++
-      txn.map { case (app, v) =>
-        s"""{"txn":{"app":"$app","version":$v}}""" }.toSeq ++
-      removes.map(f => s"""{"remove":"$f"}""") ++
-      constraintRms.map(n => s"""{"constraintrm":"$n"}""") ++
-      constraints.map { case (n, b64) =>
-        s"""{"constraint":{"name":"$n","exprB64":"$b64"}}""" } ++
-      gencolRms.map(n => s"""{"gencolrm":"$n"}""") ++
-      gencols.map { case (n, b64) =>
-        s"""{"gencol":{"name":"$n","exprB64":"$b64"}}""" } ++
-      dvRms.map(t => s"""{"dvrm":"$t"}""") ++
-      dvs.map { case (p, t) => s"""{"dv":{"path":"$p","target":"$t"}}""" } ++
-      adds.map(f => addStats.get(f) match {
-        case Some(b64) => s"""{"add":{"path":"$f","statsB64":"$b64"}}"""
-        case None => s"""{"add":"$f"}"""
-      })).mkString("", "\n", "\n")
-    try {
-      Files.write(commitFile(table, version), body.getBytes("UTF-8"),
-        StandardOpenOption.CREATE_NEW)
-      true
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException => false
+    val c = Commit(version, adds.toVector, removes.toVector, txn.toVector, meta,
+      addStats, Some(cts), dvs.toVector, dvRms.toVector, constraints.toVector,
+      constraintRms.toVector, gencols.toVector, gencolRms.toVector)
+    // publish the complete body with a hard link: put-if-absent, and a
+    // crash before it leaves only an unpublished temp file
+    viaTemp(table, encode(c)) { tmp =>
+      try { Files.createLink(commitFile(table, version), tmp); true }
+      catch { case _: java.nio.file.FileAlreadyExistsException => false }
     }
   }
 
@@ -1317,14 +1261,8 @@ object CommitLog {
     validateConstraints(spark, table, gdf, "append") // before anything stages
     val adds = stage(table, gdf)
     val stats = if (withStats) statsFor(spark, table, adds) else Map.empty[String, String]
-    var v = latestVersion(table) + 1
-    var tries = 0
-    while (!tryCommit(table, v, adds, Nil, addStats = stats, ctsMillis = ctsMillis)) {
-      tries += 1
-      require(tries <= maxRetries, s"append lost $maxRetries commit races on $table")
-      v = math.max(v + 1, latestVersion(table) + 1)
-    }
-    (v, tries)
+    commitNext(table, "append", maxRetries)(
+      tryCommit(table, _, adds, Nil, addStats = stats, ctsMillis = ctsMillis))
   }
 
   /** [[append]] with per-file column stats riding the add actions
@@ -1373,16 +1311,8 @@ object CommitLog {
     validateConstraints(spark, table, gdf, "append")
     val adds = stagePartitioned(table, gdf, partCols)
     val stats = statsFor(spark, table, adds)
-    var v = latestVersion(table) + 1
-    var tries = 0
-    while (!tryCommit(table, v, adds, Nil, addStats = stats,
-      ctsMillis = ctsMillis)) {
-      tries += 1
-      require(tries <= maxRetries,
-        s"appendPartitioned lost $maxRetries commit races on $table")
-      v = math.max(v + 1, latestVersion(table) + 1)
-    }
-    v
+    commitNext(table, "appendPartitioned", maxRetries)(
+      tryCommit(table, _, adds, Nil, addStats = stats, ctsMillis = ctsMillis))._1
   }
 
   /** [[stage]] through a `partitionBy` directory write: rows route to
@@ -1425,39 +1355,14 @@ object CommitLog {
   }
 
   /** Latest transaction version recorded for `appId` at or below table
-    * version `asOf` (−1 if none) — the idempotence watermark. Scans the
-    * log BACKWARD and stops at the FIRST commit carrying a txn for this
-    * appId ([[appendIdempotent]] requires per-app txnVersions to be
-    * monotone in commit order, so the newest txn commit holds the max)
-    * OR at the newest COMPLETE checkpoint, whose folded txn map answers
-    * for everything at or below it (round 14 — the Delta design the r12
-    * doc cited: txn actions fold into checkpoints, making the sink O(1)
-    * from any checkpoint instead of O(commits-since-last-write); an app
-    * that NEVER wrote no longer walks to genesis either). A legacy
-    * (pre-v2) checkpoint is walked past — old full-scan cost, never a
-    * wrong answer. */
-  def txnLatest(table: String, appId: String, asOf: Long = -2L): Long = {
-    val vMax = if (asOf == -2L) latestVersion(table) else asOf
-    val cp = latestCheckpoint(table, vMax)
-      .map(c => c -> readCheckpoint(table, c))
-    val floor = cp match {
-      case Some((c, s)) if s.complete => c
-      case _ => -1L
-    }
-    var v = vMax
-    while (v > floor) {
-      val hit = commits0(table, v).txns
-        .collect { case (app, tv) if app == appId => tv }
-      if (hit.nonEmpty) return hit.max
-      v -= 1
-    }
-    cp match {
-      case Some((_, s)) if s.complete =>
-        val hit = s.txns.collect { case (app, tv) if app == appId => tv }
-        if (hit.nonEmpty) hit.max else -1L
-      case _ => -1L
-    }
-  }
+    * version `asOf` (−1 if none) — the idempotence watermark, the max
+    * per app ([[appendIdempotent]] requires per-app txnVersions to be
+    * monotone in commit order, so the max is the newest). Txn actions
+    * fold into checkpoints (round 14 — the Delta design), so the sink is
+    * O(suffix) from any checkpoint instead of O(commits). */
+  def txnLatest(table: String, appId: String, asOf: Long = -2L): Long =
+    snapshot(table, if (asOf == -2L) latestVersion(table) else asOf)
+      .txns.getOrElse(appId, -1L)
 
   /** EXACTLY-ONCE append for a replayable writer (the idempotent
     * streaming-sink primitive, Delta's txnAppId/txnVersion design): the
@@ -1466,7 +1371,7 @@ object CommitLog {
     * (returns None). Unlike [[append]]'s blind retry, a lost race here
     * re-checks the watermark AS OF the new head before re-attempting at
     * exactly head+1 — the check and the commit are serialized by the
-    * same CREATE_NEW total order, so two concurrent deliveries of one
+    * same put-if-absent total order, so two concurrent deliveries of one
     * batch can never both land: whichever loses the version race
     * re-reads a head that already contains the winner's txn. Requires
     * txnVersion to be MONOTONE per appId (a streaming batchId is). */
@@ -1526,10 +1431,8 @@ object CommitLog {
                    addStats: Map[String, String] = Map.empty,
                    dvs: Seq[(String, String)] = Nil,
                    dvRms: Seq[String] = Nil): Either[Conflict, Long] = {
-    val v = readVersion + 1
-    if (tryCommit(table, v, adds, removes, addStats = addStats,
-      dvs = dvs, dvRms = dvRms)) Right(v)
-    else Left(Conflict(v, latestVersion(table)))
+    commitExactly(table, readVersion + 1)(
+      tryCommit(table, _, adds, removes, addStats = addStats, dvs = dvs, dvRms = dvRms))
   }
 
   /** DELETE WHERE through the log (round 14) — FILE-GRANULAR
@@ -1549,24 +1452,21 @@ object CommitLog {
                   cond: org.apache.spark.sql.Column): Either[Conflict, Long] = {
     val head = latestVersion(table)
     require(head >= 0, s"commit-log table $table has no commits")
-    val live = liveFiles(table, head)
+    val snap = snapshot(table, head)
+    val live = snap.live
     if (live.isEmpty) return Right(head)
-    val schema = schemaAt(table, head)
     // stats/partition cut on the MATCH SCAN (round 17): a file whose
     // committed stats exclude `cond` cannot contain a match — the
     // affected-file discovery reads only the possible candidates (on a
     // partitioned or clustered table, a selective DELETE scans its
     // partition, not the table; pruning is a necessary condition, so
     // the affected set is identical)
-    val candidates = prunedLiveFiles(spark, table, cond, Some(head))
+    val candidates = pruned(spark, table, snap, cond)
     if (candidates.isEmpty) return Right(head)
-    val paths = candidates.map(f => Paths.get(table, f).toString)
     // DV-applied scan (round 16): a copy-on-write rewrite of a file
     // carrying a deletion vector must not resurrect its DV'd rows
-    val tagged = applyDvs(spark, table, (schema match {
-      case Some(s) => spark.read.schema(s).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
-    }).withColumn("_graft_file", input_file_name()), liveDvs(table, head))
+    val tagged = applyDvs(spark, table, frame(spark, table, candidates, snap.schema)
+      .withColumn("_graft_file", input_file_name()), snap.dvs)
     val affectedPaths = tagged.filter(cond).select("_graft_file")
       .distinct().collect().map(_.getString(0)).toSet
     val affected = affectedOf(live, affectedPaths)
@@ -1576,9 +1476,7 @@ object CommitLog {
       .filter(!cond)
       .drop("_graft_file")
     val adds = stage(table, keep)
-    val res = replaceFiles(table, head, affected, adds)
-    if (res.isLeft) adds.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
-    res
+    cleaningUp(table, adds)(replaceFiles(table, head, affected, adds))
   }
 
   /** Stage a deletion-vector row set — (target basename, pos) — as
@@ -1586,29 +1484,8 @@ object CommitLog {
     * dv actions reference them (the [[stage]] two-phase shape; the
     * distinct name keeps [[orphanFiles]]' part-file sweep away from dv
     * sidecars). */
-  private def stageDv(table: String, df: DataFrame): Seq[String] = {
-    Files.createDirectories(Paths.get(table))
-    val prefix = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = Paths.get(table, s"_tmp_dv_$prefix")
-    df.write.mode("overwrite").parquet(tmp.toString)
-    val parts = {
-      val s = Files.list(tmp)
-      try s.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .toVector.sortBy(_.getFileName.toString)
-      finally s.close()
-    }
-    val named = parts.zipWithIndex.map { case (p, i) =>
-      val name = f"$prefix-dv-$i%05d.parquet"
-      Files.move(p, Paths.get(table, name))
-      name
-    }
-    val leftovers = Files.list(tmp)
-    try leftovers.iterator().asScala.foreach(Files.deleteIfExists(_))
-    finally leftovers.close()
-    Files.deleteIfExists(tmp)
-    named
-  }
+  private def stageDv(table: String, df: DataFrame): Seq[String] =
+    stageAs(table, df, "dv")
 
   /** DELETE WHERE as MERGE-ON-READ (round 16 — Delta's deletion-vector
     * design, public): instead of rewriting every file containing a
@@ -1639,24 +1516,20 @@ object CommitLog {
                     cond: org.apache.spark.sql.Column): Either[Conflict, Long] = {
     val head = latestVersion(table)
     require(head >= 0, s"commit-log table $table has no commits")
-    val live = liveFiles(table, head)
+    val snap = snapshot(table, head)
+    val live = snap.live
     if (live.isEmpty) return Right(head)
-    val schema = schemaAt(table, head)
     // stats/partition cut on the match scan (round 17, deleteWhere's
     // rationale): only possible-match files feed the position discovery
-    val candidates = prunedLiveFiles(spark, table, cond, Some(head))
+    val candidates = pruned(spark, table, snap, cond)
     if (candidates.isEmpty) return Right(head)
-    val paths = candidates.map(f => Paths.get(table, f).toString)
-    val base = schema match {
-      case Some(s) => spark.read.schema(s).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
-    }
+    val base = frame(spark, table, candidates, snap.schema)
     base.columns.filter(_.startsWith("_graft_")).foreach { c =>
       throw new IllegalArgumentException(
         s"deleteWhereDv: column '$c' on $table collides with the reserved " +
           "'_graft_' helper-column prefix")
     }
-    val dvs = liveDvs(table, head)
+    val dvs = snap.dvs
     val tagged = applyDvs(spark, table, base
       .withColumn("_graft_f", element_at(split(input_file_name(), "/"), -1))
       .withColumn("_graft_pos", col("_metadata.row_index")), dvs)
@@ -1686,13 +1559,8 @@ object CommitLog {
       .withColumn("f", element_at(split(input_file_name(), "/"), -1))
       .select("f", "target").distinct()
       .collect().map(r => (r.getString(0), r.getString(1)))
-    val res =
-      if (tryCommit(table, head + 1, Nil, Nil, dvs = mapping.toSeq))
-        Right(head + 1)
-      else Left(Conflict(head + 1, latestVersion(table)))
-    if (res.isLeft)
-      staged.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
-    res
+    cleaningUp(table, staged)(
+      commitExactly(table, head + 1)(tryCommit(table, _, Nil, Nil, dvs = mapping.toSeq)))
   }
 
   /** UPDATE WHERE ... SET as MERGE-ON-READ (round 17 — the r16
@@ -1719,18 +1587,14 @@ object CommitLog {
     require(sets.nonEmpty, s"updateWhereDv on $table: no SET clauses")
     val head = latestVersion(table)
     require(head >= 0, s"commit-log table $table has no commits")
-    val live = liveFiles(table, head)
+    val snap = snapshot(table, head)
+    val live = snap.live
     if (live.isEmpty) return Right(head)
-    val schema = schemaAt(table, head)
     // stats/partition cut on the match scan (round 17, deleteWhere's
     // rationale): only possible-match files feed the position discovery
-    val candidates = prunedLiveFiles(spark, table, cond, Some(head))
+    val candidates = pruned(spark, table, snap, cond)
     if (candidates.isEmpty) return Right(head)
-    val paths = candidates.map(f => Paths.get(table, f).toString)
-    val base = schema match {
-      case Some(s) => spark.read.schema(s).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
-    }
+    val base = frame(spark, table, candidates, snap.schema)
     sets.foreach { case (name, _) =>
       require(base.columns.contains(name),
         s"updateWhereDv: no column '$name' on $table (${base.columns.mkString(", ")})")
@@ -1740,7 +1604,7 @@ object CommitLog {
         s"updateWhereDv: column '$c' on $table collides with the reserved " +
           "'_graft_' helper-column prefix")
     }
-    val dvs = liveDvs(table, head)
+    val dvs = snap.dvs
     val tagged = applyDvs(spark, table, base
       .withColumn("_graft_f", element_at(split(input_file_name(), "/"), -1))
       .withColumn("_graft_pos", col("_metadata.row_index")), dvs)
@@ -1787,15 +1651,8 @@ object CommitLog {
     applyGenerated(spark, table, images, "update") // validate-only: all cols present
     validateConstraints(spark, table, images, "update")
     val adds = stage(table, images)
-    val res =
-      if (tryCommit(table, head + 1, adds, Nil, dvs = mapping.toSeq))
-        Right(head + 1)
-      else Left(Conflict(head + 1, latestVersion(table)))
-    if (res.isLeft) {
-      staged.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
-      adds.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
-    }
-    res
+    cleaningUp(table, staged ++ adds)(
+      commitExactly(table, head + 1)(tryCommit(table, _, adds, Nil, dvs = mapping.toSeq)))
   }
 
   /** CLUSTERED OPTIMIZE (round 14) — the `OPTIMIZE ... ZORDER BY`
@@ -1826,10 +1683,8 @@ object CommitLog {
     // stats on the rewrite (the Delta OPTIMIZE behavior; round 15): the
     // disjoint key ranges this verb creates are exactly what readWhere's
     // min/max pruning buys the most from
-    val res = replaceFiles(table, head, current, adds,
-      statsFor(spark, table, adds))
-    if (res.isLeft) adds.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
-    res
+    cleaningUp(table, adds)(replaceFiles(table, head, current, adds,
+      statsFor(spark, table, adds)))
   }
 
   /** UPDATE WHERE ... SET through the log (round 14) — the last DML
@@ -1856,18 +1711,14 @@ object CommitLog {
     require(sets.nonEmpty, s"updateWhere on $table: no SET clauses")
     val head = latestVersion(table)
     require(head >= 0, s"commit-log table $table has no commits")
-    val live = liveFiles(table, head)
+    val snap = snapshot(table, head)
+    val live = snap.live
     if (live.isEmpty) return Right(head)
-    val schema = schemaAt(table, head)
     // stats/partition cut on the match scan (round 17, deleteWhere's
     // rationale): only possible-match files feed the rewrite discovery
-    val candidates = prunedLiveFiles(spark, table, cond, Some(head))
+    val candidates = pruned(spark, table, snap, cond)
     if (candidates.isEmpty) return Right(head)
-    val paths = candidates.map(f => Paths.get(table, f).toString)
-    val base = schema match {
-      case Some(s) => spark.read.schema(s).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
-    }
+    val base = frame(spark, table, candidates, snap.schema)
     sets.foreach { case (name, _) =>
       require(base.columns.contains(name),
         s"updateWhere: no column '$name' on $table (${base.columns.mkString(", ")})")
@@ -1885,7 +1736,7 @@ object CommitLog {
     // DV-applied scan (round 16): an UPDATE rewrite must not resurrect
     // merge-on-read-deleted rows of an affected file
     val tagged = applyDvs(spark, table,
-      base.withColumn("_graft_file", input_file_name()), liveDvs(table, head))
+      base.withColumn("_graft_file", input_file_name()), snap.dvs)
     val affectedPaths = tagged.filter(cond).select("_graft_file")
       .distinct().collect().map(_.getString(0)).toSet
     val affected = affectedOf(live, affectedPaths)
@@ -1919,9 +1770,7 @@ object CommitLog {
     applyGenerated(spark, table, updated, "update") // validate-only
     validateConstraints(spark, table, updated, "update")
     val adds = stage(table, updated)
-    val res = replaceFiles(table, head, affected, adds)
-    if (res.isLeft) adds.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
-    res
+    cleaningUp(table, adds)(replaceFiles(table, head, affected, adds))
   }
 
   /** MERGE INTO through the log (round 17) — the upsert verb as a
@@ -1952,8 +1801,8 @@ object CommitLog {
     val head = latestVersion(table)
     require(head >= 0, s"commit-log table $table has no commits")
     if (source.isEmpty) return Right(head)
-    val live = liveFiles(table, head)
-    val schema = schemaAt(table, head)
+    val snap = snapshot(table, head)
+    val live = snap.live
     // generated columns materialize-or-validate on the source up front
     // (round 17): an omitted gencol fills in, a wrong one fails loudly
     val source1 = applyGenerated(spark, table, source, "merge")
@@ -1963,15 +1812,9 @@ object CommitLog {
     if (live.isEmpty) {
       validateConstraints(spark, table, source1, "merge")
       val adds = stage(table, source1)
-      val res = replaceFiles(table, head, Nil, adds)
-      if (res.isLeft) adds.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
-      return res
+      return cleaningUp(table, adds)(replaceFiles(table, head, Nil, adds))
     }
-    val paths = live.map(f => Paths.get(table, f).toString)
-    val base = schema match {
-      case Some(s) => spark.read.schema(s).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
-    }
+    val base = frame(spark, table, live, snap.schema)
     require(source1.columns.sorted.sameElements(base.columns.sorted),
       s"mergeInto: source columns (${source1.columns.sorted.mkString(", ")}) " +
         s"must match $table's (${base.columns.sorted.mkString(", ")})")
@@ -1986,7 +1829,7 @@ object CommitLog {
       df.withColumn(f.name, col(f.name).cast(f.dataType))
     }.select(base.columns.map(col): _*).localCheckpoint()
     val tagged = applyDvs(spark, table,
-      base.withColumn("_graft_file", input_file_name()), liveDvs(table, head))
+      base.withColumn("_graft_file", input_file_name()), snap.dvs)
     val srcKeys = src.select(col(key)).distinct()
     val affectedPaths = tagged.join(srcKeys, Seq(key), "left_semi")
       .select("_graft_file").distinct().collect().map(_.getString(0)).toSet
@@ -2018,9 +1861,7 @@ object CommitLog {
     }
     validateConstraints(spark, table, staged, "merge")
     val adds = stage(table, staged)
-    val res = replaceFiles(table, head, affected, adds)
-    if (res.isLeft) adds.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
-    res
+    cleaningUp(table, adds)(replaceFiles(table, head, affected, adds))
   }
 
   /** RENAME COLUMN (round 14 — the non-widening half of schema
@@ -2106,12 +1947,8 @@ object CommitLog {
       .encodeToString(rewritten.schema.json.getBytes("UTF-8"))
     val removes = liveFiles(table, head)
     val adds = if (removes.isEmpty) Nil else stage(table, rewritten)
-    if (tryCommit(table, head + 1, adds, removes, meta = Some(b64)))
-      Right(head + 1)
-    else {
-      adds.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
-      Left(Conflict(head + 1, latestVersion(table)))
-    }
+    cleaningUp(table, adds)(
+      commitExactly(table, head + 1)(tryCommit(table, _, adds, removes, meta = Some(b64))))
   }
 
   /** SHALLOW CLONE (round 15 — Delta's public design): fork a table at a
@@ -2137,27 +1974,17 @@ object CommitLog {
       s"clone target $target already has commits")
     val rel = Paths.get(target).toAbsolutePath.normalize
       .relativize(Paths.get(source).toAbsolutePath.normalize).toString
-    val adds = liveAdds(source, v)
-    val refs = adds.map { case (f, _) => s"$rel/$f" }
-    val stats = adds.collect { case (f, Some(st)) => s"$rel/$f" -> st }.toMap
-    // deletion-vector attachments clone as external references too —
-    // a clone that dropped them would RESURRECT merge-on-read deletes
-    // (read-path matching is by basename, so relative paths are fine)
-    val dvs = liveDvs(source, v).toSeq
-      .map { case (t, p) => (s"$rel/$p", s"$rel/$t") }
-    val meta = schemaAt(source, v).map(s => java.util.Base64.getEncoder
-      .encodeToString(s.json.getBytes("UTF-8")))
-    // CHECK constraints clone with the snapshot too (round 17): a fork
-    // that silently dropped enforcement would accept rows its source
-    // rejects
-    val enc = java.util.Base64.getEncoder
-    val cons = constraintsAt(source, v).toSeq
-      .map { case (n, sql) => n -> enc.encodeToString(sql.getBytes("UTF-8")) }
-    // generated-column definitions clone too (round 17) — same rationale
-    val gens = generatedAt(source, v).toSeq
-      .map { case (n, sql) => n -> enc.encodeToString(sql.getBytes("UTF-8")) }
-    require(tryCommit(target, 0L, refs, Nil, meta = meta, addStats = stats,
-      dvs = dvs, constraints = cons, gencols = gens),
+    val snap = snapshot(source, v)
+    // the snapshot's payloads copy verbatim: stats, schema, deletion
+    // vectors (as external references too — a clone that dropped them
+    // would RESURRECT merge-on-read deletes; read-path matching is by
+    // basename, so relative paths are fine), and CHECK constraints and
+    // generated columns (round 17 — a fork that silently dropped
+    // enforcement would accept rows its source rejects)
+    require(tryCommit(target, 0L, snap.live.map(f => s"$rel/$f"), Nil, meta = snap.meta,
+      addStats = snap.files.collect { case (f, Some(st)) => s"$rel/$f" -> st },
+      dvs = snap.dvs.toSeq.map { case (t, p) => (s"$rel/$p", s"$rel/$t") },
+      constraints = snap.constraints.toSeq, gencols = snap.gencols.toSeq),
       s"clone target $target saw a concurrent commit")
     0L
   }
@@ -2176,12 +2003,13 @@ object CommitLog {
     require(retainVersions >= 1, s"retainVersions must be >= 1, got $retainVersions")
     val vMax = latestVersion(table)
     require(vMax >= 0, s"commit-log table $table has no commits")
-    val window = (vMax - retainVersions + 1).max(0L) to vMax
+    val first = (vMax - retainVersions + 1).max(0L)
     // retained = data files AND dv files any retained snapshot reads
     // (sweeping a dv file under a retained snapshot would RESURRECT its
     // deleted rows — worse than a failing read)
-    val retained = window.flatMap(liveFiles(table, _)).toSet ++
-      window.flatMap(liveDvs(table, _).values).toSet
+    val retained = ((first + 1) to vMax).iterator
+      .scanLeft(snapshot(table, first))((s, v) => fold(s, commits0(table, v)))
+      .flatMap(s => s.live ++ s.dvs.values).toSet
     val all = commits(table, vMax)
     (all.flatMap(_.adds) ++ all.flatMap(_.dvs.map(_._1))).distinct
       .filterNot(retained)
@@ -2340,13 +2168,8 @@ object CommitLog {
     val adds = stage(table, read(spark, table, Some(head)).repartition(targetFiles))
     // stats survive compaction too (the Delta OPTIMIZE behavior) — a
     // maintenance verb must never silently degrade future reads
-    val res = replaceFiles(table, head, current, adds,
-      statsFor(spark, table, adds))
-    // a lost race leaves the staged rewrite referenced by nothing: clean
-    // it up here so retry loops don't leak (vacuum's orphan sweep is the
-    // backstop for callers that crash before reaching this line)
-    if (res.isLeft) adds.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
-    res
+    cleaningUp(table, adds)(replaceFiles(table, head, current, adds,
+      statsFor(spark, table, adds)))
   }
 
   /** PARTITION-SCOPED OPTIMIZE (round 17 — Delta's `OPTIMIZE ... WHERE`,
@@ -2367,22 +2190,15 @@ object CommitLog {
                    targetFiles: Int = 1): Either[Conflict, Long] = {
     val head = latestVersion(table)
     require(head >= 0, s"commit-log table $table has no commits")
-    val selected = prunedLiveFiles(spark, table, cond, Some(head))
+    val snap = snapshot(table, head)
+    val selected = pruned(spark, table, snap, cond)
     if (selected.isEmpty) return Right(head)
-    val schema = schemaAt(table, head)
-    val paths = selected.map(f => Paths.get(table, f).toString)
-    val base = schema match {
-      case Some(s) => spark.read.schema(s).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
-    }
     val selectedSet = selected.toSet
-    val dvApplied = applyDvs(spark, table, base,
-      liveDvs(table, head).filter { case (t, _) => selectedSet.contains(t) })
+    val dvApplied = applyDvs(spark, table, frame(spark, table, selected, snap.schema),
+      snap.dvs.filter { case (t, _) => selectedSet.contains(t) })
     val adds = stage(table, dvApplied.repartition(targetFiles))
-    val res = replaceFiles(table, head, selected, adds,
-      statsFor(spark, table, adds))
-    if (res.isLeft) adds.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
-    res
+    cleaningUp(table, adds)(replaceFiles(table, head, selected, adds,
+      statsFor(spark, table, adds)))
   }
 
   /** INCREMENTAL (streaming-source) read: the rows the commits in
@@ -2420,16 +2236,7 @@ object CommitLog {
           "append-only by contract")
       c.adds
     }
-    val schema = schemaAt(table, head)
-    val files = adds.map(f => Paths.get(table, f).toString)
-    val df = (files.isEmpty, schema) match {
-      case (true, Some(s)) =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-      case (true, None) => spark.emptyDataFrame
-      case (false, Some(s)) => spark.read.schema(s).parquet(files: _*)
-      case (false, None) => spark.read.parquet(files: _*)
-    }
-    (df, head)
+    (frame(spark, table, adds, schemaAt(table, head)), head)
   }
 
   /** Row-level change feed DERIVED from consecutive snapshots (the CDF
@@ -2444,31 +2251,25 @@ object CommitLog {
   def tableChanges(spark: SparkSession, table: String, key: String): DataFrame = {
     val vMax = latestVersion(table)
     require(vMax >= 0, s"commit-log table $table has no commits")
-    // per-version schemas from ONE forward fold over the commits (r13
-    // advice: calling schemaAt per version made the CDF read O(V²) log
+    // every version's snapshot from ONE forward fold over the commits
+    // (r13 advice: a per-version lookup made the CDF read O(V²) log
     // reads — the same cumulative-cost class the txn checkpoint fix
     // targets); decoded schemas memoized per distinct payload
-    val decoded = scala.collection.mutable.Map.empty[String,
-      org.apache.spark.sql.types.StructType]
-    val schemas: IndexedSeq[Option[org.apache.spark.sql.types.StructType]] =
-      commits(table, vMax)
-        .scanLeft(Option.empty[String])((acc, c) => c.meta.orElse(acc))
-        .tail
-        .map(_.map(b64 => decoded.getOrElseUpdate(b64, decodeSchema(b64))))
-        .toIndexedSeq
+    val snaps = commits(table, vMax).scanLeft(Snapshot())(fold).tail.toIndexedSeq
+    val decoded = scala.collection.mutable.Map.empty[String, StructType]
     // each version-step compares BOTH snapshots under the NEWER step's
     // schema: an ADD COLUMN evolution then changes no fingerprints (old
     // rows read NULL in the new column on both sides), so a metadata-only
     // commit emits zero change rows — the Delta CDF contract — while a
     // later write that fills the column fingerprints as a real update
-    def fingerprinted(v: Long, sch: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
-      val df = readAt(spark, table, v, sch)
+    def fingerprinted(v: Int, sch: Option[StructType]): DataFrame = {
+      val df = readAt(spark, table, snaps(v), sch)
       val content = df.columns.filterNot(_ == key).sorted
         .map(c => col(c).cast("string"))
       df.select(col(key), xxhash64(content: _*).as("row_fp"))
     }
-    (0L to vMax).map { v =>
-      val sch = schemas(v.toInt)
+    snaps.indices.map { v =>
+      val sch = snaps(v).meta.map(b64 => decoded.getOrElseUpdate(b64, decodeSchema(b64)))
       val cur = fingerprinted(v, sch).withColumnRenamed("row_fp", "cur_fp")
       val prev =
         if (v == 0) cur.filter(lit(false)).select(col(key), col("cur_fp").as("prev_fp"))
@@ -2476,7 +2277,7 @@ object CommitLog {
       cur.join(prev, Seq(key), "full_outer")
         .filter(col("cur_fp").isNull || col("prev_fp").isNull ||
           col("cur_fp") =!= col("prev_fp"))
-        .select(col(key), lit(v).as("version"),
+        .select(col(key), lit(v.toLong).as("version"),
           when(col("prev_fp").isNull, lit("insert"))
             .when(col("cur_fp").isNull, lit("delete"))
             .otherwise(lit("update")).as("op"),
