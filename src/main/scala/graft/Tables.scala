@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.ParquetFooter
+
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
   * All graft operators are pure `DataFrame => DataFrame` functions; this is
@@ -13,8 +15,14 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** `<sfDir>/<name>.parquet` under the schema its footer declares, read
+    * on the driver by [[graft.sources.ParquetFooter.footerSchema]]: the
+    * schema `spark.read.parquet` would infer, without the Spark job that
+    * inference runs. */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(ParquetFooter.footerSchema(spark, path)).parquet(path)
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")

@@ -112,6 +112,8 @@ object MlPipeline {
       .select(col("trial_id"), col("channel"), col("label"), col("prediction"),
         org.apache.spark.ml.functions.vector_to_array(col("probability")).as("probability"))
       .write.mode("overwrite").partitionBy("prediction").parquet(path)
+    // schema inference stays here: partition discovery over the
+    // partitionBy layout restores `prediction`, which no footer holds
     predictions.sparkSession.read.parquet(path)
   }
 

@@ -562,21 +562,28 @@ object CommitLog {
                      schema: Option[StructType]): DataFrame =
     applyDvs(spark, table, frame(spark, table, s.live, schema), s.dvs)
 
-  /** A frame over the table's data `files` under `schema` (else the
-    * parquet footers'); no files gives an empty frame of that schema. */
+  /** A frame over the table's data `files` under `schema`, else under
+    * the first file's footer ([[ParquetFooter.footerSchema]], the file
+    * Spark's non-merging inference would read, without its Spark job);
+    * no files gives an empty frame of that schema. */
   private def frame(spark: SparkSession, table: String, files: Seq[String],
                     schema: Option[StructType]): DataFrame = {
     val paths = files.map(f => Paths.get(table, f).toString)
     (paths.isEmpty, schema) match {
       case (true, Some(s)) => spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
       case (true, None) => spark.emptyDataFrame
-      case (false, Some(s)) => spark.read.schema(s).parquet(paths: _*)
-      case (false, None) => spark.read.parquet(paths: _*)
+      case (false, s) => spark.read
+        .schema(s.getOrElse(ParquetFooter.footerSchema(spark, paths.head)))
+        .parquet(paths: _*)
     }
   }
 
   private def baseName(f: String): String =
     f.substring(f.lastIndexOf('/') + 1)
+
+  /** The schema of every deletion-vector sidecar [[stageDv]] writes:
+    * (target data-file basename, parquet row position). */
+  private[graft] val DvSchema: StructType = StructType.fromDDL("target STRING, pos LONG")
 
   /** MERGE-ON-READ filter (round 16 — Delta's deletion-vector read
     * path, public design): rows whose (data-file, row position) is
@@ -595,7 +602,7 @@ object CommitLog {
       .map(p => Paths.get(table, p).toString)
     val current = dvs.map { case (t, p) => s"${baseName(p)}|${baseName(t)}" }
       .toSeq
-    val dvDf = spark.read.parquet(dvPaths: _*)
+    val dvDf = spark.read.schema(DvSchema).parquet(dvPaths: _*)
       .withColumn("_graft_dvf",
         element_at(split(input_file_name(), "/"), -1))
       .filter(concat(col("_graft_dvf"), lit("|"), col("target"))
@@ -679,8 +686,7 @@ object CommitLog {
   def statsFor(spark: SparkSession, table: String,
                files: Seq[String]): Map[String, String] = {
     if (files.isEmpty) return Map.empty
-    val paths = files.map(f => Paths.get(table, f).toString)
-    val df = spark.read.parquet(paths: _*)
+    val df = frame(spark, table, files, None)
     val eligible = df.schema.fields.filter(statsEligible)
     val cols = eligible.map(_.name).toSeq
     if (cols.isEmpty) return Map.empty
@@ -886,7 +892,7 @@ object CommitLog {
     val adds = s.files.toVector
     if (adds.isEmpty) return Nil
     val schema = s.schema.getOrElse(
-      spark.read.parquet(Paths.get(table, adds.head._1).toString).schema)
+      ParquetFooter.footerSchema(spark, Paths.get(table, adds.head._1).toString))
     val eligible = schema.fields.filter(statsEligible).map(_.name).toSet
     val condE = resolvedPredicate(spark, schema, cond)
     if (eligible.isEmpty || condE.isEmpty) return adds.map(_._1)
@@ -953,11 +959,7 @@ object CommitLog {
       case (true, None) =>
         // every file pruned on a footer-schema table: serve the schema
         // from one live footer, zero rows (limit 0 reads no row groups)
-        s.live.headOption match {
-          case Some(f) =>
-            spark.read.parquet(Paths.get(table, f).toString).limit(0)
-          case None => spark.emptyDataFrame
-        }
+        frame(spark, table, s.live.take(1), None).limit(0)
       case _ => frame(spark, table, kept, s.schema)
     }
     // a DV'd file's stats describe a SUPERSET of its live rows (min/max
@@ -1546,7 +1548,7 @@ object CommitLog {
       .map(p => Paths.get(table, p).toString)
     val prior =
       if (priorPaths.isEmpty) matched.limit(0)
-      else spark.read.parquet(priorPaths: _*)
+      else spark.read.schema(DvSchema).parquet(priorPaths: _*)
         .filter(col("target").isin(affected.toSeq: _*))
         .select(col("target"), col("pos"))
     val rows = matched.unionByName(prior)
@@ -1554,7 +1556,7 @@ object CommitLog {
       rows.repartition(math.min(32, affected.size), col("target")))
     // each target's rows hash to ONE staged sidecar; the writer reads the
     // mapping back once (write-time data altitude, never the log fold)
-    val mapping = spark.read
+    val mapping = spark.read.schema(DvSchema)
       .parquet(staged.map(f => Paths.get(table, f).toString): _*)
       .withColumn("f", element_at(split(input_file_name(), "/"), -1))
       .select("f", "target").distinct()
@@ -1622,12 +1624,12 @@ object CommitLog {
       .map(p => Paths.get(table, p).toString)
     val prior =
       if (priorPaths.isEmpty) matched.limit(0)
-      else spark.read.parquet(priorPaths: _*)
+      else spark.read.schema(DvSchema).parquet(priorPaths: _*)
         .filter(col("target").isin(affected.toSeq: _*))
         .select(col("target"), col("pos"))
     val staged = stageDv(table, matched.unionByName(prior)
       .repartition(math.min(32, affected.size), col("target")))
-    val mapping = spark.read
+    val mapping = spark.read.schema(DvSchema)
       .parquet(staged.map(f => Paths.get(table, f).toString): _*)
       .withColumn("f", element_at(split(input_file_name(), "/"), -1))
       .select("f", "target").distinct()

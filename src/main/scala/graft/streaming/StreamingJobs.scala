@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.types._
 
 import graft.operators.Sessionize
+import graft.sources.ParquetFooter
 
 /** Structured Streaming twins of the batch event operators (SURVEY.md §2.D):
   * the same computations declared over an unbounded file source, with
@@ -43,7 +44,7 @@ object StreamingJobs {
     * probed form: `ts div 1000` on int64 nanos, `unix_micros` (UTC session)
     * on the µs timestamp — identical integers either way. */
   private def eventsTsProbe(spark: SparkSession, dir: String): (Boolean, Column) = {
-    val tsIsLong = spark.read.parquet(dir).schema("ts").dataType == LongType
+    val tsIsLong = ParquetFooter.footerSchema(spark, dir)("ts").dataType == LongType
     (tsIsLong,
       if (tsIsLong) expr("ts div 1000")
       else expr("unix_micros(CAST(ts AS TIMESTAMP))"))
