@@ -103,8 +103,7 @@ object Dedup {
   def ngramJaccardPairs(documents: DataFrame, threshold: Double = JaccardThreshold,
                         maxDf: Option[Long] = None,
                         saltCandidates: Option[Int] = None,
-                        broadcastSizes: Boolean = true,
-                        shuffleHashCandidates: Boolean = true): DataFrame = {
+                        broadcastSizes: Boolean = true): DataFrame = {
     val sh = shingleSets(documents)
     val exAll = shingleExploded(documents)
       .select(col("doc_id"), expr("xxhash64(s)").as("sh"))
@@ -134,20 +133,15 @@ object Dedup {
       // carries 16-byte rows on a dense shingle key — SMJ's per-partition
       // sort + duplicate-group buffering measured 5.7 s vs SHJ's 1.2 s at
       // sf0.1 (OPTIMIZATION_r17.md §1, V0/V3; the sorts dominate because
-      // every key has df² outputs to re-scan). HONESTY NOTE (r17
-      // advisor): the hint is UNCONDITIONAL where AQE's own SMJ→SHJ
-      // rewrite is size-gated by maxShuffledHashJoinLocalMapThreshold —
-      // the per-partition build is gramStream/shuffle.partitions rows, so
-      // at a fixed partition count an adversarially dense 100 TB corpus
-      // makes the forced build an
-      // OOM class, not a slowdown. `shuffleHashCandidates` is therefore a
-      // dial (the broadcastSizes pattern): true (default) keeps the
-      // measured plan for every partition-sized invocation; false drops
-      // the hint so the planner/AQE choose from real sizes. Output is
-      // row-identical either way (join strategy never changes rows).
-      case None =>
-        val l = if (shuffleHashCandidates) a.hint("shuffle_hash") else a
-        l.join(b, Seq("sh"))
+      // every key has df² outputs to re-scan). The hint is forced
+      // because AQE's own SMJ→SHJ rewrite is size-gated by
+      // maxShuffledHashJoinLocalMapThreshold and would not take this
+      // plan on its own. Caveat: the per-partition build is
+      // gramStream/shuffle.partitions rows, so at a fixed partition count
+      // an adversarially dense corpus makes the forced build an OOM
+      // class, not a slowdown. Output is row-identical under any join
+      // strategy.
+      case None => a.hint("shuffle_hash").join(b, Seq("sh"))
     }
     def dim(df: DataFrame): DataFrame = if (broadcastSizes) broadcast(df) else df
     candidates
@@ -736,9 +730,6 @@ object Dedup {
       .select(col("doc_id"), col("label").as("cluster_id"))
       .withColumn("is_canonical", col("doc_id") === col("cluster_id"))
   }
-
-  def dedupClustersIncrementalQ(documents: DataFrame): DataFrame =
-    dedupClustersIncremental(documents).orderBy("doc_id")
 
   /** Near-dup clustering with QUALITY-AWARE canonical choice (round 8):
     * the member a pipeline actually keeps from a near-dup cluster is the

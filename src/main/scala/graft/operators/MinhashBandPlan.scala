@@ -106,9 +106,6 @@ object MinhashBandPlan {
   def minhashBandPlanFromIndex(index: DataFrame): DataFrame =
     planOverStats(index)
 
-  def minhashBandPlanQ(documents: DataFrame): DataFrame =
-    minhashBandPlan(documents).orderBy(col("bands").desc)
-
   /** Geometry from a (possibly persisted) plan frame — the
     * saltedJoinPlanned / hybridJaccardPlanned pattern: one bounded
     * driver probe of the ≤|divisors(K)|-row report; falls back to the

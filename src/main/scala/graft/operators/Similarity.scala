@@ -343,9 +343,6 @@ object Similarity {
       batchMod, maxIters)
       .select(col("doc_id").as("vec_id"), col("cluster_id"), col("is_canonical"))
 
-  def embeddingClustersIncrementalQ(embeddings: DataFrame): DataFrame =
-    embeddingClustersIncremental(embeddings).orderBy("vec_id")
-
   /** DuckDB twin: the [[embeddingDedupSql]] pair CTEs + the recursive-CTE
     * transitive closure of [[Dedup.dedupClustersSql]] — min reachable id
     * per vector. */

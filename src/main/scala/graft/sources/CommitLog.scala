@@ -264,6 +264,14 @@ object CommitLog {
     ((start.version + 1) to asOf).foldLeft(start)((s, v) => fold(s, commits0(table, v)))
   }
 
+  /** The snapshot at `asOf`, else at the head; loud on a table with no
+    * commits. */
+  private def pinned(table: String, asOf: Option[Long] = None): Snapshot = {
+    val v = asOf.getOrElse(latestVersion(table))
+    require(v >= 0, s"commit-log table $table has no commits")
+    snapshot(table, v)
+  }
+
   /** Latest committed version, -1 for a table with no commits. */
   def latestVersion(table: String): Long = {
     val d = logDir(table)
@@ -490,9 +498,7 @@ object CommitLog {
     * NULLs, and a read at a pre-evolution version sees exactly the old
     * schema. */
   def read(spark: SparkSession, table: String, asOf: Option[Long] = None): DataFrame = {
-    val v = asOf.getOrElse(latestVersion(table))
-    require(v >= 0, s"commit-log table $table has no commits")
-    val s = snapshot(table, v)
+    val s = pinned(table, asOf)
     readAt(spark, table, s, s.schema)
   }
 
@@ -581,7 +587,7 @@ object CommitLog {
   private def baseName(f: String): String =
     f.substring(f.lastIndexOf('/') + 1)
 
-  /** The schema of every deletion-vector sidecar [[stageDv]] writes:
+  /** The schema of every deletion-vector sidecar [[stageDvs]] writes:
     * (target data-file basename, parquet row position). */
   private[graft] val DvSchema: StructType = StructType.fromDDL("target STRING, pos LONG")
 
@@ -881,11 +887,8 @@ object CommitLog {
     * |live files|-row metadata frame — catalog-sized, the documented
     * driver-probe class; 100 TB of data files never move. */
   def prunedLiveFiles(spark: SparkSession, table: String, cond: Column,
-                      asOf: Option[Long] = None): Seq[String] = {
-    val v = asOf.getOrElse(latestVersion(table))
-    require(v >= 0, s"commit-log table $table has no commits")
-    pruned(spark, table, snapshot(table, v), cond)
-  }
+                      asOf: Option[Long] = None): Seq[String] =
+    pruned(spark, table, pinned(table, asOf), cond)
 
   private def pruned(spark: SparkSession, table: String, s: Snapshot,
                      cond: Column): Seq[String] = {
@@ -951,9 +954,7 @@ object CommitLog {
     * non-matching rows anyway. Deletion vectors still apply. */
   def readPruned(spark: SparkSession, table: String, cond: Column,
                  asOf: Option[Long] = None): DataFrame = {
-    val v = asOf.getOrElse(latestVersion(table))
-    require(v >= 0, s"commit-log table $table has no commits")
-    val s = snapshot(table, v)
+    val s = pinned(table, asOf)
     val kept = pruned(spark, table, s, cond)
     val base = (kept.isEmpty, s.schema) match {
       case (true, None) =>
@@ -1163,28 +1164,33 @@ object CommitLog {
     * copy-on-write rewrites share). Returns the staged file names. */
   def stage(table: String, df: DataFrame): Seq[String] = stageAs(table, df, "part")
 
-  /** [[stage]] under the `<uuid8>-<kind>-NNNNN.parquet` name shape. */
-  private def stageAs(table: String, df: DataFrame, kind: String): Seq[String] = {
+  /** [[stage]] under the `<uuid8>-<kind>-NNNNN.parquet` name shape.
+    * With `partCols` the write goes through a `partitionBy` directory
+    * layout: duplicated `_graft_p_*` helper columns feed the router, so
+    * the DATA files keep the original columns (Spark's partitionBy drops
+    * its partition columns from file data), and every file is value-pure
+    * in them. Either way the temp tree's parquet leaves, sorted by path,
+    * flatten into the table root and the tree is deleted, deepest entries
+    * first. */
+  private def stageAs(table: String, df: DataFrame, kind: String,
+                      partCols: Seq[String] = Nil): Seq[String] = {
     Files.createDirectories(Paths.get(table))
     val prefix = java.util.UUID.randomUUID().toString.take(8)
     val tmp = Paths.get(table, s"_tmp_${kind}_$prefix")
-    df.write.mode("overwrite").parquet(tmp.toString)
-    val parts = {
-      val s = Files.list(tmp)
-      try s.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .toVector.sortBy(_.getFileName.toString)
-      finally s.close()
+    partCols.foldLeft(df)((d, c) => d.withColumn(s"_graft_p_$c", col(c)))
+      .write.mode("overwrite").partitionBy(partCols.map(c => s"_graft_p_$c"): _*)
+      .parquet(tmp.toString)
+    def tree(): Vector[Path] = {
+      val w = Files.walk(tmp)
+      try w.iterator().asScala.toVector finally w.close()
     }
-    val named = parts.zipWithIndex.map { case (p, i) =>
-      val name = f"$prefix-$kind-$i%05d.parquet"
-      Files.move(p, Paths.get(table, name))
-      name
-    }
-    val leftovers = Files.list(tmp)
-    try leftovers.iterator().asScala.foreach(Files.deleteIfExists(_))
-    finally leftovers.close()
-    Files.deleteIfExists(tmp)
+    val named = tree().filter(_.getFileName.toString.endsWith(".parquet"))
+      .sortBy(_.toString).zipWithIndex.map { case (p, i) =>
+        val name = f"$prefix-$kind-$i%05d.parquet"
+        Files.move(p, Paths.get(table, name))
+        name
+      }
+    tree().sortBy(-_.getNameCount).foreach(Files.deleteIfExists(_))
     named
   }
 
@@ -1259,13 +1265,40 @@ object CommitLog {
                         maxRetries: Int = 50,
                         ctsMillis: Option[Long] = None,
                         withStats: Boolean = false): (Long, Int) = {
-    val gdf = applyGenerated(spark, table, df, "append")
-    validateConstraints(spark, table, gdf, "append") // before anything stages
-    val adds = stage(table, gdf)
-    val stats = if (withStats) statsFor(spark, table, adds) else Map.empty[String, String]
+    val (adds, stats) = stageAppend(spark, table, df, "append", Nil, withStats)
     commitNext(table, "append", maxRetries)(
       tryCommit(table, _, adds, Nil, addStats = stats, ctsMillis = ctsMillis))
   }
+
+  /** The staging half every append verb shares. Generated columns
+    * materialize FIRST (a derived partition column may be absent from
+    * the writer's frame — the canonical gencol use); partition columns
+    * must exist and, since the router adds `_graft_p_*` columns, no
+    * column may carry the helper prefix; CHECK constraints validate
+    * before anything stages. Stats ride when asked for, and always on a
+    * partitioned write (they ARE its pruning payload). Returns the staged
+    * files and their stats. */
+  private def stageAppend(spark: SparkSession, table: String, df: DataFrame,
+                          verb: String, partCols: Seq[String],
+                          withStats: Boolean): (Seq[String], Map[String, String]) = {
+    val gdf = applyGenerated(spark, table, df, "append")
+    partCols.foreach(c => require(gdf.columns.contains(c),
+      s"$verb: no partition column '$c' (${gdf.columns.mkString(", ")})"))
+    if (partCols.nonEmpty) requireNoHelperCols(verb, table, gdf.columns)
+    validateConstraints(spark, table, gdf, "append")
+    val adds = stageAs(table, gdf, "part", partCols)
+    (adds, if (withStats || partCols.nonEmpty) statsFor(spark, table, adds) else Map.empty)
+  }
+
+  /** Verbs that add `_graft_*` helper columns to a table's rows refuse
+    * rows that already carry one: the helper would silently shadow the
+    * user column (a copy-on-write DELETE would overwrite it with file
+    * URIs, then drop it from the rewrite). */
+  private def requireNoHelperCols(verb: String, table: String, cols: Array[String]): Unit =
+    cols.find(_.startsWith("_graft_")).foreach { c =>
+      throw new IllegalArgumentException(s"$verb: column '$c' on $table collides " +
+        "with the reserved '_graft_' helper-column prefix")
+    }
 
   /** [[append]] with per-file column stats riding the add actions
     * (round 15 — Delta's add-action `stats` field, public design): one
@@ -1305,55 +1338,10 @@ object CommitLog {
                         partCols: Seq[String], maxRetries: Int = 50,
                         ctsMillis: Option[Long] = None): Long = {
     require(partCols.nonEmpty, "appendPartitioned: no partition columns")
-    // generated columns materialize FIRST — a derived partition column
-    // may be absent from the writer's frame (the canonical gencol use)
-    val gdf = applyGenerated(spark, table, df, "append")
-    partCols.foreach(c => require(gdf.columns.contains(c),
-      s"appendPartitioned: no column '$c' (${gdf.columns.mkString(", ")})"))
-    validateConstraints(spark, table, gdf, "append")
-    val adds = stagePartitioned(table, gdf, partCols)
-    val stats = statsFor(spark, table, adds)
+    val (adds, stats) =
+      stageAppend(spark, table, df, "appendPartitioned", partCols, withStats = true)
     commitNext(table, "appendPartitioned", maxRetries)(
       tryCommit(table, _, adds, Nil, addStats = stats, ctsMillis = ctsMillis))._1
-  }
-
-  /** [[stage]] through a `partitionBy` directory write: rows route to
-    * per-tuple leaf directories (duplicated `_graft_p_*` helper columns
-    * feed the router so the DATA files keep the original columns —
-    * Spark's partitionBy drops its partition columns from file data),
-    * then every leaf part-file flattens into the table root under the
-    * staged-name convention. Value purity per file is the router's
-    * guarantee. */
-  private def stagePartitioned(table: String, df: DataFrame,
-                               partCols: Seq[String]): Seq[String] = {
-    Files.createDirectories(Paths.get(table))
-    df.columns.filter(_.startsWith("_graft_")).foreach { c =>
-      throw new IllegalArgumentException(
-        s"appendPartitioned: column '$c' collides with the reserved " +
-          "'_graft_' helper-column prefix")
-    }
-    val prefix = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = Paths.get(table, s"_tmp_$prefix")
-    val helpers = partCols.map(c => s"_graft_p_$c")
-    val dup = partCols.foldLeft(df)((d, c) =>
-      d.withColumn(s"_graft_p_$c", col(c)))
-    dup.write.mode("overwrite").partitionBy(helpers: _*).parquet(tmp.toString)
-    val walk = Files.walk(tmp)
-    val leaves =
-      try walk.iterator().asScala
-        .filter(p => p.getFileName.toString.endsWith(".parquet"))
-        .toVector.sortBy(_.toString)
-      finally walk.close()
-    val named = leaves.zipWithIndex.map { case (p, i) =>
-      val name = f"$prefix-part-$i%05d.parquet"
-      Files.move(p, Paths.get(table, name))
-      name
-    }
-    // recursive cleanup of the now-empty partition directory tree
-    val sweep = Files.walk(tmp)
-    val all = try sweep.iterator().asScala.toVector finally sweep.close()
-    all.sortBy(-_.getNameCount).foreach(Files.deleteIfExists(_))
-    named
   }
 
   /** Latest transaction version recorded for `appId` at or below table
@@ -1383,25 +1371,12 @@ object CommitLog {
                        withStats: Boolean = false,
                        partitionBy: Seq[String] = Nil): Option[Long] = {
     if (txnLatest(table, appId) >= txnVersion) return None
-    val gdf = applyGenerated(spark, table, df, "append")
-    validateConstraints(spark, table, gdf, "append") // before anything stages
     // partitionBy (round 17): a streaming sink lands value-pure
-    // partition files exactly-once — [[stagePartitioned]]'s router
-    // under [[appendIdempotent]]'s txn watermark; stats always ride a
-    // partitioned write (they ARE its pruning payload)
-    val adds =
-      if (partitionBy.isEmpty) stage(table, gdf)
-      else {
-        partitionBy.foreach(c => require(gdf.columns.contains(c),
-          s"appendIdempotent: no partition column '$c' " +
-            s"(${gdf.columns.mkString(", ")})"))
-        stagePartitioned(table, gdf, partitionBy)
-      }
-    // stats ride the idempotent sink's adds too (round 17 — the
-    // streaming maintainer's gram index prunes its per-batch probe on
-    // them); data-skipping metadata only, same as appendWithStats
-    val stats = if (withStats || partitionBy.nonEmpty) statsFor(spark, table, adds)
-                else Map.empty[String, String]
+    // partition files exactly-once under the txn watermark; stats ride
+    // the sink's adds too (the streaming maintainer's gram index prunes
+    // its per-batch probe on them)
+    val (adds, stats) =
+      stageAppend(spark, table, df, "appendIdempotent", partitionBy, withStats)
     var tries = 0
     while (true) {
       val head = latestVersion(table)
@@ -1437,6 +1412,56 @@ object CommitLog {
       tryCommit(table, _, adds, removes, addStats = addStats, dvs = dvs, dvRms = dvRms))
   }
 
+  /** The prologue every predicate DML verb shares: the head snapshot
+    * (loud on an empty log); the stats/partition cut on the MATCH SCAN
+    * (round 17) — a file whose committed stats exclude `cond` cannot
+    * contain a match, so on a partitioned or clustered table a selective
+    * verb scans its partition, not the table (pruning is a necessary
+    * condition, so the affected set is identical); and a frame over the
+    * candidates whose SET columns exist and whose columns leave the
+    * `_graft_` prefix to the verb's own helpers (a same-named user column
+    * would be silently shadowed — name the real cause up front). No
+    * candidate commits NOTHING and returns Right(head), the Delta no-op
+    * convention; otherwise `body` gets the snapshot and the frame. */
+  private def matchScan(spark: SparkSession, table: String, verb: String, cond: Column,
+                        setCols: Seq[String])
+                       (body: (Snapshot, DataFrame) => Either[Conflict, Long])
+      : Either[Conflict, Long] = {
+    val snap = pinned(table)
+    val candidates = pruned(spark, table, snap, cond)
+    if (candidates.isEmpty) return Right(snap.version)
+    val base = frame(spark, table, candidates, snap.schema)
+    setCols.foreach(c => require(base.columns.contains(c),
+      s"$verb: no column '$c' on $table (${base.columns.mkString(", ")})"))
+    requireNoHelperCols(verb, table, base.columns)
+    body(snap, base)
+  }
+
+  /** Copy-on-write discovery, shared by [[deleteWhere]], [[updateWhere]]
+    * and [[mergeInto]]: `base`'s DV-applied rows (round 16 — a rewrite
+    * must not resurrect merge-on-read deletes) tagged with
+    * `input_file_name()` as `_graft_file`; `hits` picks the rows that
+    * force a rewrite, and the distinct files they sit in — a driver-side
+    * collect bounded by |live files|, log-scale metadata, never row data
+    * — map back to live entries ([[affectedOf]]). Returns the tagged
+    * rows, the hit file URIs and the affected live entries. */
+  private def cowScan(spark: SparkSession, table: String, snap: Snapshot, base: DataFrame)
+                     (hits: DataFrame => DataFrame): (DataFrame, Seq[String], Seq[String]) = {
+    val tagged = applyDvs(spark, table,
+      base.withColumn("_graft_file", input_file_name()), snap.dvs)
+    val paths = hits(tagged).select("_graft_file")
+      .distinct().collect().map(_.getString(0)).toSet
+    (tagged, paths.toSeq, affectedOf(snap.live, paths))
+  }
+
+  /** Stage `rows` and commit them in place of `removes` at head+1 —
+    * or the [[Conflict]], the staged files cleaned up. */
+  private def rewriteCommit(table: String, snap: Snapshot, removes: Seq[String],
+                            rows: DataFrame): Either[Conflict, Long] = {
+    val adds = stage(table, rows)
+    cleaningUp(table, adds)(replaceFiles(table, snap.version, removes, adds))
+  }
+
   /** DELETE WHERE through the log (round 14) — FILE-GRANULAR
     * copy-on-write, the Delta DELETE shape: one scan tagged with
     * `input_file_name()` finds the live files that CONTAIN matching
@@ -1445,49 +1470,61 @@ object CommitLog {
     * never rewritten — at 100 TB a predicate touching 0.1% of files
     * rewrites 0.1% of the table, not all of it (the GDPR-erasure /
     * row-retention economics; the spec pins untouched-file-name
-    * survival). The affected-file list is a driver-side collect bounded
-    * by |live files| — log-scale metadata, never row data. A predicate
-    * matching nothing commits NOTHING and returns Right(head) (the
-    * Delta no-op-delete convention: no empty commit, snapshot
-    * unchanged). */
+    * survival). A predicate matching nothing commits NOTHING and
+    * returns Right(head) (the Delta no-op-delete convention: no empty
+    * commit, snapshot unchanged). */
   def deleteWhere(spark: SparkSession, table: String,
-                  cond: org.apache.spark.sql.Column): Either[Conflict, Long] = {
-    val head = latestVersion(table)
-    require(head >= 0, s"commit-log table $table has no commits")
-    val snap = snapshot(table, head)
-    val live = snap.live
-    if (live.isEmpty) return Right(head)
-    // stats/partition cut on the MATCH SCAN (round 17): a file whose
-    // committed stats exclude `cond` cannot contain a match — the
-    // affected-file discovery reads only the possible candidates (on a
-    // partitioned or clustered table, a selective DELETE scans its
-    // partition, not the table; pruning is a necessary condition, so
-    // the affected set is identical)
-    val candidates = pruned(spark, table, snap, cond)
-    if (candidates.isEmpty) return Right(head)
-    // DV-applied scan (round 16): a copy-on-write rewrite of a file
-    // carrying a deletion vector must not resurrect its DV'd rows
-    val tagged = applyDvs(spark, table, frame(spark, table, candidates, snap.schema)
-      .withColumn("_graft_file", input_file_name()), snap.dvs)
-    val affectedPaths = tagged.filter(cond).select("_graft_file")
-      .distinct().collect().map(_.getString(0)).toSet
-    val affected = affectedOf(live, affectedPaths)
-    if (affected.isEmpty) return Right(head)
-    val keep = tagged
-      .filter(col("_graft_file").isin(affectedPaths.toSeq: _*))
-      .filter(!cond)
-      .drop("_graft_file")
-    val adds = stage(table, keep)
-    cleaningUp(table, adds)(replaceFiles(table, head, affected, adds))
-  }
+                  cond: org.apache.spark.sql.Column): Either[Conflict, Long] =
+    matchScan(spark, table, "deleteWhere", cond, Nil) { (snap, base) =>
+      val (tagged, paths, affected) = cowScan(spark, table, snap, base)(_.filter(cond))
+      if (affected.isEmpty) Right(snap.version)
+      else rewriteCommit(table, snap, affected, tagged
+        .filter(col("_graft_file").isin(paths: _*)).filter(!cond).drop("_graft_file"))
+    }
 
-  /** Stage a deletion-vector row set — (target basename, pos) — as
-    * immutable `*-dv-NNNNN.parquet` sidecars, invisible until a commit's
-    * dv actions reference them (the [[stage]] two-phase shape; the
-    * distinct name keeps [[orphanFiles]]' part-file sweep away from dv
-    * sidecars). */
-  private def stageDv(table: String, df: DataFrame): Seq[String] =
-    stageAs(table, df, "dv")
+  /** `base`'s DV-applied rows tagged with their file basename
+    * (`_graft_f`) and parquet row position (`_graft_pos`) — the
+    * merge-on-read match scan. */
+  private def positioned(spark: SparkSession, table: String, snap: Snapshot,
+                         base: DataFrame): DataFrame =
+    applyDvs(spark, table, base
+      .withColumn("_graft_f", element_at(split(input_file_name(), "/"), -1))
+      .withColumn("_graft_pos", col("_metadata.row_index")), snap.dvs)
+
+  /** The deletion-vector writer shared by [[deleteWhereDv]] and
+    * [[updateWhereDv]]. `matched` holds the (target basename, pos) pairs
+    * to mark; its distinct targets are catalog-bounded driver metadata,
+    * and None means nothing matched. Each affected target's EXISTING
+    * positions merge into its superseding sidecar (merge-on-re-delete:
+    * the old attachment is replaced); the rows repartition on target so
+    * each target hashes to ONE staged `*-dv-NNNNN.parquet` sidecar —
+    * invisible until a commit's dv actions reference it, and kept apart
+    * from [[orphanFiles]]' part-file pattern by its name — and the
+    * (sidecar, target) mapping reads back once (write-time data
+    * altitude, never the log fold). Returns the staged sidecars and
+    * that mapping. */
+  private def stageDvs(spark: SparkSession, table: String, snap: Snapshot,
+                       matched: DataFrame): Option[(Seq[String], Seq[(String, String)])] = {
+    val affected = matched.select("target").distinct()
+      .collect().map(_.getString(0)).toSet
+    if (affected.isEmpty) return None
+    requireUniqueDvTargets(snap.live, affected)
+    val priorPaths = affected.toSeq.flatMap(t => snap.dvs.get(t)).distinct
+      .map(p => Paths.get(table, p).toString)
+    val prior =
+      if (priorPaths.isEmpty) matched.limit(0)
+      else spark.read.schema(DvSchema).parquet(priorPaths: _*)
+        .filter(col("target").isin(affected.toSeq: _*))
+        .select(col("target"), col("pos"))
+    val staged = stageAs(table, matched.unionByName(prior)
+      .repartition(math.min(32, affected.size), col("target")), "dv")
+    val mapping = spark.read.schema(DvSchema)
+      .parquet(staged.map(f => Paths.get(table, f).toString): _*)
+      .withColumn("f", element_at(split(input_file_name(), "/"), -1))
+      .select("f", "target").distinct()
+      .collect().map(r => (r.getString(0), r.getString(1)))
+    Some((staged, mapping.toSeq))
+  }
 
   /** DELETE WHERE as MERGE-ON-READ (round 16 — Delta's deletion-vector
     * design, public): instead of rewriting every file containing a
@@ -1510,59 +1547,51 @@ object CommitLog {
     * newest dv per target). Predicate matching runs on the DV-APPLIED
     * scan, so an already-deleted row can never match twice. A predicate
     * matching nothing commits nothing (the no-op convention). The
-    * affected-target list is catalog-bounded driver metadata; the
-    * position sets stay distributed end to end (staged by repartition
-    * on target, the action mapping read back from the staged sidecars
-    * once, at write time). */
+    * position sets stay distributed end to end ([[stageDvs]]). */
   def deleteWhereDv(spark: SparkSession, table: String,
-                    cond: org.apache.spark.sql.Column): Either[Conflict, Long] = {
-    val head = latestVersion(table)
-    require(head >= 0, s"commit-log table $table has no commits")
-    val snap = snapshot(table, head)
-    val live = snap.live
-    if (live.isEmpty) return Right(head)
-    // stats/partition cut on the match scan (round 17, deleteWhere's
-    // rationale): only possible-match files feed the position discovery
-    val candidates = pruned(spark, table, snap, cond)
-    if (candidates.isEmpty) return Right(head)
-    val base = frame(spark, table, candidates, snap.schema)
-    base.columns.filter(_.startsWith("_graft_")).foreach { c =>
-      throw new IllegalArgumentException(
-        s"deleteWhereDv: column '$c' on $table collides with the reserved " +
-          "'_graft_' helper-column prefix")
+                    cond: org.apache.spark.sql.Column): Either[Conflict, Long] =
+    matchScan(spark, table, "deleteWhereDv", cond, Nil) { (snap, base) =>
+      val matched = positioned(spark, table, snap, base).filter(cond)
+        .select(col("_graft_f").as("target"), col("_graft_pos").as("pos"))
+        .localCheckpoint() // 2 consumers: the target census + the sidecar rows
+      stageDvs(spark, table, snap, matched).fold[Either[Conflict, Long]](
+        Right(snap.version)) { case (staged, mapping) =>
+        cleaningUp(table, staged)(replaceFiles(table, snap.version, Nil, Nil, dvs = mapping))
+      }
     }
-    val dvs = snap.dvs
-    val tagged = applyDvs(spark, table, base
-      .withColumn("_graft_f", element_at(split(input_file_name(), "/"), -1))
-      .withColumn("_graft_pos", col("_metadata.row_index")), dvs)
-    val matched = tagged.filter(cond)
-      .select(col("_graft_f").as("target"), col("_graft_pos").as("pos"))
-      .localCheckpoint() // 2 consumers: the target census + the sidecar rows
-    val affected = matched.select("target").distinct()
-      .collect().map(_.getString(0)).toSet // catalog-bounded driver metadata
-    if (affected.isEmpty) return Right(head)
-    requireUniqueDvTargets(live, affected)
-    // merge-on-re-delete: carry the affected targets' EXISTING positions
-    // into the superseding sidecar (the old attachment is replaced)
-    val priorPaths = affected.toSeq.flatMap(t => dvs.get(t)).distinct
-      .map(p => Paths.get(table, p).toString)
-    val prior =
-      if (priorPaths.isEmpty) matched.limit(0)
-      else spark.read.schema(DvSchema).parquet(priorPaths: _*)
-        .filter(col("target").isin(affected.toSeq: _*))
-        .select(col("target"), col("pos"))
-    val rows = matched.unionByName(prior)
-    val staged = stageDv(table,
-      rows.repartition(math.min(32, affected.size), col("target")))
-    // each target's rows hash to ONE staged sidecar; the writer reads the
-    // mapping back once (write-time data altitude, never the log fold)
-    val mapping = spark.read.schema(DvSchema)
-      .parquet(staged.map(f => Paths.get(table, f).toString): _*)
-      .withColumn("f", element_at(split(input_file_name(), "/"), -1))
-      .select("f", "target").distinct()
-      .collect().map(r => (r.getString(0), r.getString(1)))
-    cleaningUp(table, staged)(
-      commitExactly(table, head + 1)(tryCommit(table, _, Nil, Nil, dvs = mapping.toSeq)))
+
+  /** The row images both UPDATEs write, with SQL UPDATE semantics: the
+    * match flag (`cond`, evaluated into a column; [[updateWhereDv]]'s
+    * rows all match, so it passes `lit(true)`) and
+    * every SET right-hand side materialize against the OLD row before
+    * any assignment — a SET column in the predicate or in another SET's
+    * value cannot feed back — and each SET value is cast to the column's
+    * existing type. The schema is REQUIRED to survive bit-for-bit (an
+    * update must never be a stealth evolution; rename/drop/widen have
+    * their own sanctioned verbs). An UPDATE can manufacture violations,
+    * so the images pass the table's generated-column invariants and
+    * CHECK constraints like any append (round 17): SET the base column
+    * without its generated derivative and the reject names it. Every
+    * `_graft_` helper column of `rows` is dropped. */
+  private def setImages(spark: SparkSession, table: String, verb: String, base: DataFrame,
+                        rows: DataFrame, sets: Seq[(String, Column)],
+                        cond: Column): DataFrame = {
+    val valued = sets.zipWithIndex.foldLeft(rows.withColumn("_graft_match", cond)) { case (df, ((name, value), i)) =>
+      df.withColumn(s"_graft_set_$i", value.cast(base.schema(name).dataType))
+    }
+    val assigned = sets.zipWithIndex.foldLeft(valued) { case (df, ((name, _), i)) =>
+      val v = col(s"_graft_set_$i")
+      df.withColumn(name, when(col("_graft_match"), v).otherwise(col(name)))
+    }
+    val images = assigned.drop(assigned.columns.filter(_.startsWith("_graft_")).toSeq: _*)
+    require(
+      images.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
+        base.schema.fields.map(f => (f.name, f.dataType)).toSeq,
+      s"$verb must preserve the schema of $table: " +
+        s"${base.schema.simpleString} -> ${images.schema.simpleString}")
+    applyGenerated(spark, table, images, "update") // validate-only: all cols present
+    validateConstraints(spark, table, images, "update")
+    images
   }
 
   /** UPDATE WHERE ... SET as MERGE-ON-READ (round 17 — the r16
@@ -1573,10 +1602,7 @@ object CommitLog {
     * updated row images as NEW data files — the Delta merge-on-read
     * UPDATE shape. Economics: a scattered 0.1% update writes position
     * sidecars + 0.1% of the rows, never whole files. Semantics are
-    * [[updateWhere]]'s exactly: predicate AND every SET right-hand side
-    * evaluate against the OLD row, each value casts to the column's
-    * existing type, the schema must survive bit-for-bit, and the staged
-    * images pass the table's CHECK constraints. The matched scan is
+    * [[updateWhere]]'s exactly ([[setImages]]). The matched scan is
     * DV-applied (a row can never match twice), a re-update MERGES prior
     * positions into the superseding sidecar (the [[deleteWhereDv]]
     * discipline), OPTIMIZE rebases everything away, RESTORE re-emits
@@ -1587,74 +1613,18 @@ object CommitLog {
                     cond: org.apache.spark.sql.Column,
                     sets: Seq[(String, org.apache.spark.sql.Column)]): Either[Conflict, Long] = {
     require(sets.nonEmpty, s"updateWhereDv on $table: no SET clauses")
-    val head = latestVersion(table)
-    require(head >= 0, s"commit-log table $table has no commits")
-    val snap = snapshot(table, head)
-    val live = snap.live
-    if (live.isEmpty) return Right(head)
-    // stats/partition cut on the match scan (round 17, deleteWhere's
-    // rationale): only possible-match files feed the position discovery
-    val candidates = pruned(spark, table, snap, cond)
-    if (candidates.isEmpty) return Right(head)
-    val base = frame(spark, table, candidates, snap.schema)
-    sets.foreach { case (name, _) =>
-      require(base.columns.contains(name),
-        s"updateWhereDv: no column '$name' on $table (${base.columns.mkString(", ")})")
+    matchScan(spark, table, "updateWhereDv", cond, sets.map(_._1)) { (snap, base) =>
+      val tagged = positioned(spark, table, snap, base).filter(cond)
+        .localCheckpoint() // 3 consumers: census, sidecar rows, new images
+      stageDvs(spark, table, snap,
+        tagged.select(col("_graft_f").as("target"), col("_graft_pos").as("pos")))
+        .fold[Either[Conflict, Long]](Right(snap.version)) { case (staged, mapping) =>
+          val adds = stage(table,
+            setImages(spark, table, "updateWhereDv", base, tagged, sets, lit(true)))
+          cleaningUp(table, staged ++ adds)(
+            replaceFiles(table, snap.version, Nil, adds, dvs = mapping))
+        }
     }
-    base.columns.filter(_.startsWith("_graft_")).foreach { c =>
-      throw new IllegalArgumentException(
-        s"updateWhereDv: column '$c' on $table collides with the reserved " +
-          "'_graft_' helper-column prefix")
-    }
-    val dvs = snap.dvs
-    val tagged = applyDvs(spark, table, base
-      .withColumn("_graft_f", element_at(split(input_file_name(), "/"), -1))
-      .withColumn("_graft_pos", col("_metadata.row_index")), dvs)
-      .filter(cond)
-      .localCheckpoint() // 3 consumers: census, sidecar rows, new images
-    val affected = tagged.select("_graft_f").distinct()
-      .collect().map(_.getString(0)).toSet // catalog-bounded driver metadata
-    if (affected.isEmpty) return Right(head)
-    requireUniqueDvTargets(live, affected)
-    // (a) the position sidecars — matched rows plus the affected
-    // targets' existing positions (merge-on-re-update)
-    val matched = tagged
-      .select(col("_graft_f").as("target"), col("_graft_pos").as("pos"))
-    val priorPaths = affected.toSeq.flatMap(t => dvs.get(t)).distinct
-      .map(p => Paths.get(table, p).toString)
-    val prior =
-      if (priorPaths.isEmpty) matched.limit(0)
-      else spark.read.schema(DvSchema).parquet(priorPaths: _*)
-        .filter(col("target").isin(affected.toSeq: _*))
-        .select(col("target"), col("pos"))
-    val staged = stageDv(table, matched.unionByName(prior)
-      .repartition(math.min(32, affected.size), col("target")))
-    val mapping = spark.read.schema(DvSchema)
-      .parquet(staged.map(f => Paths.get(table, f).toString): _*)
-      .withColumn("f", element_at(split(input_file_name(), "/"), -1))
-      .select("f", "target").distinct()
-      .collect().map(r => (r.getString(0), r.getString(1)))
-    // (b) the updated images: OLD-row semantics — all SET values
-    // materialize before any assignment
-    val valued = sets.zipWithIndex.foldLeft(tagged) {
-      case (df, ((name, value), i)) =>
-        df.withColumn(s"_graft_set_$i", value.cast(base.schema(name).dataType))
-    }
-    val assigned = sets.zipWithIndex.foldLeft(valued) {
-      case (df, ((name, _), i)) => df.withColumn(name, col(s"_graft_set_$i"))
-    }
-    val images = assigned.drop(
-      "_graft_f" +: "_graft_pos" +: sets.indices.map(i => s"_graft_set_$i"): _*)
-    require(
-      images.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
-        base.schema.fields.map(f => (f.name, f.dataType)).toSeq,
-      s"updateWhereDv must preserve the schema of $table: " +
-        s"${base.schema.simpleString} -> ${images.schema.simpleString}")
-    applyGenerated(spark, table, images, "update") // validate-only: all cols present
-    validateConstraints(spark, table, images, "update")
-    val adds = stage(table, images)
-    cleaningUp(table, staged ++ adds)(
-      commitExactly(table, head + 1)(tryCommit(table, _, adds, Nil, dvs = mapping.toSeq)))
   }
 
   /** CLUSTERED OPTIMIZE (round 14) — the `OPTIMIZE ... ZORDER BY`
@@ -1668,25 +1638,14 @@ object CommitLog {
     * zone maps zorder_plan emits as an audit become the actual parquet
     * footers a scan planner prunes with). Same verb economics as
     * [[compact]]: an OPTIMIZE commits removes+adds serializably and
-    * never changes row content. */
+    * never changes row content; the recomputed stats are what the
+    * disjoint key ranges buy readWhere's min/max pruning. */
   def compactClustered(spark: SparkSession, table: String,
                        key: DataFrame => org.apache.spark.sql.Column,
                        targetFiles: Int): Either[Conflict, Long] = {
-    val head = latestVersion(table)
-    require(head >= 0, s"commit-log table $table has no commits")
-    val current = liveFiles(table, head)
-    if (current.isEmpty) return replaceFiles(table, head, Nil, Nil)
-    val cur = read(spark, table, Some(head))
-    val clustered = cur
-      .repartitionByRange(targetFiles, key(cur))
-      .sortWithinPartitions(key(cur))
-    val adds = stage(table, clustered)
-    // the clustered layout exists FOR data skipping — recompute per-file
-    // stats on the rewrite (the Delta OPTIMIZE behavior; round 15): the
-    // disjoint key ranges this verb creates are exactly what readWhere's
-    // min/max pruning buys the most from
-    cleaningUp(table, adds)(replaceFiles(table, head, current, adds,
-      statsFor(spark, table, adds)))
+    val snap = pinned(table)
+    rewriteFiles(spark, table, snap, snap.live)(cur =>
+      cur.repartitionByRange(targetFiles, key(cur)).sortWithinPartitions(key(cur)))
   }
 
   /** UPDATE WHERE ... SET through the log (round 14) — the last DML
@@ -1698,81 +1657,19 @@ object CommitLog {
     * matched rows transformed, the rest verbatim), and removes+adds
     * commit together serializably. Untouched files are never rewritten
     * — the [[deleteWhere]] economics: a predicate touching 0.1% of
-    * files rewrites 0.1% of the table. SQL UPDATE semantics: the
-    * predicate AND every SET right-hand side evaluate against the OLD
-    * row (both materialize before any assignment — a SET column in the
-    * predicate or in another SET's value cannot feed back), and each
-    * SET value is cast to
-    * the column's existing type — the schema is REQUIRED to survive
-    * bit-for-bit (an update must never be a stealth evolution; rename/
-    * drop/widen have their own sanctioned verbs). A predicate matching
+    * files rewrites 0.1% of the table. SQL UPDATE semantics, the
+    * schema kept bit-for-bit ([[setImages]]). A predicate matching
     * nothing commits NOTHING and returns Right(head) (the no-op
     * convention shared with delete). */
   def updateWhere(spark: SparkSession, table: String, cond: org.apache.spark.sql.Column,
                   sets: Seq[(String, org.apache.spark.sql.Column)]): Either[Conflict, Long] = {
     require(sets.nonEmpty, s"updateWhere on $table: no SET clauses")
-    val head = latestVersion(table)
-    require(head >= 0, s"commit-log table $table has no commits")
-    val snap = snapshot(table, head)
-    val live = snap.live
-    if (live.isEmpty) return Right(head)
-    // stats/partition cut on the match scan (round 17, deleteWhere's
-    // rationale): only possible-match files feed the rewrite discovery
-    val candidates = pruned(spark, table, snap, cond)
-    if (candidates.isEmpty) return Right(head)
-    val base = frame(spark, table, candidates, snap.schema)
-    sets.foreach { case (name, _) =>
-      require(base.columns.contains(name),
-        s"updateWhere: no column '$name' on $table (${base.columns.mkString(", ")})")
+    matchScan(spark, table, "updateWhere", cond, sets.map(_._1)) { (snap, base) =>
+      val (tagged, paths, affected) = cowScan(spark, table, snap, base)(_.filter(cond))
+      if (affected.isEmpty) Right(snap.version)
+      else rewriteCommit(table, snap, affected, setImages(spark, table, "updateWhere", base,
+        tagged.filter(col("_graft_file").isin(paths: _*)), sets, cond))
     }
-    // the rewrite's helper columns (_graft_file/_graft_match/_graft_set_N)
-    // would silently shadow same-named user columns and then trip the
-    // schema-preservation check with a misleading message — name the real
-    // cause up front (r14 advice; the unknown-SET-column loud-failure
-    // convention)
-    base.columns.filter(_.startsWith("_graft_")).foreach { c =>
-      throw new IllegalArgumentException(
-        s"updateWhere: column '$c' on $table collides with the reserved " +
-          "'_graft_' helper-column prefix")
-    }
-    // DV-applied scan (round 16): an UPDATE rewrite must not resurrect
-    // merge-on-read-deleted rows of an affected file
-    val tagged = applyDvs(spark, table,
-      base.withColumn("_graft_file", input_file_name()), snap.dvs)
-    val affectedPaths = tagged.filter(cond).select("_graft_file")
-      .distinct().collect().map(_.getString(0)).toSet
-    val affected = affectedOf(live, affectedPaths)
-    if (affected.isEmpty) return Right(head)
-    // flag AND all SET values materialize first: both the predicate and
-    // every SET right-hand side see the OLD row (standard UPDATE
-    // semantics — a later SET must not read an earlier SET's result)
-    val flagged = tagged
-      .filter(col("_graft_file").isin(affectedPaths.toSeq: _*))
-      .withColumn("_graft_match", cond)
-    val valued = sets.zipWithIndex.foldLeft(flagged) {
-      case (df, ((name, value), i)) =>
-        df.withColumn(s"_graft_set_$i", value.cast(base.schema(name).dataType))
-    }
-    val assigned = sets.zipWithIndex.foldLeft(valued) {
-      case (df, ((name, _), i)) =>
-        df.withColumn(name,
-          when(col("_graft_match"), col(s"_graft_set_$i")).otherwise(col(name)))
-    }
-    val updated = assigned.drop(
-      "_graft_file" +: "_graft_match" +: sets.indices.map(i => s"_graft_set_$i"): _*)
-    require(
-      updated.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
-        base.schema.fields.map(f => (f.name, f.dataType)).toSeq,
-      s"updateWhere must preserve the schema of $table: " +
-        s"${base.schema.simpleString} -> ${updated.schema.simpleString}")
-    // an UPDATE can manufacture violations — the rewritten images must
-    // pass the table's CHECK constraints AND generated-column
-    // invariants like any append (round 17): SET the base column
-    // without its generated derivative and the reject names it
-    applyGenerated(spark, table, updated, "update") // validate-only
-    validateConstraints(spark, table, updated, "update")
-    val adds = stage(table, updated)
-    cleaningUp(table, adds)(replaceFiles(table, head, affected, adds))
   }
 
   /** MERGE INTO through the log (round 17) — the upsert verb as a
@@ -1800,42 +1697,30 @@ object CommitLog {
     * (the no-op convention). */
   def mergeInto(spark: SparkSession, table: String, source: DataFrame,
                 key: String): Either[Conflict, Long] = {
-    val head = latestVersion(table)
-    require(head >= 0, s"commit-log table $table has no commits")
-    if (source.isEmpty) return Right(head)
-    val snap = snapshot(table, head)
-    val live = snap.live
+    val snap = pinned(table)
+    if (source.isEmpty) return Right(snap.version)
     // generated columns materialize-or-validate on the source up front
     // (round 17): an omitted gencol fills in, a wrong one fails loudly
     val source1 = applyGenerated(spark, table, source, "merge")
     val dups = source1.groupBy(key).count().filter(col("count") > 1).limit(1).count()
     require(dups == 0L, s"mergeInto: source has duplicate '$key' keys")
     // no live rows: every source row inserts — one append-shaped commit
-    if (live.isEmpty) {
+    if (snap.live.isEmpty) {
       validateConstraints(spark, table, source1, "merge")
-      val adds = stage(table, source1)
-      return cleaningUp(table, adds)(replaceFiles(table, head, Nil, adds))
+      return rewriteCommit(table, snap, Nil, source1)
     }
-    val base = frame(spark, table, live, snap.schema)
+    val base = frame(spark, table, snap.live, snap.schema)
     require(source1.columns.sorted.sameElements(base.columns.sorted),
       s"mergeInto: source columns (${source1.columns.sorted.mkString(", ")}) " +
         s"must match $table's (${base.columns.sorted.mkString(", ")})")
-    base.columns.filter(_.startsWith("_graft_")).foreach { c =>
-      throw new IllegalArgumentException(
-        s"mergeInto: column '$c' on $table collides with the reserved " +
-          "'_graft_' helper-column prefix")
-    }
+    requireNoHelperCols("mergeInto", table, base.columns)
     // align + cast the source image to the target schema once; both the
     // affected-file rewrite and the insert set read this frame
     val src = base.schema.fields.foldLeft(source1) { (df, f) =>
       df.withColumn(f.name, col(f.name).cast(f.dataType))
     }.select(base.columns.map(col): _*).localCheckpoint()
-    val tagged = applyDvs(spark, table,
-      base.withColumn("_graft_file", input_file_name()), snap.dvs)
-    val srcKeys = src.select(col(key)).distinct()
-    val affectedPaths = tagged.join(srcKeys, Seq(key), "left_semi")
-      .select("_graft_file").distinct().collect().map(_.getString(0)).toSet
-    val affected = affectedOf(live, affectedPaths)
+    val (tagged, paths, affected) = cowScan(spark, table, snap, base)(
+      _.join(src.select(col(key)).distinct(), Seq(key), "left_semi"))
     // matched rows take the source image column-by-column; a left join
     // against the key-unique source makes the match flag per target row
     val others = base.columns.filterNot(_ == key)
@@ -1845,7 +1730,7 @@ object CommitLog {
     val rewritten =
       if (affected.isEmpty) None
       else {
-        val aff = tagged.filter(col("_graft_file").isin(affectedPaths.toSeq: _*))
+        val aff = tagged.filter(col("_graft_file").isin(paths: _*))
           .join(srcPref, Seq(key), "left")
         val merged = others.foldLeft(aff) { (df, c) =>
           df.withColumn(c, when(coalesce(col("_graft_m"), lit(false)),
@@ -1857,13 +1742,9 @@ object CommitLog {
     // pruned scan), not just the affected files
     val inserts = src.join(tagged.select(col(key)), Seq(key), "left_anti")
       .select(base.columns.map(col): _*)
-    val staged = rewritten match {
-      case Some(r) => r.unionByName(inserts)
-      case None => inserts
-    }
+    val staged = rewritten.fold(inserts)(_.unionByName(inserts))
     validateConstraints(spark, table, staged, "merge")
-    val adds = stage(table, staged)
-    cleaningUp(table, adds)(replaceFiles(table, head, affected, adds))
+    rewriteCommit(table, snap, affected, staged)
   }
 
   /** RENAME COLUMN (round 14 — the non-widening half of schema
@@ -2074,7 +1955,7 @@ object CommitLog {
     * mid-commit is never swept: its files are seconds old, an orphan from
     * a lost race has been sitting since the race. Deletion-vector
     * sidecars are swept under the same age gate (r16 advice: a crash
-    * between stageDv and tryCommit used to leak `*-dv-*.parquet`
+    * between staging a sidecar and tryCommit used to leak `*-dv-*.parquet`
     * forever — no commit references it and the part-file pattern
     * deliberately excluded the dv name shape). */
   def orphanFiles(table: String, minAgeMs: Long): Seq[String] = {
@@ -2160,17 +2041,29 @@ object CommitLog {
     * row, now owned by the table format instead of bare parquet. */
   def compact(spark: SparkSession, table: String,
               targetFiles: Int = 1): Either[Conflict, Long] = {
-    val head = latestVersion(table)
-    require(head >= 0, s"commit-log table $table has no commits")
-    val current = liveFiles(table, head)
-    // a table whose commits reference no data files (all-empty appends)
-    // compacts to an empty commit — read() would hand back a schemaless
-    // frame that parquet can't re-write
-    if (current.isEmpty) return replaceFiles(table, head, Nil, Nil)
-    val adds = stage(table, read(spark, table, Some(head)).repartition(targetFiles))
-    // stats survive compaction too (the Delta OPTIMIZE behavior) — a
-    // maintenance verb must never silently degrade future reads
-    cleaningUp(table, adds)(replaceFiles(table, head, current, adds,
+    val snap = pinned(table)
+    rewriteFiles(spark, table, snap, snap.live)(_.repartition(targetFiles))
+  }
+
+  /** The OPTIMIZE body [[compact]], [[compactWhere]] and
+    * [[compactClustered]] share: `files`' DV-applied rows, laid out by
+    * `layout`, staged and committed in their place at head+1 (or the
+    * [[Conflict]]) — their DV attachments clear with the removes.
+    * Stats recompute on the rewrite (the Delta OPTIMIZE behavior): a
+    * maintenance verb must never silently degrade future reads. No
+    * files commits an empty version — a table whose commits reference
+    * no data files (all-empty appends) has no schema parquet could
+    * re-write. DVs attach by basename, as [[applyDvs]] matches them: a
+    * clone's DV verbs key a cloned-in `<rel>/<name>` entry by `<name>`. */
+  private def rewriteFiles(spark: SparkSession, table: String, snap: Snapshot,
+                           files: Seq[String])
+                          (layout: DataFrame => DataFrame): Either[Conflict, Long] = {
+    if (files.isEmpty) return replaceFiles(table, snap.version, Nil, Nil)
+    val keep = files.map(baseName).toSet
+    val rows = applyDvs(spark, table, frame(spark, table, files, snap.schema),
+      snap.dvs.filter { case (t, _) => keep(baseName(t)) })
+    val adds = stage(table, layout(rows))
+    cleaningUp(table, adds)(replaceFiles(table, snap.version, files, adds,
       statsFor(spark, table, adds)))
   }
 
@@ -2190,17 +2083,10 @@ object CommitLog {
   def compactWhere(spark: SparkSession, table: String,
                    cond: org.apache.spark.sql.Column,
                    targetFiles: Int = 1): Either[Conflict, Long] = {
-    val head = latestVersion(table)
-    require(head >= 0, s"commit-log table $table has no commits")
-    val snap = snapshot(table, head)
+    val snap = pinned(table)
     val selected = pruned(spark, table, snap, cond)
-    if (selected.isEmpty) return Right(head)
-    val selectedSet = selected.toSet
-    val dvApplied = applyDvs(spark, table, frame(spark, table, selected, snap.schema),
-      snap.dvs.filter { case (t, _) => selectedSet.contains(t) })
-    val adds = stage(table, dvApplied.repartition(targetFiles))
-    cleaningUp(table, adds)(replaceFiles(table, head, selected, adds,
-      statsFor(spark, table, adds)))
+    if (selected.isEmpty) Right(snap.version)
+    else rewriteFiles(spark, table, snap, selected)(_.repartition(targetFiles))
   }
 
   /** INCREMENTAL (streaming-source) read: the rows the commits in
