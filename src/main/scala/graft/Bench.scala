@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
   * write so the full plan executes — `count()` would let Catalyst prune
   * computed columns out of the plan and under-report. One warmup pass over
   * the whole suite (JVM/JIT + codegen), then each query is timed
-  * REPEAT times (default 3, `--repeat N` or SPARK_GRAFT_REPEAT) and the
+  * REPEAT times (`--repeat N`, default 3) and the
   * MEDIAN is reported (plus the per-query MIN in `queries_min` — the
   * noise-floor number cross-round diffs should compare, since medians
   * still absorb this box's 33% same-code drift): single-pass suite
@@ -78,7 +78,7 @@ object Bench {
       }
     }
 
-    // --repeat N / --repeat=N (or SPARK_GRAFT_REPEAT) controls timed passes
+    // --repeat N / --repeat=N controls timed passes
     // per query; malformed values fall back to the default rather than
     // killing the run before any timing happens
     val (repeatArg, nameArgs) = {
@@ -94,7 +94,7 @@ object Bench {
       }
       (rep, names.result())
     }
-    val repeat = repeatArg.orElse(sys.env.get("SPARK_GRAFT_REPEAT"))
+    val repeat = repeatArg
       .flatMap(s => scala.util.Try(s.trim.toInt).toOption)
       .getOrElse(3).max(1)
     // a typo'd name must surface in "errors", not silently shrink the run

@@ -236,6 +236,7 @@ object CommitLog {
                               ctsMax: Long = -1L) {
     def live: Vector[String] = files.keys.toVector
     def schema: Option[StructType] = meta.map(decodeSchema)
+    def txn(app: String): Long = txns.getOrElse(app, -1L)
     def asCommit: Commit = Commit(version, live, Vector.empty,
       txns.toVector, meta, files.collect { case (f, Some(st)) => f -> st },
       Some(ctsMax).filter(_ >= 0), dvs.toVector.map(_.swap),
@@ -254,15 +255,26 @@ object CommitLog {
     gencols = s.gencols ++ c.gencols -- c.gencolRms,
     ctsMax = c.ctsMillis.fold(s.ctsMax)(math.max(s.ctsMax, _)))
 
-  /** The folded state at `asOf` (empty below version 0): starts at the
-    * newest checkpoint ≤ asOf when that one is complete (v2), at
-    * genesis otherwise, and replays only the commit suffix —
-    * O(suffix) log reads. */
-  private def snapshot(table: String, asOf: Long): Snapshot = {
-    val start = latestCheckpoint(table, asOf).flatMap(readCheckpoint(table, _))
+  /** The folded state at `asOf` (empty below version 0): the newest
+    * checkpoint ≤ asOf [[advance]]d to asOf — O(suffix) log reads. */
+  private def snapshot(table: String, asOf: Long): Snapshot =
+    advance(table, checkpointed(table, asOf), asOf)
+
+  /** The newest checkpoint ≤ asOf when that one is complete (v2), else
+    * the empty state before genesis. */
+  private def checkpointed(table: String, asOf: Long): Snapshot =
+    latestCheckpoint(table, asOf).flatMap(readCheckpoint(table, _))
       .fold(Snapshot())(fold(Snapshot(), _))
-    ((start.version + 1) to asOf).foldLeft(start)((s, v) => fold(s, commits0(table, v)))
-  }
+
+  /** `s` with the commits in `(s.version, to]` folded onto it. */
+  private def advance(table: String, s: Snapshot, to: Long): Snapshot =
+    replay(table, s, to).foldLeft(s)((_, next) => next)
+
+  /** The state after each commit in `(s.version, to]`, in version
+    * order, lazily: one commit file read per step taken. */
+  private def replay(table: String, s: Snapshot, to: Long): Iterator[Snapshot] =
+    ((s.version + 1) to to).iterator
+      .scanLeft(s)((acc, v) => fold(acc, commits0(table, v))).drop(1)
 
   /** The snapshot at `asOf`, else at the head; loud on a table with no
     * commits. */
@@ -271,6 +283,14 @@ object CommitLog {
     require(v >= 0, s"commit-log table $table has no commits")
     snapshot(table, v)
   }
+
+  /** The state at the head, empty on a table with no commits — what a
+    * write verb validates against and commits past. */
+  private def latest(table: String): Snapshot = snapshot(table, latestVersion(table))
+
+  /** A public reader's version argument: −2, its default, is the head. */
+  private def orHead(table: String, asOf: Long): Long =
+    if (asOf == -2L) latestVersion(table) else asOf
 
   /** Latest committed version, -1 for a table with no commits. */
   def latestVersion(table: String): Long = {
@@ -430,7 +450,7 @@ object CommitLog {
     // spark.read.schema silently NULL the old column's data — against
     // the fail-loud log-format convention; [[renameColumn]] /
     // [[dropColumn]] are the sanctioned copy-on-write path for those.
-    baseline.orElse(schemaAt(table)).foreach { cur =>
+    baseline.orElse(latest(table).schema).foreach { cur =>
       val newByName = schema.fields.map(f => f.name -> f).toMap
       cur.fields.foreach { old =>
         val nf = newByName.getOrElse(old.name, throw new IllegalArgumentException(
@@ -489,7 +509,7 @@ object CommitLog {
     * footers' word as before. */
   def schemaAt(table: String, asOf: Long = -2L)
       : Option[org.apache.spark.sql.types.StructType] =
-    snapshot(table, if (asOf == -2L) latestVersion(table) else asOf).schema
+    snapshot(table, orHead(table, asOf)).schema
 
   /** Snapshot-isolated read. `asOf = None` pins the latest version AT
     * CALL TIME — the returned frame never sees later commits. When the
@@ -517,61 +537,58 @@ object CommitLog {
     * there is no table state to serve there (the Delta contract).
     *
     * O(commits since the newest COMPLETE checkpoint) tiny log-file reads
-    * (round 16 — the monotonized cts is a left fold, exactly what v2
-    * checkpoints fold, the [[txnLatest]] precedent): when the
-    * checkpoint's cts-max is at or before the probe, every version ≤ cp
-    * resolves and the scan starts at cp+1. A probe BEFORE the
-    * checkpoint's cts-max needs the pre-checkpoint commit files — on a
-    * table whose early history was physically retired (the Delta
-    * log-retention analog) that resolution fails with a targeted error
-    * instead of a raw missing-file read. */
-  def versionAtTimestamp(table: String, tsMillis: Long): Long = {
+    * (round 16 — the monotonized cts is the snapshot's `ctsMax`, a left
+    * fold v2 checkpoints carry): when the checkpoint's cts-max is at or
+    * before the probe, every version ≤ cp resolves and the scan
+    * [[replay]]s from cp, stopping at the first version past the probe.
+    * A probe BEFORE the checkpoint's cts-max needs the pre-checkpoint
+    * commit files — on a table whose early history was physically
+    * retired (the Delta log-retention analog) that resolution fails with
+    * a targeted error instead of a raw missing-file read. */
+  def versionAtTimestamp(table: String, tsMillis: Long): Long =
+    atTimestamp(table, tsMillis).version
+
+  /** The state at [[versionAtTimestamp]]'s version. */
+  private def atTimestamp(table: String, tsMillis: Long): Snapshot = {
     val head = latestVersion(table)
     require(head >= 0, s"commit-log table $table has no commits")
-    val cp = latestCheckpoint(table, head)
-      .flatMap(c => readCheckpoint(table, c).flatMap(_.ctsMillis).map(c -> _))
-    var mono = -1L
-    var resolved = -1L
-    val start = cp match {
-      case Some((c, m)) if m <= tsMillis =>
-        // every version ≤ c is at-or-before the probe under monotonization
-        mono = m; resolved = c; c + 1
-      case _ => 0L
-    }
-    (start to head).foreach { v =>
-      val c =
-        try commits0(table, v)
-        catch {
-          case e: java.nio.file.NoSuchFileException =>
-            throw new IllegalStateException(
-              s"TIMESTAMP AS OF $tsMillis on $table needs commit file $v, " +
-                "which has been retired (log retention): resolution below " +
-                "the newest checkpoint's cts requires the full commit " +
-                "history", e)
-        }
-      mono = math.max(mono, c.ctsMillis.getOrElse(mono))
-      if (mono <= tsMillis) resolved = v
-    }
-    require(resolved >= 0,
+    val cp = checkpointed(table, head)
+    val start = if (cp.ctsMax <= tsMillis) cp else Snapshot()
+    val found =
+      try replay(table, start, head).takeWhile(_.ctsMax <= tsMillis).foldLeft(start)((_, s) => s)
+      catch {
+        case e: java.nio.file.NoSuchFileException =>
+          val v = Paths.get(e.getFile).getFileName.toString.stripSuffix(".json").toLong
+          throw new IllegalStateException(
+            s"TIMESTAMP AS OF $tsMillis on $table needs commit file $v, " +
+              "which has been retired (log retention): resolution below " +
+              "the newest checkpoint's cts requires the full commit " +
+              "history", e)
+      }
+    require(found.version >= 0,
       s"timestamp $tsMillis predates the first commit of $table")
-    resolved
+    found
   }
 
   /** Snapshot read at the version [[versionAtTimestamp]] resolves —
     * `SELECT … TIMESTAMP AS OF`. */
   def readAtTimestamp(spark: SparkSession, table: String,
-                      tsMillis: Long): DataFrame =
-    read(spark, table, Some(versionAtTimestamp(table, tsMillis)))
+                      tsMillis: Long): DataFrame = {
+    val s = atTimestamp(table, tsMillis)
+    readAt(spark, table, s, s.schema)
+  }
 
   /** `s`'s live files read under `schema`, deletion vectors applied. */
   private def readAt(spark: SparkSession, table: String, s: Snapshot,
                      schema: Option[StructType]): DataFrame =
     applyDvs(spark, table, frame(spark, table, s.live, schema), s.dvs)
 
-  /** A frame over the table's data `files` under `schema`, else under
-    * the first file's footer ([[ParquetFooter.footerSchema]], the file
-    * Spark's non-merging inference would read, without its Spark job);
-    * no files gives an empty frame of that schema. */
+  /** A frame over the table's data `files` under `schema` — a verb that
+    * already resolved its read schema ([[pruned]]) passes it, so no read
+    * reads a footer twice — else under the first file's footer
+    * ([[ParquetFooter.footerSchema]], the file Spark's non-merging
+    * inference would read, without its Spark job); no files gives an
+    * empty frame of `schema`. */
   private def frame(spark: SparkSession, table: String, files: Seq[String],
                     schema: Option[StructType]): DataFrame = {
     val paths = files.map(f => Paths.get(table, f).toString)
@@ -888,29 +905,32 @@ object CommitLog {
     * driver-probe class; 100 TB of data files never move. */
   def prunedLiveFiles(spark: SparkSession, table: String, cond: Column,
                       asOf: Option[Long] = None): Seq[String] =
-    pruned(spark, table, pinned(table, asOf), cond)
+    pruned(spark, table, pinned(table, asOf), cond)._2
 
+  /** [[prunedLiveFiles]] of `s`, with the read schema it pruned under:
+    * `s`'s committed schema, else the first live file's footer — read
+    * once here, and handed on to [[frame]] by every pruned read. */
   private def pruned(spark: SparkSession, table: String, s: Snapshot,
-                     cond: Column): Seq[String] = {
+                     cond: Column): (Option[StructType], Seq[String]) = {
     val adds = s.files.toVector
-    if (adds.isEmpty) return Nil
+    if (adds.isEmpty) return (s.schema, Nil)
     val schema = s.schema.getOrElse(
       ParquetFooter.footerSchema(spark, Paths.get(table, adds.head._1).toString))
     val eligible = schema.fields.filter(statsEligible).map(_.name).toSet
     val condE = resolvedPredicate(spark, schema, cond)
-    if (eligible.isEmpty || condE.isEmpty) return adds.map(_._1)
+    if (eligible.isEmpty || condE.isEmpty) return (Some(schema), adds.map(_._1))
     val possible = possibleCol(condE.get, eligible)
     val dec = java.util.Base64.getDecoder
     import spark.implicits._
     val rows = adds.map { case (f, st) =>
       (f, st.map(b64 => new String(dec.decode(b64), "UTF-8")).orNull)
     }
-    rows.toDF("file", "js")
+    (Some(schema), rows.toDF("file", "js")
       .withColumn("st", from_json(col("js"), statsStruct(schema)))
       .select(col("file"), col("st.n").as("n"), col("st.min").as("min"),
         col("st.max").as("max"), col("st.nulls").as("nulls"))
       .filter(possible)
-      .select("file").collect().map(_.getString(0)).toSeq
+      .select("file").collect().map(_.getString(0)).toSeq)
   }
 
   /** Data-skipping snapshot read (round 15 — Delta's stats-based file
@@ -951,22 +971,23 @@ object CommitLog {
     * gram-index probe — the row-level residual is pure waste (and a
     * many-band OR residual would blow past the codegen method limit
     * into interpreted per-row evaluation); the join discards the
-    * non-matching rows anyway. Deletion vectors still apply. */
+    * non-matching rows anyway. Deletion vectors still apply. The frame
+    * is served under the schema [[pruned]] resolved, so a table with no
+    * committed schema reads one footer per call. */
   def readPruned(spark: SparkSession, table: String, cond: Column,
                  asOf: Option[Long] = None): DataFrame = {
     val s = pinned(table, asOf)
-    val kept = pruned(spark, table, s, cond)
-    val base = (kept.isEmpty, s.schema) match {
-      case (true, None) =>
-        // every file pruned on a footer-schema table: serve the schema
-        // from one live footer, zero rows (limit 0 reads no row groups)
-        frame(spark, table, s.live.take(1), None).limit(0)
-      case _ => frame(spark, table, kept, s.schema)
-    }
+    val (schema, kept) = pruned(spark, table, s, cond)
+    // every file pruned on a footer-schema table: zero rows of a parquet
+    // read (limit 0 reads no row groups), whose fields read back nullable
+    // as any parquet read's do — the footer may mark them REQUIRED
+    val base =
+      if (kept.isEmpty && s.schema.isEmpty) frame(spark, table, s.live.take(1), schema).limit(0)
+      else frame(spark, table, kept, schema)
     // a DV'd file's stats describe a SUPERSET of its live rows (min/max
-    // over pre-delete content) — pruning stays sound, merely less tight
-    if (base.columns.isEmpty) base
-    else applyDvs(spark, table, base, s.dvs)
+    // over pre-delete content) — pruning stays sound, merely less tight;
+    // a frame over no kept file has no rows to drop, and no `_metadata`
+    if (kept.isEmpty) base else applyDvs(spark, table, base, s.dvs)
   }
 
   // ------------------------------------------------ CHECK constraints
@@ -975,7 +996,7 @@ object CommitLog {
     * (round 17 — Delta's public constraints surface, the enforcement
     * half of the expectations_report advisor). */
   def constraintsAt(table: String, asOf: Long = -2L): Map[String, String] =
-    decodedSql(snapshot(table, if (asOf == -2L) latestVersion(table) else asOf).constraints)
+    decodedSql(snapshot(table, orHead(table, asOf)).constraints)
 
   private def decodedSql(byName: VectorMap[String, String]): Map[String, String] =
     byName.map { case (n, b64) =>
@@ -989,10 +1010,11 @@ object CommitLog {
     * violation fails LOUDLY with the per-constraint census before
     * anything stages. A predicate that no longer RESOLVES against the
     * frame (a column the writer lacks) is equally loud — silently
-    * passing it would turn every later read into a lie. */
-  private def validateConstraints(spark: SparkSession, table: String,
+    * passing it would turn every later read into a lie. The
+    * constraints are `snap`'s, the verb's own snapshot. */
+  private def validateConstraints(spark: SparkSession, table: String, snap: Snapshot,
                                   df: DataFrame, verb: String): Unit = {
-    val entries = constraintsAt(table).toSeq
+    val entries = decodedSql(snap.constraints).toSeq
     if (entries.isEmpty || df.columns.isEmpty) return
     val aggs = entries.map { case (n, sql) =>
       val pred =
@@ -1033,11 +1055,10 @@ object CommitLog {
                     name: String, exprSql: String): Either[Conflict, Long] = {
     require(name.matches("[A-Za-z0-9_]+"),
       s"constraint name must be [A-Za-z0-9_]+, got '$name'")
-    val head = latestVersion(table)
-    require(head >= 0, s"commit-log table $table has no commits")
-    require(!constraintsAt(table, head).contains(name),
+    val snap = pinned(table)
+    require(!snap.constraints.contains(name),
       s"constraint '$name' already exists on $table")
-    val cur = read(spark, table, Some(head))
+    val cur = readAt(spark, table, snap, snap.schema)
     if (cur.columns.nonEmpty) {
       try cur.filter(expr(exprSql)).queryExecution.analyzed // resolution probe
       catch {
@@ -1050,18 +1071,18 @@ object CommitLog {
     }
     val b64 = java.util.Base64.getEncoder
       .encodeToString(exprSql.getBytes("UTF-8"))
-    commitExactly(table, head + 1)(tryCommit(table, _, Nil, Nil, constraints = Seq(name -> b64)))
+    commitExactly(table, snap.version + 1)(
+      tryCommit(table, _, Nil, Nil, constraints = Seq(name -> b64)))
   }
 
   /** DROP CONSTRAINT — a metadata action; fails loudly on an unknown
     * name (the fail-loud convention: a typo'd drop must not silently
     * leave enforcement on). */
   def dropConstraint(table: String, name: String): Either[Conflict, Long] = {
-    val head = latestVersion(table)
-    require(head >= 0, s"commit-log table $table has no commits")
-    require(constraintsAt(table, head).contains(name),
-      s"no constraint '$name' on $table")
-    commitExactly(table, head + 1)(tryCommit(table, _, Nil, Nil, constraintRms = Seq(name)))
+    val snap = pinned(table)
+    require(snap.constraints.contains(name), s"no constraint '$name' on $table")
+    commitExactly(table, snap.version + 1)(
+      tryCommit(table, _, Nil, Nil, constraintRms = Seq(name)))
   }
 
   // ------------------------------------------------ generated columns
@@ -1070,7 +1091,7 @@ object CommitLog {
     * expression text (round 17 — Delta's public generated-columns
     * surface; same metadata fold as [[constraintsAt]]). */
   def generatedAt(table: String, asOf: Long = -2L): Map[String, String] =
-    decodedSql(snapshot(table, if (asOf == -2L) latestVersion(table) else asOf).gencols)
+    decodedSql(snapshot(table, orHead(table, asOf)).gencols)
 
   /** The write-side half of generated columns: a frame LACKING a
     * generated column gets it MATERIALIZED from the expression (the
@@ -1080,10 +1101,11 @@ object CommitLog {
     * wrong values would silently break every downstream consumer that
     * trusts the invariant, so it fails loudly instead). Returns the
     * possibly-augmented frame; every write verb routes its staged rows
-    * through here before constraints validate. */
-  private def applyGenerated(spark: SparkSession, table: String,
+    * through here, with its own snapshot `snap`, before constraints
+    * validate. */
+  private def applyGenerated(spark: SparkSession, table: String, snap: Snapshot,
                              df: DataFrame, verb: String): DataFrame = {
-    val gens = generatedAt(table).toSeq
+    val gens = decodedSql(snap.gencols).toSeq
     if (gens.isEmpty || df.columns.isEmpty) return df
     gens.foldLeft(df) { case (d, (name, sql)) =>
       val e =
@@ -1120,11 +1142,10 @@ object CommitLog {
                          name: String, exprSql: String): Either[Conflict, Long] = {
     require(name.matches("[A-Za-z0-9_]+"),
       s"generated column name must be [A-Za-z0-9_]+, got '$name'")
-    val head = latestVersion(table)
-    require(head >= 0, s"commit-log table $table has no commits")
-    require(!generatedAt(table, head).contains(name),
+    val snap = pinned(table)
+    require(!snap.gencols.contains(name),
       s"generated column '$name' already exists on $table")
-    val cur = read(spark, table, Some(head))
+    val cur = readAt(spark, table, snap, snap.schema)
     if (cur.columns.nonEmpty) {
       require(cur.columns.contains(name),
         s"addGeneratedColumn: no column '$name' on $table " +
@@ -1144,18 +1165,18 @@ object CommitLog {
     }
     val b64 = java.util.Base64.getEncoder
       .encodeToString(exprSql.getBytes("UTF-8"))
-    commitExactly(table, head + 1)(tryCommit(table, _, Nil, Nil, gencols = Seq(name -> b64)))
+    commitExactly(table, snap.version + 1)(
+      tryCommit(table, _, Nil, Nil, gencols = Seq(name -> b64)))
   }
 
   /** DROP a generated-column definition (metadata only — the column and
     * its data stay; only the write-side materialize/validate contract
     * ends). Loud on an unknown name. */
   def dropGeneratedColumn(table: String, name: String): Either[Conflict, Long] = {
-    val head = latestVersion(table)
-    require(head >= 0, s"commit-log table $table has no commits")
-    require(generatedAt(table, head).contains(name),
-      s"no generated column '$name' on $table")
-    commitExactly(table, head + 1)(tryCommit(table, _, Nil, Nil, gencolRms = Seq(name)))
+    val snap = pinned(table)
+    require(snap.gencols.contains(name), s"no generated column '$name' on $table")
+    commitExactly(table, snap.version + 1)(
+      tryCommit(table, _, Nil, Nil, gencolRms = Seq(name)))
   }
 
   /** Stage a frame's rows as immutable data files in the table directory
@@ -1265,7 +1286,7 @@ object CommitLog {
                         maxRetries: Int = 50,
                         ctsMillis: Option[Long] = None,
                         withStats: Boolean = false): (Long, Int) = {
-    val (adds, stats) = stageAppend(spark, table, df, "append", Nil, withStats)
+    val (adds, stats) = stageAppend(spark, table, latest(table), df, "append", Nil, withStats)
     commitNext(table, "append", maxRetries)(
       tryCommit(table, _, adds, Nil, addStats = stats, ctsMillis = ctsMillis))
   }
@@ -1276,16 +1297,17 @@ object CommitLog {
     * must exist and, since the router adds `_graft_p_*` columns, no
     * column may carry the helper prefix; CHECK constraints validate
     * before anything stages. Stats ride when asked for, and always on a
-    * partitioned write (they ARE its pruning payload). Returns the staged
-    * files and their stats. */
-  private def stageAppend(spark: SparkSession, table: String, df: DataFrame,
+    * partitioned write (they ARE its pruning payload). Generated columns
+    * and constraints are `snap`'s. Returns the staged files and their
+    * stats. */
+  private def stageAppend(spark: SparkSession, table: String, snap: Snapshot, df: DataFrame,
                           verb: String, partCols: Seq[String],
                           withStats: Boolean): (Seq[String], Map[String, String]) = {
-    val gdf = applyGenerated(spark, table, df, "append")
+    val gdf = applyGenerated(spark, table, snap, df, "append")
     partCols.foreach(c => require(gdf.columns.contains(c),
       s"$verb: no partition column '$c' (${gdf.columns.mkString(", ")})"))
     if (partCols.nonEmpty) requireNoHelperCols(verb, table, gdf.columns)
-    validateConstraints(spark, table, gdf, "append")
+    validateConstraints(spark, table, snap, gdf, "append")
     val adds = stageAs(table, gdf, "part", partCols)
     (adds, if (withStats || partCols.nonEmpty) statsFor(spark, table, adds) else Map.empty)
   }
@@ -1338,8 +1360,8 @@ object CommitLog {
                         partCols: Seq[String], maxRetries: Int = 50,
                         ctsMillis: Option[Long] = None): Long = {
     require(partCols.nonEmpty, "appendPartitioned: no partition columns")
-    val (adds, stats) =
-      stageAppend(spark, table, df, "appendPartitioned", partCols, withStats = true)
+    val (adds, stats) = stageAppend(spark, table, latest(table), df, "appendPartitioned",
+      partCols, withStats = true)
     commitNext(table, "appendPartitioned", maxRetries)(
       tryCommit(table, _, adds, Nil, addStats = stats, ctsMillis = ctsMillis))._1
   }
@@ -1351,8 +1373,7 @@ object CommitLog {
     * fold into checkpoints (round 14 — the Delta design), so the sink is
     * O(suffix) from any checkpoint instead of O(commits). */
   def txnLatest(table: String, appId: String, asOf: Long = -2L): Long =
-    snapshot(table, if (asOf == -2L) latestVersion(table) else asOf)
-      .txns.getOrElse(appId, -1L)
+    snapshot(table, orHead(table, asOf)).txn(appId)
 
   /** EXACTLY-ONCE append for a replayable writer (the idempotent
     * streaming-sink primitive, Delta's txnAppId/txnVersion design): the
@@ -1364,31 +1385,34 @@ object CommitLog {
     * same put-if-absent total order, so two concurrent deliveries of one
     * batch can never both land: whichever loses the version race
     * re-reads a head that already contains the winner's txn. Requires
-    * txnVersion to be MONOTONE per appId (a streaming batchId is). */
+    * txnVersion to be MONOTONE per appId (a streaming batchId is). The
+    * log folds once, before staging; each attempt lists the head and
+    * [[advance]]s over only the commits that landed since. */
   def appendIdempotent(spark: SparkSession, table: String, df: DataFrame,
                        appId: String, txnVersion: Long,
                        maxRetries: Int = 50,
                        withStats: Boolean = false,
                        partitionBy: Seq[String] = Nil): Option[Long] = {
-    if (txnLatest(table, appId) >= txnVersion) return None
+    var snap = latest(table)
+    if (snap.txn(appId) >= txnVersion) return None
     // partitionBy (round 17): a streaming sink lands value-pure
     // partition files exactly-once under the txn watermark; stats ride
     // the sink's adds too (the streaming maintainer's gram index prunes
     // its per-batch probe on them)
     val (adds, stats) =
-      stageAppend(spark, table, df, "appendIdempotent", partitionBy, withStats)
+      stageAppend(spark, table, snap, df, "appendIdempotent", partitionBy, withStats)
     var tries = 0
     while (true) {
-      val head = latestVersion(table)
-      if (txnLatest(table, appId, head) >= txnVersion) {
+      snap = advance(table, snap, latestVersion(table))
+      if (snap.txn(appId) >= txnVersion) {
         // duplicate delivery lost the race: drop the staged files now
         // (vacuum's orphan sweep is the crash backstop)
         adds.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
         return None
       }
-      if (tryCommit(table, head + 1, adds, Nil, Some((appId, txnVersion)),
+      if (tryCommit(table, snap.version + 1, adds, Nil, Some((appId, txnVersion)),
         addStats = stats))
-        return Some(head + 1)
+        return Some(snap.version + 1)
       tries += 1
       require(tries <= maxRetries,
         s"idempotent append lost $maxRetries commit races on $table")
@@ -1428,9 +1452,9 @@ object CommitLog {
                        (body: (Snapshot, DataFrame) => Either[Conflict, Long])
       : Either[Conflict, Long] = {
     val snap = pinned(table)
-    val candidates = pruned(spark, table, snap, cond)
+    val (schema, candidates) = pruned(spark, table, snap, cond)
     if (candidates.isEmpty) return Right(snap.version)
-    val base = frame(spark, table, candidates, snap.schema)
+    val base = frame(spark, table, candidates, schema)
     setCols.foreach(c => require(base.columns.contains(c),
       s"$verb: no column '$c' on $table (${base.columns.mkString(", ")})"))
     requireNoHelperCols(verb, table, base.columns)
@@ -1501,15 +1525,18 @@ object CommitLog {
     * invisible until a commit's dv actions reference it, and kept apart
     * from [[orphanFiles]]' part-file pattern by its name — and the
     * (sidecar, target) mapping reads back once (write-time data
-    * altitude, never the log fold). Returns the staged sidecars and
-    * that mapping. */
+    * altitude, never the log fold). Sidecar rows name their target by
+    * basename, as [[applyDvs]] matches it; the log keys each attachment
+    * by the target's live entry, which on a [[shallowClone]] is
+    * `<rel>/<name>`, so the fold's removes and restore's clears find
+    * it. Returns the staged sidecars and that mapping. */
   private def stageDvs(spark: SparkSession, table: String, snap: Snapshot,
                        matched: DataFrame): Option[(Seq[String], Seq[(String, String)])] = {
     val affected = matched.select("target").distinct()
       .collect().map(_.getString(0)).toSet
     if (affected.isEmpty) return None
-    requireUniqueDvTargets(snap.live, affected)
-    val priorPaths = affected.toSeq.flatMap(t => snap.dvs.get(t)).distinct
+    val entry = dvTargets(snap.live, affected)
+    val priorPaths = entry.values.toSeq.flatMap(snap.dvs.get).distinct
       .map(p => Paths.get(table, p).toString)
     val prior =
       if (priorPaths.isEmpty) matched.limit(0)
@@ -1522,7 +1549,7 @@ object CommitLog {
       .parquet(staged.map(f => Paths.get(table, f).toString): _*)
       .withColumn("f", element_at(split(input_file_name(), "/"), -1))
       .select("f", "target").distinct()
-      .collect().map(r => (r.getString(0), r.getString(1)))
+      .collect().map(r => (r.getString(0), entry(r.getString(1))))
     Some((staged, mapping.toSeq))
   }
 
@@ -1573,8 +1600,8 @@ object CommitLog {
     * CHECK constraints like any append (round 17): SET the base column
     * without its generated derivative and the reject names it. Every
     * `_graft_` helper column of `rows` is dropped. */
-  private def setImages(spark: SparkSession, table: String, verb: String, base: DataFrame,
-                        rows: DataFrame, sets: Seq[(String, Column)],
+  private def setImages(spark: SparkSession, table: String, snap: Snapshot, verb: String,
+                        base: DataFrame, rows: DataFrame, sets: Seq[(String, Column)],
                         cond: Column): DataFrame = {
     val valued = sets.zipWithIndex.foldLeft(rows.withColumn("_graft_match", cond)) { case (df, ((name, value), i)) =>
       df.withColumn(s"_graft_set_$i", value.cast(base.schema(name).dataType))
@@ -1589,8 +1616,8 @@ object CommitLog {
         base.schema.fields.map(f => (f.name, f.dataType)).toSeq,
       s"$verb must preserve the schema of $table: " +
         s"${base.schema.simpleString} -> ${images.schema.simpleString}")
-    applyGenerated(spark, table, images, "update") // validate-only: all cols present
-    validateConstraints(spark, table, images, "update")
+    applyGenerated(spark, table, snap, images, "update") // validate-only: all cols present
+    validateConstraints(spark, table, snap, images, "update")
     images
   }
 
@@ -1620,7 +1647,7 @@ object CommitLog {
         tagged.select(col("_graft_f").as("target"), col("_graft_pos").as("pos")))
         .fold[Either[Conflict, Long]](Right(snap.version)) { case (staged, mapping) =>
           val adds = stage(table,
-            setImages(spark, table, "updateWhereDv", base, tagged, sets, lit(true)))
+            setImages(spark, table, snap, "updateWhereDv", base, tagged, sets, lit(true)))
           cleaningUp(table, staged ++ adds)(
             replaceFiles(table, snap.version, Nil, adds, dvs = mapping))
         }
@@ -1644,7 +1671,7 @@ object CommitLog {
                        key: DataFrame => org.apache.spark.sql.Column,
                        targetFiles: Int): Either[Conflict, Long] = {
     val snap = pinned(table)
-    rewriteFiles(spark, table, snap, snap.live)(cur =>
+    rewriteFiles(spark, table, snap, snap.schema, snap.live)(cur =>
       cur.repartitionByRange(targetFiles, key(cur)).sortWithinPartitions(key(cur)))
   }
 
@@ -1667,8 +1694,8 @@ object CommitLog {
     matchScan(spark, table, "updateWhere", cond, sets.map(_._1)) { (snap, base) =>
       val (tagged, paths, affected) = cowScan(spark, table, snap, base)(_.filter(cond))
       if (affected.isEmpty) Right(snap.version)
-      else rewriteCommit(table, snap, affected, setImages(spark, table, "updateWhere", base,
-        tagged.filter(col("_graft_file").isin(paths: _*)), sets, cond))
+      else rewriteCommit(table, snap, affected, setImages(spark, table, snap, "updateWhere",
+        base, tagged.filter(col("_graft_file").isin(paths: _*)), sets, cond))
     }
   }
 
@@ -1701,12 +1728,12 @@ object CommitLog {
     if (source.isEmpty) return Right(snap.version)
     // generated columns materialize-or-validate on the source up front
     // (round 17): an omitted gencol fills in, a wrong one fails loudly
-    val source1 = applyGenerated(spark, table, source, "merge")
+    val source1 = applyGenerated(spark, table, snap, source, "merge")
     val dups = source1.groupBy(key).count().filter(col("count") > 1).limit(1).count()
     require(dups == 0L, s"mergeInto: source has duplicate '$key' keys")
     // no live rows: every source row inserts — one append-shaped commit
     if (snap.live.isEmpty) {
-      validateConstraints(spark, table, source1, "merge")
+      validateConstraints(spark, table, snap, source1, "merge")
       return rewriteCommit(table, snap, Nil, source1)
     }
     val base = frame(spark, table, snap.live, snap.schema)
@@ -1743,7 +1770,7 @@ object CommitLog {
     val inserts = src.join(tagged.select(col(key)), Seq(key), "left_anti")
       .select(base.columns.map(col): _*)
     val staged = rewritten.fold(inserts)(_.unionByName(inserts))
-    validateConstraints(spark, table, staged, "merge")
+    validateConstraints(spark, table, snap, staged, "merge")
     rewriteCommit(table, snap, affected, staged)
   }
 
@@ -1786,14 +1813,14 @@ object CommitLog {
   /** Shared copy-on-write schema rewrite: read HEAD, transform, stage,
     * commit (removes = old live set, adds = rewrite, meta = new schema)
     * at head+1 — or Conflict, cleaning up the staged files (the
-    * [[compact]] lost-race discipline). */
+    * [[compact]] lost-race discipline). The rows, constraints, generated
+    * columns and removes all come from one head snapshot. */
   private def rewriteSchema(spark: SparkSession, table: String, what: String)
                            (transform: DataFrame => DataFrame): Either[Conflict, Long] = {
-    val head = latestVersion(table)
-    require(head >= 0, s"commit-log table $table has no commits")
-    val cur = read(spark, table, Some(head))
+    val snap = pinned(table)
+    val cur = readAt(spark, table, snap, snap.schema)
     require(cur.columns.nonEmpty,
-      s"cannot $what on $table: no schema at version $head (no data or metadata yet)")
+      s"cannot $what on $table: no schema at version ${snap.version} (no data or metadata yet)")
     val rewritten = transform(cur)
     // interplay (round 17): a rename/drop must not orphan a CHECK
     // constraint — every live constraint has to resolve against the new
@@ -1801,7 +1828,7 @@ object CommitLog {
     // Probed on a SCHEMA-ONLY frame: a filter directly over `rewritten`
     // would resolve a dropped column from upstream (Spark's
     // missing-reference rule) and silently pass.
-    constraintsAt(table, head).foreach { case (n, sql) =>
+    decodedSql(snap.constraints).foreach { case (n, sql) =>
       val probe = spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], rewritten.schema)
       try probe.filter(expr(sql)).queryExecution.analyzed
@@ -1813,7 +1840,7 @@ object CommitLog {
     }
     // same interplay for generated columns: the column must survive and
     // its expression must still resolve without it
-    generatedAt(table, head).foreach { case (n, sql) =>
+    decodedSql(snap.gencols).foreach { case (n, sql) =>
       val probe = spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], rewritten.schema)
       val ok =
@@ -1828,10 +1855,10 @@ object CommitLog {
     }
     val b64 = java.util.Base64.getEncoder
       .encodeToString(rewritten.schema.json.getBytes("UTF-8"))
-    val removes = liveFiles(table, head)
+    val removes = snap.live
     val adds = if (removes.isEmpty) Nil else stage(table, rewritten)
-    cleaningUp(table, adds)(
-      commitExactly(table, head + 1)(tryCommit(table, _, adds, removes, meta = Some(b64))))
+    cleaningUp(table, adds)(commitExactly(table, snap.version + 1)(
+      tryCommit(table, _, adds, removes, meta = Some(b64))))
   }
 
   /** SHALLOW CLONE (round 15 — Delta's public design): fork a table at a
@@ -1851,13 +1878,11 @@ object CommitLog {
     * like a pre-horizon time travel. */
   def shallowClone(source: String, target: String,
                    asOf: Option[Long] = None): Long = {
-    val v = asOf.getOrElse(latestVersion(source))
-    require(v >= 0, s"commit-log table $source has no commits")
+    val snap = pinned(source, asOf)
     require(latestVersion(target) == -1L,
       s"clone target $target already has commits")
     val rel = Paths.get(target).toAbsolutePath.normalize
       .relativize(Paths.get(source).toAbsolutePath.normalize).toString
-    val snap = snapshot(source, v)
     // the snapshot's payloads copy verbatim: stats, schema, deletion
     // vectors (as external references too — a clone that dropped them
     // would RESURRECT merge-on-read deletes; read-path matching is by
@@ -1890,13 +1915,18 @@ object CommitLog {
     // retained = data files AND dv files any retained snapshot reads
     // (sweeping a dv file under a retained snapshot would RESURRECT its
     // deleted rows — worse than a failing read)
-    val retained = ((first + 1) to vMax).iterator
-      .scanLeft(snapshot(table, first))((s, v) => fold(s, commits0(table, v)))
+    val oldest = snapshot(table, first)
+    val retained = (Iterator(oldest) ++ replay(table, oldest, vMax))
       .flatMap(s => s.live ++ s.dvs.values).toSet
+    everReferenced(table, vMax).filterNot(retained).filterNot(isExternalRef)
+  }
+
+  /** Every data and DV file any commit up to `vMax` added, in
+    * first-added order — what [[vacuumable]] may sweep and what
+    * [[orphanFiles]] must not. */
+  private def everReferenced(table: String, vMax: Long): Seq[String] = {
     val all = commits(table, vMax)
     (all.flatMap(_.adds) ++ all.flatMap(_.dvs.map(_._1))).distinct
-      .filterNot(retained)
-      .filterNot(isExternalRef)
   }
 
   /** An add that points outside the table directory — a [[shallowClone]]
@@ -1912,12 +1942,11 @@ object CommitLog {
     * have ALL file-granular DML bricked — unrelated predicates still
     * work; only the ambiguous target is loud). */
   private[graft] def affectedOf(live: Seq[String], paths: Set[String]): Seq[String] = {
-    def base(f: String): String = Paths.get(f).getFileName.toString
     val targeted = live.filter { f =>
-      val b = base(f)
+      val b = baseName(f)
       paths.exists(p => p.endsWith("/" + b) || p == b)
     }
-    val byBase = targeted.groupBy(base)
+    val byBase = targeted.groupBy(baseName)
     byBase.collect { case (b, fs) if fs.size > 1 => (b, fs) }.foreach {
       case (b, fs) => throw new IllegalStateException(
         s"rewrite targets live files sharing the basename '$b': ${fs.mkString(", ")}")
@@ -1925,24 +1954,20 @@ object CommitLog {
     targeted
   }
 
-  /** Basename-collision guard shared by the merge-on-read verbs (r16
-    * advice): DV read-path matching is by basename, so one sidecar's
-    * positions would silently apply to EVERY same-named live file —
-    * fail loudly when a TARGETED basename is shared by more than one
-    * live file (the [[affectedOf]] discipline: unrelated DML on a
-    * collided table keeps working; only the ambiguous target is loud —
-    * copy-on-write DML already fails loudly in the same state,
-    * merge-on-read must not be quieter). */
-  private def requireUniqueDvTargets(live: Seq[String],
-                                     targets: Set[String]): Unit = {
-    val byBase = live.groupBy(baseName)
-    targets.foreach { b =>
-      byBase.get(b).filter(_.size > 1).foreach { fs =>
-        throw new IllegalStateException(
-          s"DV attach targets live files sharing the basename '$b': ${fs.mkString(", ")}")
-      }
+  /** The live entry of each targeted basename, for the merge-on-read
+    * verbs. Basename-collision guard (r16 advice): DV read-path matching
+    * is by basename, so one sidecar's positions would silently apply to
+    * EVERY same-named live file — fail loudly when a TARGETED basename
+    * is shared by more than one live file (the [[affectedOf]]
+    * discipline: unrelated DML on a collided table keeps working; only
+    * the ambiguous target is loud — copy-on-write DML already fails
+    * loudly in the same state, merge-on-read must not be quieter). */
+  private def dvTargets(live: Seq[String], targets: Set[String]): Map[String, String] =
+    live.groupBy(baseName).collect { case (b, fs) if targets(b) =>
+      if (fs.size > 1) throw new IllegalStateException(
+        s"DV attach targets live files sharing the basename '$b': ${fs.mkString(", ")}")
+      b -> fs.head
     }
-  }
 
   private val PartFileRe = """[0-9a-f]{8}-part-\d{5}\.parquet""".r
   private val DvFileRe = """[0-9a-f]{8}-dv-\d{5}\.parquet""".r
@@ -1961,13 +1986,7 @@ object CommitLog {
   def orphanFiles(table: String, minAgeMs: Long): Seq[String] = {
     val dir = Paths.get(table)
     if (!Files.isDirectory(dir)) return Nil
-    val vMax = latestVersion(table)
-    val referenced: Set[String] =
-      if (vMax < 0) Set.empty
-      else {
-        val all = commits(table, vMax)
-        (all.flatMap(_.adds) ++ all.flatMap(_.dvs.map(_._1))).toSet
-      }
+    val referenced = everReferenced(table, latestVersion(table)).toSet
     val cutoff = System.currentTimeMillis() - minAgeMs
     val s = Files.list(dir)
     try s.iterator().asScala
@@ -2006,31 +2025,29 @@ object CommitLog {
     * rewrite). Returns the new version, or a [[Conflict]] if another
     * writer moved the head. */
   def restore(table: String, toVersion: Long): Either[Conflict, Long] = {
-    val head = latestVersion(table)
-    require(toVersion >= 0 && toVersion <= head,
-      s"restore target $toVersion outside [0, $head]")
-    val target = liveFiles(table, toVersion)
-    // deletion-vector state is versioned like file state: the restore
-    // commit re-emits the TARGET version's dv attachments and clears
-    // the ones only the head had — a roll-back across a merge-on-read
-    // delete restores the deleted rows (round 16)
-    val targetDvs = liveDvs(table, toVersion)
-    val headDvs = liveDvs(table, head)
+    val head = latest(table)
+    require(toVersion >= 0 && toVersion <= head.version,
+      s"restore target $toVersion outside [0, ${head.version}]")
+    val target = snapshot(table, toVersion)
     // the horizon-enforcement edge: a prior vacuum may have dropped files
     // only the target version references — committing the restore anyway
     // would manufacture a corrupt HEAD (not just a failing time-travel
     // read), so check existence BEFORE committing and fail loudly
-    val gone = (target ++ targetDvs.values)
+    val gone = (target.live ++ target.dvs.values)
       .filterNot(f => Files.exists(Paths.get(table, f)))
     require(gone.isEmpty,
       s"restore target $toVersion references vacuumed data files: ${gone.mkString(", ")}")
-    val current = liveFiles(table, head)
-    val removes = current.filterNot(target.toSet)
-    val adds = target.filterNot(current.toSet)
-    val dvs = targetDvs.toSeq.map { case (t, p) => (p, t) }
-    val dvRms = (headDvs.keySet -- targetDvs.keySet)
-      .filter(target.toSet).toSeq.sorted
-    replaceFiles(table, head, removes, adds, dvs = dvs, dvRms = dvRms)
+    val removes = head.live.filterNot(target.files.contains)
+    val adds = target.live.filterNot(head.files.contains)
+    // deletion-vector state is versioned like file state: the restore
+    // commit re-emits the TARGET version's dv attachments (in a Map's
+    // order, as it always has) and clears the ones only the head had —
+    // a roll-back across a merge-on-read delete restores the deleted
+    // rows (round 16)
+    val dvs = target.dvs.toMap.toSeq.map(_.swap)
+    val dvRms = (head.dvs.keySet -- target.dvs.keySet)
+      .filter(target.files.contains).toSeq.sorted
+    replaceFiles(table, head.version, removes, adds, dvs = dvs, dvRms = dvRms)
   }
 
   /** OPTIMIZE (small-file compaction) through the log: rewrite the
@@ -2042,25 +2059,28 @@ object CommitLog {
   def compact(spark: SparkSession, table: String,
               targetFiles: Int = 1): Either[Conflict, Long] = {
     val snap = pinned(table)
-    rewriteFiles(spark, table, snap, snap.live)(_.repartition(targetFiles))
+    rewriteFiles(spark, table, snap, snap.schema, snap.live)(_.repartition(targetFiles))
   }
 
   /** The OPTIMIZE body [[compact]], [[compactWhere]] and
-    * [[compactClustered]] share: `files`' DV-applied rows, laid out by
-    * `layout`, staged and committed in their place at head+1 (or the
-    * [[Conflict]]) — their DV attachments clear with the removes.
-    * Stats recompute on the rewrite (the Delta OPTIMIZE behavior): a
-    * maintenance verb must never silently degrade future reads. No
-    * files commits an empty version — a table whose commits reference
-    * no data files (all-empty appends) has no schema parquet could
-    * re-write. DVs attach by basename, as [[applyDvs]] matches them: a
-    * clone's DV verbs key a cloned-in `<rel>/<name>` entry by `<name>`. */
+    * [[compactClustered]] share: `files`' rows under `schema` ([[frame]])
+    * with their own DV attachments applied, laid out by `layout`, staged
+    * and committed in their place at head+1 (or the [[Conflict]]) —
+    * those attachments clear with the removes. Stats recompute on the
+    * rewrite (the Delta OPTIMIZE behavior): a maintenance verb must never
+    * silently degrade future reads. No files commits an empty version —
+    * a table whose commits reference no data files (all-empty appends)
+    * has no schema parquet could re-write. Attachments are picked by
+    * basename, as [[applyDvs]] matches them on read: a clone's log
+    * written before [[stageDvs]] keyed them by live entry names a
+    * `<rel>/<name>` entry's DV by `<name>`, and the rewrite must still
+    * drop those rows. */
   private def rewriteFiles(spark: SparkSession, table: String, snap: Snapshot,
-                           files: Seq[String])
+                           schema: Option[StructType], files: Seq[String])
                           (layout: DataFrame => DataFrame): Either[Conflict, Long] = {
     if (files.isEmpty) return replaceFiles(table, snap.version, Nil, Nil)
     val keep = files.map(baseName).toSet
-    val rows = applyDvs(spark, table, frame(spark, table, files, snap.schema),
+    val rows = applyDvs(spark, table, frame(spark, table, files, schema),
       snap.dvs.filter { case (t, _) => keep(baseName(t)) })
     val adds = stage(table, layout(rows))
     cleaningUp(table, adds)(replaceFiles(table, snap.version, files, adds,
@@ -2084,9 +2104,9 @@ object CommitLog {
                    cond: org.apache.spark.sql.Column,
                    targetFiles: Int = 1): Either[Conflict, Long] = {
     val snap = pinned(table)
-    val selected = pruned(spark, table, snap, cond)
+    val (schema, selected) = pruned(spark, table, snap, cond)
     if (selected.isEmpty) Right(snap.version)
-    else rewriteFiles(spark, table, snap, selected)(_.repartition(targetFiles))
+    else rewriteFiles(spark, table, snap, schema, selected)(_.repartition(targetFiles))
   }
 
   /** INCREMENTAL (streaming-source) read: the rows the commits in
@@ -2110,7 +2130,7 @@ object CommitLog {
   def readIncremental(spark: SparkSession, table: String,
                       fromVersion: Long,
                       toVersion: Long = -2L): (DataFrame, Long) = {
-    val head = if (toVersion == -2L) latestVersion(table) else toVersion
+    val head = orHead(table, toVersion)
     require(head >= fromVersion,
       s"cursor $fromVersion is ahead of version $head on $table")
     val adds = ((fromVersion + 1) to head).flatMap { v =>
@@ -2124,7 +2144,7 @@ object CommitLog {
           "append-only by contract")
       c.adds
     }
-    (frame(spark, table, adds, schemaAt(table, head)), head)
+    (frame(spark, table, adds, snapshot(table, head).schema), head)
   }
 
   /** Row-level change feed DERIVED from consecutive snapshots (the CDF
@@ -2143,7 +2163,7 @@ object CommitLog {
     // (r13 advice: a per-version lookup made the CDF read O(V²) log
     // reads — the same cumulative-cost class the txn checkpoint fix
     // targets); decoded schemas memoized per distinct payload
-    val snaps = commits(table, vMax).scanLeft(Snapshot())(fold).tail.toIndexedSeq
+    val snaps = replay(table, Snapshot(), vMax).toIndexedSeq
     val decoded = scala.collection.mutable.Map.empty[String, StructType]
     // each version-step compares BOTH snapshots under the NEWER step's
     // schema: an ADD COLUMN evolution then changes no fingerprints (old

@@ -13,8 +13,9 @@ import graft.sources.CommitLog
   * adds (with and without stats, re-adds included), removes, deletion
   * vectors and their clears, txn watermarks, schema metadata, CHECK
   * constraints and generated columns, every reader answers the same at
-  * every version with or without a checkpoint at any earlier version,
-  * and a checkpoint folded from an earlier checkpoint is byte-identical
+  * every version with or without a checkpoint at any earlier version —
+  * TIMESTAMP AS OF included, over random non-monotone commit timestamps
+  * — and a checkpoint folded from an earlier checkpoint is byte-identical
   * to one folded from genesis. Only the log is touched: synthetic file
   * names, [[CommitLog.tryCommit]] directly, no Spark session. */
 class CommitLogCheckpointPropSpec extends AnyFunSuite {
@@ -57,11 +58,19 @@ class CommitLogCheckpointPropSpec extends AnyFunSuite {
   private val history: Gen[Seq[Step]] =
     Gen.choose(1, 8).flatMap(n => Gen.listOfN(n, step))
 
-  /** Every reader's answer at version v. */
-  private def views(t: String, v: Long): Seq[Any] = Seq(
+  /** Every reader's answer at version v, and TIMESTAMP AS OF at each
+    * of `probes` (resolved against the whole log, so the same at every
+    * v; a probe before the first commit answers its refusal). */
+  private def views(t: String, probes: Seq[Long])(v: Long): Seq[Any] = Seq(
     CommitLog.liveAdds(t, v), CommitLog.liveDvs(t, v),
     (apps :+ "nobody").map(CommitLog.txnLatest(t, _, v)),
-    CommitLog.schemaAt(t, v), CommitLog.constraintsAt(t, v), CommitLog.generatedAt(t, v))
+    CommitLog.schemaAt(t, v), CommitLog.constraintsAt(t, v), CommitLog.generatedAt(t, v),
+    probes.map(ts =>
+      try Right(CommitLog.versionAtTimestamp(t, ts))
+      catch {
+        case e: IllegalArgumentException if e.getMessage.contains("predates") =>
+          Left(e.getMessage)
+      }))
 
   private def cpFile(t: String, v: Long): Path =
     Paths.get(t, "_graft_log", f"$v%020d.checkpoint.json")
@@ -86,12 +95,22 @@ class CommitLogCheckpointPropSpec extends AnyFunSuite {
           gencols = s.gencols.map(n => n -> b64(s"$n + $i")), gencolRms = s.gencolRms))
       }
       val versions = h.indices.map(_.toLong)
-      val expected = versions.map(views(t, _))
+      // each step's cts and the instant before it; the random, non-monotone
+      // cts make the running max decide where a probe lands
+      val probes = h.flatMap(s => Seq(s.cts, s.cts - 1)).distinct :+ Long.MaxValue
+      val expected = versions.map(views(t, probes))
+      // a probe resolves to the last version whose running cts max is at or before it
+      val runningMax = h.map(_.cts).scanLeft(-1L)(math.max).tail
+      assert(expected.head.last == probes.map { ts =>
+        val v = runningMax.lastIndexWhere(_ <= ts)
+        if (v >= 0) Right(v.toLong)
+        else Left(s"requirement failed: timestamp $ts predates the first commit of $t")
+      }, "TIMESTAMP AS OF resolved off the running cts max")
       // one checkpoint at a time, each folded from genesis
       val fromGenesis = versions.map { cp =>
         CommitLog.checkpoint(t, cp)
         val body = Files.readAllBytes(cpFile(t, cp)).toSeq
-        assert(versions.map(views(t, _)) == expected, s"checkpoint at $cp changed a reader")
+        assert(versions.map(views(t, probes)) == expected, s"checkpoint at $cp changed a reader")
         Files.delete(cpFile(t, cp))
         body
       }
@@ -101,7 +120,7 @@ class CommitLogCheckpointPropSpec extends AnyFunSuite {
         assert(Files.readAllBytes(cpFile(t, cp)).toSeq == fromGenesis(cp.toInt),
           s"checkpoint at $cp folded from an earlier checkpoint differs")
       }
-      assert(versions.map(views(t, _)) == expected, "stacked checkpoints changed a reader")
+      assert(versions.map(views(t, probes)) == expected, "stacked checkpoints changed a reader")
       true
     } finally deleteTree(Paths.get(t))
   }

@@ -12,9 +12,11 @@ import graft.sources.CommitLog
 
 /** The commit log's write verbs at their edges: the reserved `_graft_`
   * helper-column prefix is refused by every verb that adds helper
-  * columns, OPTIMIZE over nothing commits what it always did, and every
+  * columns, OPTIMIZE over nothing commits what it always did, every
   * staged file lands under the `<uuid8>-<kind>-NNNNN.parquet` name with
-  * no temp tree left behind. */
+  * no temp tree left behind, a shallow clone's own deletion vectors
+  * clear on OPTIMIZE and RESTORE as any table's do, and a DV delete
+  * leaves pruned reads that keep no file working. */
 class CommitLogWriteVerbsSpec extends AnyFunSuite {
   import SparkTestSession._
   import spark.implicits._
@@ -102,8 +104,39 @@ class CommitLogWriteVerbsSpec extends AnyFunSuite {
       assert(before == Seq(1L, 2L, 5L, 6L, 7L, 8L, 9L, 40L), s"$verb: $before")
       assert(optimize(clone).isRight, verb)
       assert(ids(clone) == before, s"$verb brought deleted rows back")
+      // the rewrite cleared the clone's attachments, so its sidecars are vacuumable
+      val dvs = CommitLog.liveDvs(clone, CommitLog.latestVersion(clone))
+      assert(dvs.isEmpty, s"$verb left dead attachments: $dvs")
+      val sidecars = tableEntries(clone).filter(DvName.matches)
+      assert(sidecars.nonEmpty && sidecars.forall(CommitLog.vacuumable(clone, 1L).contains),
+        s"$verb: $sidecars")
     }
     assert(ids(src) == (1L to 9L))
+  }
+
+  test("RESTORE on a shallow clone clears the clone's own DV deletes") {
+    val src = tmpTable()
+    CommitLog.appendWithStats(spark, src, (1L to 6L).toDF("id").coalesce(1))
+    val clone = tmpTable()
+    CommitLog.shallowClone(src, clone)
+    assert(CommitLog.deleteWhereDv(spark, clone, col("id") === 3L).isRight)
+    assert(CommitLog.updateWhereDv(spark, clone, col("id") === 4L,
+      Seq("id" -> lit(40L))).isRight)
+    assert(CommitLog.restore(clone, 0L).isRight)
+    assert(CommitLog.read(spark, clone).as[Long].collect().toSeq.sorted == (1L to 6L))
+    assert(CommitLog.liveDvs(clone, CommitLog.latestVersion(clone)).isEmpty)
+  }
+
+  test("a pruned read that keeps no file, after a DV delete on a table with a committed schema") {
+    val t = tmpTable()
+    val df = (1L to 6L).map(i => (i, s"s$i")).toDF("id", "s").coalesce(1)
+    CommitLog.appendWithStats(spark, t, df)
+    CommitLog.evolveSchema(t, df.schema)
+    assert(CommitLog.deleteWhereDv(spark, t, col("id") === 3L).isRight)
+    val none = CommitLog.readWhere(spark, t, col("id") === 99L)
+    assert(none.columns.toSeq == Seq("id", "s") && none.count() == 0L)
+    assert(CommitLog.readPruned(spark, t, col("id") === 99L).count() == 0L)
+    assert(CommitLog.readWhere(spark, t, col("id") <= 4L).count() == 3L)
   }
 
   test("staged names: appends stage <uuid8>-part-NNNNN, DV deletes <uuid8>-dv-NNNNN, no temp tree left") {
