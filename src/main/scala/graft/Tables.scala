@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.types.LongType
 
 import graft.sources.ParquetFooter
 
@@ -42,17 +44,14 @@ object Tables {
     * and a no-op on the µs form — parity holds for both. The nanosAsLong
     * flag stays set in Verify/Bench/spec sessions (harmless on µs files).
     */
-  def events(s: SparkSession, d: String): DataFrame = {
-    val raw = load(s, d, "events")
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts",
-          org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
-      case _ =>
-        raw.withColumn("ts",
-          org.apache.spark.sql.functions.col("ts").cast("timestamp"))
-    }
-  }
+  def events(s: SparkSession, d: String): DataFrame = normalizeTs(load(s, d, "events"))
+
+  /** `events` (a batch or a streaming frame over events files) with `ts`
+    * as a session-TZ TIMESTAMP at µs precision, whichever physical form
+    * [[events]] describes the files hold. */
+  private[graft] def normalizeTs(events: DataFrame): DataFrame = events.withColumn("ts",
+    if (events.schema("ts").dataType == LongType) expr("timestamp_micros(ts div 1000)")
+    else col("ts").cast("timestamp"))
   def documents(s: SparkSession, d: String): DataFrame  = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 }

@@ -36,7 +36,10 @@ import org.apache.spark.sql.functions._
   */
 object Cdc {
 
-  private val FpExpr =
+  /** Normalized-content fingerprint; `private[graft]` so the streaming
+    * twin ([[graft.streaming.StreamingJobs.cdcApplyStream]]) uses this
+    * text instead of a copy. */
+  private[graft] val FpExpr =
     "md5(lower(trim(regexp_replace(coalesce(text, ''), '\\\\s+', ' '))))"
   private val KeyExpr =
     "substring(md5(concat('graft-cdc:', CAST(doc_id AS STRING))), 1, 1)"

@@ -30,8 +30,10 @@ import org.apache.spark.sql.functions._
 object CorpusDiff {
 
   /** Normalized-content fingerprint, total on NULL text (empty-string
-    * fingerprint), same text both engines. */
-  private val FpExpr =
+    * fingerprint), same text both engines; `private[graft]` so the
+    * streaming twin ([[graft.streaming.StreamingJobs.corpusDiffStream]])
+    * uses this text instead of a copy. */
+  private[graft] val FpExpr =
     "md5(lower(trim(regexp_replace(coalesce(text, ''), '\\\\s+', ' '))))"
 
   /** Diff two snapshot frames (doc_id, text, source). */

@@ -358,21 +358,23 @@ object CommitLog {
   private def checkpointFile(table: String, v: Long): Path =
     logDir(table).resolve(f"$v%020d.checkpoint.json")
 
-  /** Latest checkpoint at or below asOf, if any. */
-  private def latestCheckpoint(table: String, asOf: Long): Option[Long] = {
+  /** Checkpoint versions at or below asOf, ascending. */
+  private def checkpointVersions(table: String, asOf: Long): Vector[Long] = {
     val d = logDir(table)
-    if (!Files.isDirectory(d)) None
+    if (!Files.isDirectory(d)) Vector.empty
     else {
       val s = Files.list(d)
-      try {
-        val cps = s.iterator().asScala.map(_.getFileName.toString)
-          .filter(_.endsWith(".checkpoint.json"))
-          .map(_.stripSuffix(".checkpoint.json").toLong)
-          .filter(_ <= asOf).toSeq
-        if (cps.isEmpty) None else Some(cps.max)
-      } finally s.close()
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.endsWith(".checkpoint.json"))
+        .map(_.stripSuffix(".checkpoint.json").toLong)
+        .filter(_ <= asOf).toVector.sorted
+      finally s.close()
     }
   }
+
+  /** Latest checkpoint at or below asOf, if any. */
+  private def latestCheckpoint(table: String, asOf: Long): Option[Long] =
+    checkpointVersions(table, asOf).lastOption
 
   private def readCheckpoint(table: String, v: Long): Option[Commit] = {
     val f = checkpointFile(table, v)
@@ -1903,31 +1905,62 @@ object CommitLog {
     * (`version > v_max - RetainVersions`, plus everything the retained
     * snapshots themselves still reference). External (cloned-in)
     * references are never deletable — they belong to the source table
-    * ([[shallowClone]]). */
+    * ([[shallowClone]]). A version log retention made unreadable (its
+    * commit files are gone) retains nothing. */
   def vacuumable(table: String, retainVersions: Long): Seq[String] = {
+    val vMax = latestVersion(table)
+    vacuumable(table, readable(table, vMax), vMax, retainVersions)
+  }
+
+  private def vacuumable(table: String, history: Seq[Stretch], vMax: Long,
+                         retainVersions: Long): Seq[String] = {
     // retain = 0 would empty the retained window and delete every live
     // data file out from under the current snapshot — the same guard as
     // Delta's retention-duration check
     require(retainVersions >= 1, s"retainVersions must be >= 1, got $retainVersions")
-    val vMax = latestVersion(table)
     require(vMax >= 0, s"commit-log table $table has no commits")
-    val first = (vMax - retainVersions + 1).max(0L)
-    // retained = data files AND dv files any retained snapshot reads
-    // (sweeping a dv file under a retained snapshot would RESURRECT its
-    // deleted rows — worse than a failing read)
-    val oldest = snapshot(table, first)
-    val retained = (Iterator(oldest) ++ replay(table, oldest, vMax))
-      .flatMap(s => s.live ++ s.dvs.values).toSet
-    everReferenced(table, vMax).filterNot(retained).filterNot(isExternalRef)
+    val first = vMax - retainVersions + 1
+    // retained = data files AND dv files any readable version in the
+    // window reads (sweeping a dv file under a retained snapshot would
+    // RESURRECT its deleted rows — worse than a failing read)
+    val retained = history.iterator.flatMap { case (base, cs) => cs.iterator.scanLeft(base)(fold) }
+      .filter(_.version >= first).flatMap(s => s.live ++ s.dvs.values).toSet
+    everReferenced(history).filterNot(retained).filterNot(isExternalRef)
   }
 
-  /** Every data and DV file any commit up to `vMax` added, in
-    * first-added order — what [[vacuumable]] may sweep and what
-    * [[orphanFiles]] must not. */
-  private def everReferenced(table: String, vMax: Long): Seq[String] = {
-    val all = commits(table, vMax)
-    (all.flatMap(_.adds) ++ all.flatMap(_.dvs.map(_._1))).distinct
+  /** A base state and the commits past it that are on disk. */
+  private type Stretch = (Snapshot, Vector[Commit])
+
+  /** The readable history up to `vMax`, as stretches. [[snapshot]] reads
+    * version v from the newest complete checkpoint ≤ v, else from
+    * genesis, so v is readable iff every commit file between that base
+    * and v exists. While every commit file does, the history is one
+    * stretch from genesis and no checkpoint is read. Once log retention
+    * has removed some, every complete checkpoint also starts a stretch,
+    * which ends before the next checkpoint; each stretch stops at its
+    * first missing commit file. A stretch may also cover versions a
+    * reader folds from elsewhere: covering too much only keeps files. */
+  private def readable(table: String, vMax: Long): Seq[Stretch] = {
+    def onDisk(from: Long, to: Long): Vector[Commit] =
+      (from to to).iterator.takeWhile(v => Files.exists(commitFile(table, v)))
+        .map(commits0(table, _)).toVector
+    val fromGenesis = Snapshot() -> onDisk(0L, vMax)
+    if (fromGenesis._2.size == vMax + 1) Vector(fromGenesis)
+    else {
+      val cps = checkpointVersions(table, vMax)
+      fromGenesis +: cps.zip(cps.drop(1).map(_ - 1) :+ vMax).flatMap { case (cp, end) =>
+        readCheckpoint(table, cp).map(c => fold(Snapshot(), c) -> onDisk(cp + 1, end))
+      }
+    }
   }
+
+  /** Every data and DV file a readable version reads, in first-added
+    * order: what [[vacuumable]] may sweep and what [[orphanFiles]] must
+    * not. */
+  private def everReferenced(history: Seq[Stretch]): Seq[String] =
+    history.flatMap { case (base, cs) =>
+      base.live ++ base.dvs.values ++ cs.flatMap(_.adds) ++ cs.flatMap(_.dvs.map(_._1))
+    }.distinct
 
   /** An add that points outside the table directory — a [[shallowClone]]
     * reference. Never vacuumed, never counted as a local part file. */
@@ -1982,11 +2015,16 @@ object CommitLog {
     * sidecars are swept under the same age gate (r16 advice: a crash
     * between staging a sidecar and tryCommit used to leak `*-dv-*.parquet`
     * forever — no commit references it and the part-file pattern
-    * deliberately excluded the dv name shape). */
-  def orphanFiles(table: String, minAgeMs: Long): Seq[String] = {
+    * deliberately excluded the dv name shape). A file that only retired
+    * history referenced (log retention removed the commit files that
+    * read it) counts as an orphan: no readable version reads it. */
+  def orphanFiles(table: String, minAgeMs: Long): Seq[String] =
+    orphanFiles(table, readable(table, latestVersion(table)), minAgeMs)
+
+  private def orphanFiles(table: String, history: Seq[Stretch], minAgeMs: Long): Seq[String] = {
     val dir = Paths.get(table)
     if (!Files.isDirectory(dir)) return Nil
-    val referenced = everReferenced(table, latestVersion(table)).toSet
+    val referenced = everReferenced(history).toSet
     val cutoff = System.currentTimeMillis() - minAgeMs
     val s = Files.list(dir)
     try s.iterator().asScala
@@ -2000,17 +2038,18 @@ object CommitLog {
     finally s.close()
   }
 
-  /** Physically delete the vacuumable files, plus (when `sweepOrphans`)
-    * any staged-but-never-committed leftovers older than `orphanMinAgeMs`
+  /** Physically delete the vacuumable files, plus any
+    * staged-but-never-committed leftovers older than `orphanMinAgeMs`
     * — without the sweep, repeated optimistic-retry conflicts leak disk
     * forever. Readers pinned inside the retention window are unaffected
     * (their file lists survive); reads at vacuumed-away versions fail on
     * the missing files — the Delta time-travel-horizon contract. */
   def vacuum(table: String, retainVersions: Long,
-             sweepOrphans: Boolean = true,
              orphanMinAgeMs: Long = 10L * 60 * 1000): Seq[String] = {
-    val del = vacuumable(table, retainVersions) ++
-      (if (sweepOrphans) orphanFiles(table, orphanMinAgeMs) else Nil)
+    val vMax = latestVersion(table)
+    val history = readable(table, vMax)
+    val del = vacuumable(table, history, vMax, retainVersions) ++
+      orphanFiles(table, history, orphanMinAgeMs)
     del.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
     del
   }

@@ -5,33 +5,43 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
-import graft.operators.Sessionize
+import graft.Tables
+import graft.operators.{Dedup, Sessionize}
 import graft.sources.ParquetFooter
 
-/** Structured Streaming twins of the batch event operators (SURVEY.md §2.D):
-  * the same computations declared over an unbounded file source, with
-  * watermark-driven completeness instead of a full scan.
+/** Structured Streaming twins of the batch event and document operators
+  * (SURVEY.md §2.D), each declared over an unbounded file source.
   *
-  * - [[windowAggStream]]: file source → withWatermark → tumbling window agg,
-  *   the streaming half of `streaming_window_agg`
-  *   (operators/Relational.scala streamingWindowAgg is its batch twin).
-  * - [[sessionizeStream]]: flatMapGroupsWithState sessionization, the
-  *   streaming half of `sessionize` — custom keyed state carrying the open
-  *   session, closed sessions emitted as soon as a gap exceeds GapUs.
+  * Every stream starts from one of two sources: [[eventsStream]] (events
+  * files, `ts` normalized by [[graft.Tables.normalizeTs]] exactly as the
+  * batch loader does) or [[documentsStream]] (documents files), the
+  * latter often beside its static twin [[documentsSnapshot]]. The
+  * families built on them:
+  *  - watermarked aggregation and dedup: [[windowAggStream]],
+  *    [[eventDedupStream]], [[dedupExactStream]];
+  *  - keyed-state folds (flatMapGroupsWithState, one small record per
+  *    key): the [[sessionizeStream]] family over one session fold,
+  *    [[asofJoinStream]], [[attributionStream]], [[cusumStream]] and the
+  *    seeded [[ivmStream]];
+  *  - stream-static ingest gates, verdict final at arrival: the arriving
+  *    documents probe a static snapshot taken at query (re)start
+  *    ([[arrivalsAndCorpus]], usually as one row joined by
+  *    [[withStaticRow]]);
+  *  - the stream-stream click–purchase range-join matrix and its batch
+  *    twins;
+  *  - exactly-once `foreachBatch` sinks into [[graft.sources.CommitLog]]
+  *    tables ([[commitLogSinkBatch]], [[clusterMaintainBatch]]).
   *
-  * Scale notes: the window agg is partial-aggregated per micro-batch and
-  * shuffles once on (window, event_type); state size for sessionize is one
-  * small record per active user. Both specs drive the jobs with
-  * Trigger.AvailableNow over real events data and assert parity with the
-  * batch twins.
+  * Each job's spec drives it with Trigger.AvailableNow over real or
+  * planted data and asserts parity with its batch twin.
   */
 object StreamingJobs {
 
   /** Raw schema of events.parquet for the given physical `ts` form — a
-    * stream needs its schema up front, so the one-file batch probe in
-    * [[windowAggStream]] decides between the legacy int64-nanos form
-    * (nanosAsLong session) and the current timestamp[us] form (read as
-    * TIMESTAMP_NTZ); [[graft.Tables.events]] documents the dual contract. */
+    * stream needs its schema up front, so [[eventsStream]] reads one
+    * footer to choose between the int64-nanos form (nanosAsLong session)
+    * and the timestamp[us] form (read as TIMESTAMP_NTZ);
+    * [[graft.Tables.events]] documents the dual contract. */
   def eventsRawSchema(tsIsLong: Boolean): StructType = StructType(Seq(
     StructField("event_id", LongType),
     StructField("ts", if (tsIsLong) LongType else TimestampNTZType),
@@ -40,15 +50,60 @@ object StreamingJobs {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  /** One-file batch probe + the integer-µs event-time expression for the
-    * probed form: `ts div 1000` on int64 nanos, `unix_micros` (UTC session)
-    * on the µs timestamp — identical integers either way. */
-  private def eventsTsProbe(spark: SparkSession, dir: String): (Boolean, Column) = {
+  // ------------------------------------------------------ the two sources
+
+  /** The events file source under `dir`, `ts` normalized as in
+    * [[graft.Tables.events]]; `unix_micros(ts)` is then the integer-µs
+    * event time for either physical form. */
+  private def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     val tsIsLong = ParquetFooter.footerSchema(spark, dir)("ts").dataType == LongType
-    (tsIsLong,
-      if (tsIsLong) expr("ts div 1000")
-      else expr("unix_micros(CAST(ts AS TIMESTAMP))"))
+    Tables.normalizeTs(spark.readStream.schema(eventsRawSchema(tsIsLong)).parquet(dir))
   }
+
+  /** Raw schema of documents.parquet. */
+  val documentsRawSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("text", StringType),
+    StructField("lang", StringType),
+    StructField("source", StringType),
+    StructField("n_chars", LongType)))
+
+  /** The documents files under `dir` as a file stream, at most
+    * `filesPerTrigger` files per micro-batch when positive. */
+  private def documentsStream(spark: SparkSession, dir: String,
+                              filesPerTrigger: Int = 0): DataFrame = {
+    val r = spark.readStream.schema(documentsRawSchema)
+    (if (filesPerTrigger > 0) r.option("maxFilesPerTrigger", filesPerTrigger) else r)
+      .parquet(dir)
+  }
+
+  /** The documents files under `dir` as the static snapshot a
+    * stream-static join probes: its file listing is fixed when the plan
+    * is built, i.e. at query (re)start. */
+  private def documentsSnapshot(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(documentsRawSchema).parquet(dir)
+
+  /** The arriving documents (those matching `arriving`, streamed) and the
+    * static corpus they are judged against (the rest, a snapshot). The
+    * incremental operators' split is the default: every
+    * `Dedup.IncrementalBatchMod`-th doc_id arrives. */
+  private def arrivalsAndCorpus(spark: SparkSession, dir: String,
+                                arriving: Column = col("doc_id") % Dedup.IncrementalBatchMod === 0)
+      : (DataFrame, DataFrame) =
+    (documentsStream(spark, dir).filter(arriving),
+      documentsSnapshot(spark, dir).filter(!arriving))
+
+  /** `arrivals` with the columns of the one-row static frame `row`: a
+    * stream-static LEFT join on a constant key `k`, so every arriving row
+    * sees the snapshot taken at query (re)start. */
+  private def withStaticRow(arrivals: DataFrame, row: DataFrame): DataFrame =
+    arrivals.withColumn("k", lit(1)).join(row.withColumn("k", lit(1)), Seq("k"), "left")
+
+  /** An [[eventsStream]] row's integer-µs event time and value in cents. */
+  private val TUs = expr("unix_micros(ts)")
+  private val Cents = expr("CAST(round(value * 100.0) AS BIGINT)")
+
+  // ------------------------------------------------- streaming window agg
 
   /** Streaming tumbling-window counts. The watermark delay defaults to
     * 2 h; production sizes it from the data instead —
@@ -58,30 +113,15 @@ object StreamingJobs {
     * pins that a delay read off that audit drops zero events while an
     * unsized delay provably drops — the audit → dial wiring. */
   def windowAggStream(spark: SparkSession, dir: String,
-                      delay: String = "2 hours"): DataFrame = {
-    val (tsIsLong, _) = eventsTsProbe(spark, dir)
-    spark.readStream
-      .schema(eventsRawSchema(tsIsLong))
-      .parquet(dir)
-      .withColumn("ts",
-        if (tsIsLong) expr("timestamp_micros(ts div 1000)")
-        else col("ts").cast("timestamp"))
+                      delay: String = "2 hours"): DataFrame =
+    eventsStream(spark, dir)
       .withWatermark("ts", delay)
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
       .select(col("w.start").as("window_start"), col("event_type"),
         col("n"), col("sum_value"))
-  }
 
   // ------------------------------------------------- streaming exact dedup
-
-  /** Raw schema of documents.parquet. */
-  val documentsRawSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("lang", StringType),
-    StructField("source", StringType),
-    StructField("n_chars", LongType)))
 
   /** Streaming exact dedup — the unbounded-ingestion twin of
     * [[graft.operators.TextOps.dedupExact]]: each arriving document's
@@ -93,9 +133,7 @@ object StreamingJobs {
     * keeps the FIRST-seen — the distinct fingerprint set is identical,
     * which is what the parity spec pins.) */
   def dedupExactStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .schema(documentsRawSchema)
-      .parquet(dir)
+    documentsStream(spark, dir)
       .withColumn("fingerprint",
         expr("md5(lower(trim(regexp_replace(text, '\\\\s+', ' '))))"))
       .dropDuplicates("fingerprint")
@@ -110,16 +148,12 @@ object StreamingJobs {
     * per key, a stream keeps the FIRST-seen id — the distinct
     * content-key set is identical, which is what the parity spec pins
     * (the [[dedupExactStream]] contract, on events). */
-  def eventDedupStream(spark: SparkSession, dir: String): DataFrame = {
-    val (tsIsLong, tUs) = eventsTsProbe(spark, dir)
-    spark.readStream
-      .schema(eventsRawSchema(tsIsLong))
-      .parquet(dir)
-      .withColumn("t_us", tUs)
-      .withColumn("cents", expr("CAST(round(value * 100.0) AS BIGINT)"))
+  def eventDedupStream(spark: SparkSession, dir: String): DataFrame =
+    eventsStream(spark, dir)
+      .withColumn("t_us", TUs)
+      .withColumn("cents", Cents)
       .dropDuplicates("user_id", "event_type", "t_us", "cents")
       .select("event_id", "user_id", "event_type", "t_us", "cents")
-  }
 
   // --------------------------- stream-static incremental admission
 
@@ -157,11 +191,8 @@ object StreamingJobs {
     * verdicts are FINAL (append mode): a doc judged against an older
     * index is never retroactively re-judged. */
   def incrementalAdmissionStream(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{Dedup, Lsh}
-    val mod = Dedup.IncrementalBatchMod
-    val corpus = spark.read.schema(documentsRawSchema)
-      .parquet(dir)
-      .filter(col("doc_id") % mod =!= 0)
+    import graft.operators.Lsh
+    val (arrivals, corpus) = arrivalsAndCorpus(spark, dir)
     val index = Lsh.bandedBuckets(corpus)
       .join(Dedup.shingleSets(corpus), "doc_id")
       .groupBy("bkey")
@@ -173,10 +204,7 @@ object StreamingJobs {
       val rows = (0 until Lsh.MinhashRows).map(i => mh(b * Lsh.MinhashRows + i)).mkString(", ")
       expr(s"xxhash64($b, $rows)").as(s"bkey_$b")
     }
-    val stream = spark.readStream
-      .schema(documentsRawSchema)
-      .parquet(dir)
-      .filter(col("doc_id") % mod === 0)
+    val stream = arrivals
       .withColumn("w", expr("split(lower(trim(text)), '\\\\s+')"))
       .withColumn("shingles",
         expr("array_distinct(transform(slice(w, 1, size(w) - 1), (x, i) -> concat(x, ' ', w[i + 1])))"))
@@ -226,22 +254,18 @@ object StreamingJobs {
   def contaminationStream(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Curation
     val n = Curation.ContamN
-    val isBench = col("doc_id") % Curation.ContamBenchMod === Curation.ContamBenchRem
-    val benchSet = Curation
-      .ngramSets(spark.read.schema(documentsRawSchema).parquet(dir).filter(isBench), n)
+    val (arrivals, bench) = arrivalsAndCorpus(spark, dir,
+      col("doc_id") % Curation.ContamBenchMod =!= Curation.ContamBenchRem)
+    val benchSet = Curation.ngramSets(bench, n)
       .select(explode(col("grams")).as("gram"))
       .select(expr("xxhash64(gram)").as("gh")).distinct()
       .agg(sort_array(collect_set(col("gh"))).as("bench_ghs"))
-      .withColumn("k", lit(1))
-    spark.readStream
-      .schema(documentsRawSchema)
-      .parquet(dir)
-      .filter(!isBench)
+    val grams = arrivals
       .select(col("doc_id"), expr("split(lower(trim(text)), '\\\\s+')").as("w"))
       .select(col("doc_id"), expr(Curation.gramArrayExpr(n)).as("grams"))
       .select(col("doc_id"), expr("size(grams)").as("n_grams"),
-        expr("transform(grams, g -> xxhash64(g))").as("ghs"), lit(1).as("k"))
-      .join(benchSet, Seq("k"), "left")
+        expr("transform(grams, g -> xxhash64(g))").as("ghs"))
+    withStaticRow(grams, benchSet)
       .withColumn("n_hit",
         expr("CAST(coalesce(size(array_intersect(ghs, bench_ghs)), 0) AS BIGINT)"))
       .withColumn("overlap_ratio", expr("CAST(n_hit AS DOUBLE) / greatest(n_grams, 1)"))
@@ -274,26 +298,18 @@ object StreamingJobs {
     * decontamination twin, and the same static-side refresh contract:
     * snapshot at query (re)start, emitted verdicts final). */
   def paragraphAdmissionStream(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{Dedup, ParagraphDedup}
-    val mod = Dedup.IncrementalBatchMod
-    val corpusSet = ParagraphDedup
-      .paragraphExploded(
-        spark.read.schema(documentsRawSchema).parquet(dir)
-          .filter(col("doc_id") % mod =!= 0))
+    import graft.operators.ParagraphDedup
+    val (arrivals, corpus) = arrivalsAndCorpus(spark, dir)
+    val corpusSet = ParagraphDedup.paragraphExploded(corpus)
       .select(col("fp")).distinct()
       .agg(sort_array(collect_set(col("fp"))).as("corpus_fps"))
-      .withColumn("k", lit(1))
-    spark.readStream
-      .schema(documentsRawSchema)
-      .parquet(dir)
-      .filter(col("doc_id") % mod === 0)
+    val fps = arrivals
       .select(col("doc_id"),
         expr("coalesce(split(lower(trim(text)), '\\\\s+'), array())").as("w"))
       .select(col("doc_id"),
         expr(s"transform(${ParagraphDedup.paraArrayExpr(ParagraphDedup.ParaWindowTokens)}, p -> md5(p))")
           .as("fps"))
-      .withColumn("k", lit(1))
-      .join(corpusSet, Seq("k"), "left")
+    withStaticRow(fps, corpusSet)
       .withColumn("n_paras", expr("CAST(size(fps) AS BIGINT)"))
       .withColumn("n_hit", expr(
         "CAST(coalesce(size(filter(fps, p -> array_contains(corpus_fps, p))), 0) AS BIGINT)"))
@@ -320,15 +336,12 @@ object StreamingJobs {
     * join against the gh-bucketed index (InfraSpec row), the contract
     * doesn't move. Row-for-row batch parity is spec-pinned. */
   def substringAdmissionStream(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{Dedup, SubstringDedup}
-    val mod = Dedup.IncrementalBatchMod
+    import graft.operators.SubstringDedup
     val l = SubstringDedup.MinRunTokens
-    val corpusSet = SubstringDedup
-      .gramStream(spark.read.schema(documentsRawSchema).parquet(dir)
-        .filter(col("doc_id") % mod =!= 0))
+    val (arrivals, corpus) = arrivalsAndCorpus(spark, dir)
+    val corpusSet = SubstringDedup.gramStream(corpus)
       .select(col("gh")).distinct()
       .agg(sort_array(collect_set(col("gh"))).as("corpus_ghs"))
-      .withColumn("k", lit(1))
     // the batch operator's OWN gram expression (incl. its greatest()
     // guards) — shared text, so the twin cannot silently drift from it
     val gramArr = SubstringDedup.gramArrayExpr(l)
@@ -343,14 +356,10 @@ object StreamingJobs {
         |      concat(slice(acc, 1, size(acc) - 1),
         |             array(named_struct('s', element_at(acc, -1).s, 'e', f.p)))
         |    ELSE concat(acc, array(named_struct('s', f.p, 'e', f.p))) END)""".stripMargin
-    spark.readStream
-      .schema(documentsRawSchema)
-      .parquet(dir)
-      .filter(col("doc_id") % mod === 0)
+    val ghs = arrivals
       .select(col("doc_id"), expr("split(lower(trim(text)), '\\\\s+')").as("w"))
       .select(col("doc_id"), expr(gramArr).as("ghs"))
-      .withColumn("k", lit(1))
-      .join(corpusSet, Seq("k"), "left")
+    withStaticRow(ghs, corpusSet)
       .select(col("doc_id"), explode(expr(spansExpr)).as("sp"))
       .select(col("doc_id"),
         col("sp.s").as("span_start"), col("sp.e").as("span_end"),
@@ -384,30 +393,20 @@ object StreamingJobs {
     * refresh contract: model snapshot at query (re)start, verdicts
     * final. */
   def lmScoreStream(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{Dedup, LmScore}
-    val mod = Dedup.IncrementalBatchMod
-    val (bc, cx, v) = LmScore.model(
-      spark.read.schema(documentsRawSchema).parquet(dir)
-        .filter(col("doc_id") % mod =!= 0))
+    import graft.operators.LmScore
+    val (arrivals, corpus) = arrivalsAndCorpus(spark, dir)
+    val (bc, cx, v) = LmScore.model(corpus)
     val bgRow = bc.agg(map_from_entries(collect_list(
       struct(concat_ws(" ", col("x"), col("y")), col("c_xy")))).as("bg_map"))
-      .withColumn("k", lit(1))
     val cxRow = cx.agg(map_from_entries(collect_list(
       struct(col("x"), col("c_x")))).as("cx_map"))
-      .withColumn("k", lit(1))
-    val vRow = v.withColumn("k", lit(1))
-    val staticModel = bgRow.join(cxRow, Seq("k")).join(vRow, Seq("k"))
-    spark.readStream
-      .schema(documentsRawSchema)
-      .parquet(dir)
-      .filter(col("doc_id") % mod === 0)
+    val ps = arrivals
       .select(col("doc_id"),
         expr("coalesce(split(lower(trim(text)), '\\\\s+'), array())").as("w"))
       .select(col("doc_id"),
         expr("transform(slice(w, 1, greatest(size(w) - 1, 0)), (t, i) -> struct(concat(t, ' ', w[i + 1]) AS xy, t AS x))")
           .as("ps"))
-      .withColumn("k", lit(1))
-      .join(staticModel, Seq("k"), "left")
+    withStaticRow(ps, bgRow.crossJoin(cxRow).crossJoin(v))
       .withColumn("n_bigrams", expr("CAST(size(ps) AS BIGINT)"))
       .withColumn("sum_w", expr(
         s"""aggregate(ps, 0L, (acc, p) ->
@@ -451,24 +450,36 @@ object StreamingJobs {
       userId: Long,
       events: Iterator[SessEvent],
       state: GroupState[SessState]): Iterator[ClosedSession] = {
-    val sorted = events.toArray.sortBy(_.t_us)
-    var cur = state.getOption.orNull
-    val closed = scala.collection.mutable.ArrayBuffer.empty[ClosedSession]
-    def sumValue(s: SessState): Option[Double] =
-      if (s.nC == 0) None else Some(s.sumC / 100.0)
-    for (e <- sorted) {
-      val c = e.c.getOrElse(0L)
-      val nc = if (e.c.isDefined) 1L else 0L
-      if (cur == null) cur = SessState(e.t_us, e.t_us, 1, c, nc)
-      else if (e.t_us - cur.lastUs > gapUs) {
-        closed += ClosedSession(userId, cur.startUs, cur.lastUs, cur.nEvents, sumValue(cur))
-        cur = SessState(e.t_us, e.t_us, 1, c, nc)
-      } else cur = SessState(math.min(cur.startUs, e.t_us), math.max(cur.lastUs, e.t_us),
-        cur.nEvents + 1, cur.sumC + c, cur.nC + nc)
-    }
-    if (cur != null) state.update(cur)
+    val (closed, open) = foldSessions(userId, gapUs, state.getOption,
+      events.map(e => (e.t_us, e.c)))
+    open.foreach(state.update)
     closed.iterator
   }
+
+  /** The session fold both sessionizers share: `events` ((t_us, cents)
+    * pairs) sorted by time and folded onto the `open` session; returns
+    * the sessions a gap closed and the session left open. */
+  private def foldSessions(userId: Long, gapUs: Long, open: Option[SessState],
+                           events: Iterator[(Long, Option[Long])])
+      : (Seq[ClosedSession], Option[SessState]) = {
+    val closed = Seq.newBuilder[ClosedSession]
+    val last = events.toArray.sortBy(_._1).foldLeft(open) { case (cur, (t, cOpt)) =>
+      val c = cOpt.getOrElse(0L)
+      val nc = if (cOpt.isDefined) 1L else 0L
+      Some(cur match {
+        case Some(s) if t - s.lastUs <= gapUs => SessState(math.min(s.startUs, t),
+          math.max(s.lastUs, t), s.nEvents + 1, s.sumC + c, s.nC + nc)
+        case _ =>
+          cur.foreach(s => closed += closedSession(userId, s))
+          SessState(t, t, 1, c, nc)
+      })
+    }
+    (closed.result(), last)
+  }
+
+  private def closedSession(userId: Long, s: SessState): ClosedSession =
+    ClosedSession(userId, s.startUs, s.lastUs, s.nEvents,
+      if (s.nC == 0) None else Some(s.sumC / 100.0))
 
   /** [[SessEvent]] plus the watermark-bearing timestamp column (the
     * event-time column must survive into the Dataset for
@@ -483,30 +494,14 @@ object StreamingJobs {
       userId: Long,
       events: Iterator[SessEventWm],
       state: GroupState[SessState]): Iterator[ClosedSession] = {
-    def sumValue(s: SessState): Option[Double] =
-      if (s.nC == 0) None else Some(s.sumC / 100.0)
     if (state.hasTimedOut) {
       val cur = state.get
       state.remove()
-      Iterator.single(ClosedSession(userId, cur.startUs, cur.lastUs,
-        cur.nEvents, sumValue(cur)))
+      Iterator.single(closedSession(userId, cur))
     } else {
-      val sorted = events.toArray.sortBy(_.t_us)
-      var cur = state.getOption.orNull
-      val closed = scala.collection.mutable.ArrayBuffer.empty[ClosedSession]
-      for (e <- sorted) {
-        val c = e.c.getOrElse(0L)
-        val nc = if (e.c.isDefined) 1L else 0L
-        if (cur == null) cur = SessState(e.t_us, e.t_us, 1, c, nc)
-        else if (e.t_us - cur.lastUs > gapUs) {
-          closed += ClosedSession(userId, cur.startUs, cur.lastUs,
-            cur.nEvents, sumValue(cur))
-          cur = SessState(e.t_us, e.t_us, 1, c, nc)
-        } else cur = SessState(math.min(cur.startUs, e.t_us),
-          math.max(cur.lastUs, e.t_us),
-          cur.nEvents + 1, cur.sumC + c, cur.nC + nc)
-      }
-      if (cur != null) {
+      val (closed, open) = foldSessions(userId, gapUs, state.getOption,
+        events.map(e => (e.t_us, e.c)))
+      open.foreach { cur =>
         state.update(cur)
         // close when the EVENT-TIME watermark strictly passes end + gap:
         // at that point no event that could extend this session can
@@ -532,16 +527,9 @@ object StreamingJobs {
   def sessionizeStreamWm(spark: SparkSession, dir: String, delay: String,
                          gapUs: Long = Sessionize.GapUs): Dataset[ClosedSession] = {
     import spark.implicits._
-    val (tsIsLong, _) = eventsTsProbe(spark, dir)
-    spark.readStream
-      .schema(eventsRawSchema(tsIsLong))
-      .parquet(dir)
-      .withColumn("ts",
-        if (tsIsLong) expr("timestamp_micros(ts div 1000)")
-        else col("ts").cast("timestamp"))
+    eventsStream(spark, dir)
       .withWatermark("ts", delay)
-      .select(col("user_id"), expr("unix_micros(ts)").as("t_us"),
-        expr("CAST(round(value * 100.0) AS BIGINT)").as("c"), col("ts"))
+      .select(col("user_id"), TUs.as("t_us"), Cents.as("c"), col("ts"))
       .as[SessEventWm]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout)(
@@ -563,18 +551,10 @@ object StreamingJobs {
     * sum_value NULL when no event carried a value (SUM over all-NULL),
     * matching the hand-rolled Option. */
   def sessionizeStreamNative(spark: SparkSession, dir: String, delay: String,
-                             gapUs: Long = Sessionize.GapUs): DataFrame = {
-    val (tsIsLong, _) = eventsTsProbe(spark, dir)
-    spark.readStream
-      .schema(eventsRawSchema(tsIsLong))
-      .parquet(dir)
-      .withColumn("ts",
-        if (tsIsLong) expr("timestamp_micros(ts div 1000)")
-        else col("ts").cast("timestamp"))
+                             gapUs: Long = Sessionize.GapUs): DataFrame =
+    eventsStream(spark, dir)
       .withWatermark("ts", delay)
-      .withColumn("c",
-        when(col("value").isNotNull,
-          expr("CAST(round(value * 100.0) AS BIGINT)")))
+      .withColumn("c", Cents)
       .groupBy(col("user_id"),
         session_window(col("ts"), s"$gapUs microseconds").as("sw"))
       .agg(count(lit(1)).as("n_events"), sum(col("c")).as("sum_c"))
@@ -583,19 +563,13 @@ object StreamingJobs {
         expr(s"unix_micros(sw.end) - $gapUs").as("session_end_us"),
         col("n_events"),
         expr("CAST(sum_c AS DOUBLE) / 100.0").as("sum_value"))
-  }
 
   /** Streaming sessionization over the same file source. */
   def sessionizeStream(spark: SparkSession, dir: String,
                        gapUs: Long = Sessionize.GapUs): Dataset[ClosedSession] = {
     import spark.implicits._
-    val (tsIsLong, tUs) = eventsTsProbe(spark, dir)
-    spark.readStream
-      .schema(eventsRawSchema(tsIsLong))
-      .parquet(dir)
-      .select(col("user_id"),
-        tUs.as("t_us"),
-        expr("CAST(round(value * 100.0) AS BIGINT)").as("c"))
+    eventsStream(spark, dir)
+      .select(col("user_id"), TUs.as("t_us"), Cents.as("c"))
       .as[SessEvent]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout)(
@@ -673,14 +647,9 @@ object StreamingJobs {
     * UNBOUNDED PRECEDING frame cannot. */
   def asofJoinStream(spark: SparkSession, dir: String): Dataset[AsofMatch] = {
     import spark.implicits._
-    val (tsIsLong, tUs) = eventsTsProbe(spark, dir)
-    spark.readStream
-      .schema(eventsRawSchema(tsIsLong))
-      .parquet(dir)
+    eventsStream(spark, dir)
       .filter(col("event_type").isin("click", "purchase"))
-      .select(col("user_id"), col("event_id"),
-        tUs.as("t_us"),
-        col("value"),
+      .select(col("user_id"), col("event_id"), TUs.as("t_us"), col("value"),
         when(col("event_type") === "purchase", 0).otherwise(1).as("side"))
       .as[AsofEvent]
       .groupByKey(_.user_id)
@@ -709,14 +678,10 @@ object StreamingJobs {
     * index the batch form would use. */
   def corpusDiffStream(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.CorpusDiff
-    val fpExpr =
-      "md5(lower(trim(regexp_replace(coalesce(text, ''), '\\\\s+', ' '))))"
-    val old = CorpusDiff.oldSnapshot(
-      spark.read.schema(documentsRawSchema).parquet(dir))
-      .select(col("doc_id"), expr(fpExpr).as("old_fp"))
-    val stream = CorpusDiff.newSnapshot(
-      spark.readStream.schema(documentsRawSchema).parquet(dir))
-      .select(col("doc_id"), expr(fpExpr).as("new_fp"), col("source"))
+    val old = CorpusDiff.oldSnapshot(documentsSnapshot(spark, dir))
+      .select(col("doc_id"), expr(CorpusDiff.FpExpr).as("old_fp"))
+    val stream = CorpusDiff.newSnapshot(documentsStream(spark, dir))
+      .select(col("doc_id"), expr(CorpusDiff.FpExpr).as("new_fp"), col("source"))
     stream.join(old, Seq("doc_id"), "left")
       .withColumn("status",
         when(col("old_fp").isNull, lit("added"))
@@ -738,12 +703,9 @@ object StreamingJobs {
     */
   def cdcApplyStream(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Cdc
-    val fpExpr =
-      "md5(lower(trim(regexp_replace(coalesce(text, ''), '\\\\s+', ' '))))"
-    val snap = spark.read.schema(documentsRawSchema).parquet(dir)
-      .select(col("doc_id"), expr(fpExpr).as("old_fp"))
-    val changes = Cdc.changeBatch(
-      spark.readStream.schema(documentsRawSchema).parquet(dir))
+    val snap = documentsSnapshot(spark, dir)
+      .select(col("doc_id"), expr(Cdc.FpExpr).as("old_fp"))
+    val changes = Cdc.changeBatch(documentsStream(spark, dir))
     changes.withColumnRenamed("fp", "new_fp")
       .join(snap, Seq("doc_id"), "left")
       .select(col("doc_id"), col("op"), col("new_fp"), col("old_fp"),
@@ -779,8 +741,7 @@ object StreamingJobs {
                 filesPerTrigger: Int = 0): Dataset[ViewRow] = {
     import spark.implicits._
     import graft.operators.Ivm
-    val statics = spark.read.schema(documentsRawSchema).parquet(dir)
-    val rows = statics.select(col("doc_id"), col("source"),
+    val rows = documentsSnapshot(spark, dir).select(col("doc_id"), col("source"),
       expr(Ivm.FpExpr).as("fp"))
     val before = rows.select(col("doc_id"), col("source").as("old_source"),
       expr(Ivm.hexValExpr("fp")).as("old_val"))
@@ -789,12 +750,8 @@ object StreamingJobs {
       .as[ViewRow]
       .groupByKey(_.source)
       .mapValues(r => ViewState(r.n_docs, r.fp_mass, 0L))
-    val reader0 = spark.readStream.schema(documentsRawSchema)
-    val reader =
-      if (filesPerTrigger > 0) reader0.option("maxFilesPerTrigger", filesPerTrigger)
-      else reader0
     val changes = Ivm.syntheticBatch(
-      reader.parquet(dir)
+      documentsStream(spark, dir, filesPerTrigger)
         .select(col("doc_id"), col("source"), expr(Ivm.FpExpr).as("fp"))
         .withColumn("k", expr(Ivm.KeyExpr)))
     val mutations = changes.filter(col("op") =!= "insert")
@@ -838,12 +795,8 @@ object StreamingJobs {
     * txnVersion, public docs) on the owned format.
     *
     * Returns a function suitable for `writeStream.foreachBatch`. */
-  def commitLogSinkBatch(table: String, appId: String)
-      : (DataFrame, Long) => Unit = { (batch: DataFrame, batchId: Long) =>
-    graft.sources.CommitLog.appendIdempotent(
-      batch.sparkSession, table, batch, appId, batchId)
-    ()
-  }
+  def commitLogSinkBatch(table: String, appId: String): (DataFrame, Long) => Unit =
+    commitLogSinkBatchPartitioned(table, appId, Nil)
 
   /** [[commitLogSinkBatch]] into a PARTITIONED layout (round 17): each
     * micro-batch lands through [[graft.sources.CommitLog
@@ -870,7 +823,7 @@ object StreamingJobs {
     * [[graft.sources.CommitLog]] tables:
     *  - `docsTable` — the arrived corpus, landed exactly-once by the
     *    idempotent-append watermark;
-    *  - the GRAM-INDEX table (`<labelsTable>_grams` by default) — the
+    *  - the GRAM-INDEX table (`<labelsTable>_grams`) — the
     *    corpus's persisted shingle index ([[graft.operators.Dedup
     *    .gramIndex]] rows: doc_id, sh, nsh), APPENDED per batch with
     *    the batch's own grams only. This is the round-16 store-back:
@@ -888,9 +841,9 @@ object StreamingJobs {
     *    .compactClustered]] BY `sh` (disjoint per-file sh ranges), and
     *    each batch reads only the index files whose [min_sh, max_sh]
     *    intersect the batch's own sh BANDS (the high
-    *    `64 − probeBandShift` bits of each batch gram — ≤ 2^12 bands
+    *    `64 − ProbeBandShift` bits of each batch gram — ≤ 2^12 bands
     *    by construction, batch-bounded driver metadata; above
-    *    `maxProbeBands` the batch is index-scale and a full scan is
+    *    `MaxProbeBands` the batch is index-scale and a full scan is
     *    proportional). The probe goes through [[graft.sources
     *    .CommitLog.readPruned]] — file skipping WITHOUT the residual
     *    row filter, because the sh equi-join already implies it — so
@@ -932,42 +885,15 @@ object StreamingJobs {
     *
     * Append-only unique doc ids are the incremental contract (same as
     * the batch twin's). */
-  /** The per-batch gram-probe pruning predicate (round 17): the batch's
-    * sh BANDS — high `64 − shift` bits of each gram hash — as a balanced
-    * OR of per-band signed ranges, matched against the gram index's
-    * per-file sh min/max stats. None = the batch occupies more than
-    * `maxBands` bands (index-scale batch: a full scan is proportional);
-    * Some(lit) never happens — a gram-free batch is handled by the
-    * caller (nothing to probe at all). Public so the stress battery can
-    * census the same cut the maintainer uses. */
-  def gramBandPredicate(batchGrams: DataFrame, shift: Int = 52,
-                        maxBands: Int = 512): Option[Column] = {
-    import graft.sources.CommitLog
-    val bands = batchGrams
-      .select(shiftrightunsigned(col("sh"), shift).as("b"))
-      .distinct().collect().map(_.getLong(0))
-    if (bands.isEmpty || bands.length > maxBands) None
-    else Some(CommitLog.balancedOr(bands.toSeq.map { b =>
-      val lo = b << shift
-      val hi = lo + ((1L << shift) - 1L)
-      col("sh") >= lo && col("sh") <= hi
-    }))
-  }
-
   def clusterMaintainBatch(docsTable: String, labelsTable: String,
                            appId: String,
-                           threshold: Double = graft.operators.Dedup.JaccardThreshold,
-                           gramsTable: String = "",
                            compactGramsEvery: Int = 0,
                            gramsTargetFiles: Int = 64,
-                           gramsRetainVersions: Int = 0,
-                           probeBandShift: Int = 52,
-                           maxProbeBands: Int = 512)
+                           gramsRetainVersions: Int = 0)
       : (DataFrame, Long) => Unit = { (batch: DataFrame, batchId: Long) =>
     val spark = batch.sparkSession
     import graft.sources.CommitLog
-    import graft.operators.Dedup
-    val gramsT = if (gramsTable.nonEmpty) gramsTable else s"${labelsTable}_grams"
+    val gramsT = s"${labelsTable}_grams"
     // the labels watermark short-circuit comes FIRST: commit order
     // docs→grams→labels means a labels hit proves all three landed
     if (CommitLog.txnLatest(labelsTable, appId) >= batchId) ()
@@ -1012,16 +938,17 @@ object StreamingJobs {
       // feeds the band census AND the delta mine's three join sides —
       // batch-sized, one materialization (the multi-consumer invariant)
       val batchGrams = gramsOrEmpty(batchGramsRaw).localCheckpoint()
-      // the batch's sh BANDS (high 64−shift bits of each gram hash):
-      // ≤ 2^(64−shift) distinct values by construction, so the census is
-      // bounded driver metadata regardless of batch size. Each band is a
-      // contiguous SIGNED sh range (band<<shift keeps the sign bit, and
-      // within a band signed order == unsigned order), so the per-band
-      // range predicates prune against the files' signed min/max stats.
+      // the batch's sh BANDS (high 64−ProbeBandShift bits of each gram
+      // hash): ≤ 2^(64−ProbeBandShift) distinct values by construction, so
+      // the census is bounded driver metadata regardless of batch size.
+      // Each band is a contiguous SIGNED sh range (band<<ProbeBandShift
+      // keeps the sign bit, and within a band signed order == unsigned
+      // order), so the per-band range predicates prune against the
+      // files' signed min/max stats.
       val corpusGrams =
         if (gramsV == 0) batchGrams.limit(0)
         else if (batchGrams.isEmpty) batchGrams.limit(0) // gram-free: probe nothing
-        else gramBandPredicate(batchGrams, probeBandShift, maxProbeBands) match {
+        else gramBandPredicate(batchGrams) match {
           case Some(c) =>
             // file skipping WITHOUT the row-level residual: the sh
             // equi-join in the delta mine already implies it, and a
@@ -1037,7 +964,7 @@ object StreamingJobs {
           batchRows.select(col("doc_id"), col("doc_id").as("cluster_id")).limit(0)
         else CommitLog.read(spark, labelsTable, Some(lHead))
       val delta = Dedup.pairsFromIndex(
-        Dedup.pairIndexDeltaFromGrams(corpusGrams, batchGrams), threshold)
+        Dedup.pairIndexDeltaFromGrams(corpusGrams, batchGrams), Dedup.JaccardThreshold)
         .select(col("id1"), col("id2"))
       val newLabels = Dedup.clustersIncrementalFromFrames(oldLabels,
         batchRows.select(col("doc_id")), delta)
@@ -1078,6 +1005,31 @@ object StreamingJobs {
       }
     }
     ()
+  }
+
+  /** Gram-probe pruning geometry: a band is the high `64 − ProbeBandShift`
+    * bits of a gram hash; a batch in more than `MaxProbeBands` bands is
+    * index-scale and scans the whole index. */
+  private val ProbeBandShift = 52
+  private val MaxProbeBands = 512
+
+  /** The per-batch gram-probe pruning predicate (round 17): the batch's
+    * sh BANDS as a balanced OR of per-band signed ranges, matched against
+    * the gram index's per-file sh min/max stats. None = the batch
+    * occupies more than `MaxProbeBands` bands; Some(lit) never happens —
+    * a gram-free batch is handled by the caller (nothing to probe at
+    * all). */
+  private def gramBandPredicate(batchGrams: DataFrame): Option[Column] = {
+    import graft.sources.CommitLog
+    val bands = batchGrams
+      .select(shiftrightunsigned(col("sh"), ProbeBandShift).as("b"))
+      .distinct().collect().map(_.getLong(0))
+    if (bands.isEmpty || bands.length > MaxProbeBands) None
+    else Some(CommitLog.balancedOr(bands.toSeq.map { b =>
+      val lo = b << ProbeBandShift
+      val hi = lo + ((1L << ProbeBandShift) - 1L)
+      col("sh") >= lo && col("sh") <= hi
+    }))
   }
 
   // ------------------------------------------- stream-stream range join
@@ -1161,13 +1113,7 @@ object StreamingJobs {
 
   private def clickPurchaseJoinedRaw(spark: SparkSession, dir: String, delay: String,
                                      windowUs: Long, joinType: String): DataFrame = {
-    val (tsIsLong, _) = eventsTsProbe(spark, dir)
-    def side(tpe: String, idAs: String, tsAs: String) = spark.readStream
-      .schema(eventsRawSchema(tsIsLong))
-      .parquet(dir)
-      .withColumn("ts",
-        if (tsIsLong) expr("timestamp_micros(ts div 1000)")
-        else col("ts").cast("timestamp"))
+    def side(tpe: String, idAs: String, tsAs: String) = eventsStream(spark, dir)
       .filter(col("event_type") === tpe)
       .select(col("user_id"), col("event_id").as(idAs), col("ts").as(tsAs))
     val clicks = side("click", "click_id", "click_ts")
@@ -1296,14 +1242,9 @@ object StreamingJobs {
     * batch rollup's counts and cents per channel. */
   def attributionStream(spark: SparkSession, dir: String): Dataset[AttributedPurchase] = {
     import spark.implicits._
-    val (tsIsLong, tUs) = eventsTsProbe(spark, dir)
-    spark.readStream
-      .schema(eventsRawSchema(tsIsLong))
-      .parquet(dir)
+    eventsStream(spark, dir)
       .filter(col("event_type").isin("view", "click", "purchase"))
-      .select(col("user_id"), col("event_id"),
-        tUs.as("t_us"),
-        expr("CAST(round(value * 100.0) AS BIGINT)").as("cents"),
+      .select(col("user_id"), col("event_id"), TUs.as("t_us"), Cents.as("cents"),
         when(col("event_type") === "purchase", 1).otherwise(0).as("side"),
         col("event_type"))
       .as[TouchEvent]
@@ -1392,14 +1333,8 @@ object StreamingJobs {
   def cusumStream(spark: SparkSession, dir: String, delay: String,
                   mu: Map[String, Long]): Dataset[CusumDayRow] = {
     import spark.implicits._
-    val (tsIsLong, tUs) = eventsTsProbe(spark, dir)
-    spark.readStream
-      .schema(eventsRawSchema(tsIsLong))
-      .parquet(dir)
-      .withColumn("ts",
-        if (tsIsLong) expr("timestamp_micros(ts div 1000)")
-        else col("ts").cast("timestamp"))
-      .select(col("event_type"), expr("unix_micros(ts)").as("t_us"), col("ts"))
+    eventsStream(spark, dir)
+      .select(col("event_type"), TUs.as("t_us"), col("ts"))
       .withWatermark("ts", delay)
       .as[CusumEvent]
       .groupByKey(_.event_type)
