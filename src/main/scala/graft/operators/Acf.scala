@@ -25,7 +25,7 @@ import Parity.{r, rsql}
   * BEFORE any float exists; 4-decimal rounded-text emission).
   *
   * Scale shape: ONE data-volume aggregation (map-combinable daily
-  * counts); the span agg and densification run on |types|×|days| rows
+  * counts, [[DailyCounts.dense]]); the span agg and densification run on |types|×|days| rows
   * (the sequence explode is INLINE at the generator per the invariant);
   * all [[MaxLag]] lead() windows share a single type-keyed exchange
   * (same partitioning + ordering); the stack() unpivot and the closing
@@ -41,19 +41,8 @@ object Acf {
       |          sqrt(CAST(n * sxx - sx * sx AS DOUBLE) * CAST(n * syy - sy * sy AS DOUBLE))
       |END""".stripMargin
 
-  private val UsPerDay = 86400000000L
-
   def acfDaily(events: DataFrame, maxLag: Int = MaxLag): DataFrame = {
-    val daily = events
-      .select(col("event_type"), expr(s"unix_micros(ts) div $UsPerDay").as("day"))
-      .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
-      .localCheckpoint() // 2 consumers: the span agg + the dense join
-    val dense = daily.groupBy("event_type")
-      .agg(min("day").as("a"), max("day").as("b"))
-      .select(col("event_type"), explode(expr("sequence(a, b)")).as("day"))
-      .join(daily, Seq("event_type", "day"), "left")
-      .select(col("event_type"), col("day"),
-        coalesce(col("n"), lit(0L)).as("x"))
+    val dense = DailyCounts.dense(events)
     val byDay = Window.partitionBy("event_type").orderBy("day")
     val lagged = (1 to maxLag).foldLeft(dense) { (df, k) =>
       df.withColumn(s"y$k", lead(col("x"), k).over(byDay))
@@ -86,18 +75,7 @@ object Acf {
     val arms = (1 to MaxLag)
       .map(k => s"SELECT event_type, $k AS lag, x, y$k AS y FROM lagged WHERE y$k IS NOT NULL")
       .mkString("\n       |  UNION ALL ")
-    s"""WITH daily AS (
-       |  SELECT event_type, epoch_us(date_trunc('microseconds', ts)) // $UsPerDay AS day,
-       |         CAST(count(*) AS BIGINT) AS n
-       |  FROM events GROUP BY 1, 2
-       |), span AS (
-       |  SELECT event_type, min(day) AS a, max(day) AS b FROM daily GROUP BY 1
-       |), dense AS (
-       |  SELECT s.event_type, ax.day, CAST(COALESCE(d.n, 0) AS BIGINT) AS x
-       |  FROM span s
-       |  CROSS JOIN LATERAL (SELECT unnest(range(s.a, s.b + 1)) AS day) ax
-       |  LEFT JOIN daily d ON d.event_type = s.event_type AND d.day = ax.day
-       |), lagged AS (
+    s"""WITH ${DailyCounts.DensifyCtes}, lagged AS (
        |  SELECT event_type, day, x,
        |         $leads
        |  FROM dense

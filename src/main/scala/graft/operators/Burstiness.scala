@@ -22,23 +22,14 @@ import org.apache.spark.sql.functions._
   * the type has zero total mass (mean 0 ⇒ F undefined), by integer
   * guard before any division.
   *
-  * Scale: ONE map-combinable data-volume agg (daily counts); the span
+  * Scale: ONE map-combinable data-volume agg (daily counts,
+  * [[DailyCounts.dense]]); the span
   * agg + densification (sequence inline at the generator) + moment agg
   * run on |types|×|days| rows. */
 object Burstiness {
 
-  private val UsPerDay = 86400000000L
-
-  def eventBurstiness(events: DataFrame): DataFrame = {
-    val daily = events
-      .select(col("event_type"), expr(s"unix_micros(ts) div $UsPerDay").as("day"))
-      .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
-      .localCheckpoint() // 2 consumers: span agg + dense join
-    daily.groupBy("event_type")
-      .agg(min("day").as("a"), max("day").as("b"))
-      .select(col("event_type"), explode(expr("sequence(a, b)")).as("day"))
-      .join(daily, Seq("event_type", "day"), "left")
-      .select(col("event_type"), coalesce(col("n"), lit(0L)).as("x"))
+  def eventBurstiness(events: DataFrame): DataFrame =
+    DailyCounts.dense(events)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_days"),
         sum("x").as("n_events"),
@@ -49,24 +40,12 @@ object Burstiness {
                 |     ELSE (n_days * sxx - n_events * n_events) * 1000
                 |          div (n_days * n_events) END""".stripMargin)
           .as("fano_milli"))
-  }
 
   def eventBurstinessQ(events: DataFrame): DataFrame =
     eventBurstiness(events).orderBy("event_type")
 
   val eventBurstinessSql: String =
-    s"""WITH daily AS (
-       |  SELECT event_type, epoch_us(date_trunc('microseconds', ts)) // $UsPerDay AS day,
-       |         CAST(count(*) AS BIGINT) AS n
-       |  FROM events GROUP BY 1, 2
-       |), span AS (
-       |  SELECT event_type, min(day) AS a, max(day) AS b FROM daily GROUP BY 1
-       |), dense AS (
-       |  SELECT s.event_type, CAST(COALESCE(d.n, 0) AS BIGINT) AS x
-       |  FROM span s
-       |  CROSS JOIN LATERAL (SELECT unnest(range(s.a, s.b + 1)) AS day) ax
-       |  LEFT JOIN daily d ON d.event_type = s.event_type AND d.day = ax.day
-       |), m AS (
+    s"""WITH ${DailyCounts.DensifyCtes}, m AS (
        |  SELECT event_type,
        |         CAST(count(*) AS BIGINT) AS n_days,
        |         CAST(sum(x) AS BIGINT) AS n_events,

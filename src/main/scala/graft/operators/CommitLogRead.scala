@@ -375,10 +375,7 @@ object CommitLogRead {
     val selectedBefore = CommitLog.prunedLiveFiles(spark, table, cond).toSet
     val othersBefore =
       CommitLog.liveFiles(table, headBefore).filterNot(selectedBefore).sorted
-    val v = CommitLog.compactWhere(spark, table, cond) match {
-      case Right(x) => x
-      case Left(c) => throw new IllegalStateException(s"unexpected conflict: $c")
-    }
+    val v = must(CommitLog.compactWhere(spark, table, cond))
     val liveAfter = CommitLog.liveFiles(table, v)
     val othersAfter = liveAfter.filterNot(selectedBefore).sorted
     val newFiles = liveAfter.filter(f =>
@@ -564,10 +561,7 @@ object CommitLogRead {
     if (v0r.columns.isEmpty || v0r.isEmpty)
       return base.limit(0)
         .select(lit(1L).as("version"), col("doc_id"), col("source"), col("n_chars"))
-    val v1 = CommitLog.deleteWhere(spark, table, col("doc_id") % 2 === 0) match {
-      case Right(v) => v
-      case Left(c) => throw new IllegalStateException(s"unexpected conflict: $c")
-    }
+    val v1 = must(CommitLog.deleteWhere(spark, table, col("doc_id") % 2 === 0))
     // a corpus whose thirds-0 subset has no even ids makes the delete a
     // no-op (Right(0), nothing committed) — there is then nothing to
     // sweep and no horizon to prove; emit the unchanged head tagged

@@ -40,7 +40,7 @@ import org.apache.spark.sql.functions._
   * two-sided question).
   *
   * Scale shape (the [[Ewma]] pattern): ONE map-combinable daily-count
-  * aggregation is the only data-volume stage; densification, the
+  * aggregation ([[DailyCounts.dense]]) is the only data-volume stage; densification, the
   * whole-partition μ window and both running windows share one
   * type-keyed exchange, each partition bounded by the TIME axis (days),
   * never by data volume. */
@@ -49,19 +49,8 @@ object Cusum {
   /** Decision threshold: alarm when S exceeds H·max(μ_milli, 1000). */
   val H = 5L
 
-  private val UsPerDay = 86400000000L
-
   def cusumAlarm(events: DataFrame): DataFrame = {
-    val daily = events
-      .select(col("event_type"), expr(s"unix_micros(ts) div $UsPerDay").as("day"))
-      .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
-      .localCheckpoint() // 2 consumers: the span agg + the dense join
-    val dense = daily.groupBy("event_type")
-      .agg(min("day").as("a"), max("day").as("b"))
-      .select(col("event_type"), explode(expr("sequence(a, b)")).as("day"))
-      .join(daily, Seq("event_type", "day"), "left")
-      .select(col("event_type"), col("day"),
-        coalesce(col("n"), lit(0L)).as("x"))
+    val dense = DailyCounts.dense(events)
     val wAll = Window.partitionBy("event_type")
     val wRun = Window.partitionBy("event_type").orderBy("day")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -87,18 +76,7 @@ object Cusum {
     * over one partitioning, same milli texts (sums CAST back from
     * DuckDB's HUGEINT promotion). */
   val cusumAlarmSql: String =
-    s"""WITH daily AS (
-       |  SELECT event_type, epoch_us(date_trunc('microseconds', ts)) // $UsPerDay AS day,
-       |         CAST(count(*) AS BIGINT) AS n
-       |  FROM events GROUP BY 1, 2
-       |), span AS (
-       |  SELECT event_type, min(day) AS a, max(day) AS b FROM daily GROUP BY 1
-       |), dense AS (
-       |  SELECT s.event_type, ax.day, CAST(COALESCE(d.n, 0) AS BIGINT) AS x
-       |  FROM span s
-       |  CROSS JOIN LATERAL (SELECT unnest(range(s.a, s.b + 1)) AS day) ax
-       |  LEFT JOIN daily d ON d.event_type = s.event_type AND d.day = ax.day
-       |), dev AS (
+    s"""WITH ${DailyCounts.DensifyCtes}, dev AS (
        |  SELECT event_type, day, x,
        |         CAST((sum(x) OVER (PARTITION BY event_type) * 1000)
        |              // count(*) OVER (PARTITION BY event_type) AS BIGINT) AS mu_milli

@@ -30,26 +30,16 @@ import org.apache.spark.sql.functions._
   * any realistic volume).
   *
   * Scale shape (the [[Acf]] pattern): ONE map-combinable daily-count
-  * aggregation is the only data-volume stage; densification (a missing
+  * aggregation ([[DailyCounts.dense]]) is the only data-volume stage;
+  * densification (a missing
   * day is a REAL 0 — skipping it would smear the decay across holes)
   * and the K lag() windows all share one type-keyed exchange. */
 object Ewma {
 
   val Kernel = 16
 
-  private val UsPerDay = 86400000000L
-
   def ewmaDaily(events: DataFrame, kernel: Int = Kernel): DataFrame = {
-    val daily = events
-      .select(col("event_type"), expr(s"unix_micros(ts) div $UsPerDay").as("day"))
-      .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
-      .localCheckpoint() // 2 consumers: the span agg + the dense join
-    val dense = daily.groupBy("event_type")
-      .agg(min("day").as("a"), max("day").as("b"))
-      .select(col("event_type"), explode(expr("sequence(a, b)")).as("day"))
-      .join(daily, Seq("event_type", "day"), "left")
-      .select(col("event_type"), col("day"),
-        coalesce(col("n"), lit(0L)).as("x"))
+    val dense = DailyCounts.dense(events)
     val byDay = Window.partitionBy("event_type").orderBy("day")
     val lagged = (1 until kernel).foldLeft(dense) { (df, k) =>
       df.withColumn(s"x$k", lag(col("x"), k).over(byDay))
@@ -75,18 +65,7 @@ object Ewma {
       val src = if (k == 0) "x" else s"x$k"
       s"(COALESCE($src, CAST(0 AS BIGINT)) * 1000000) // ${1L << (k + 1)}"
     }.mkString(" + ")
-    s"""WITH daily AS (
-       |  SELECT event_type, epoch_us(date_trunc('microseconds', ts)) // $UsPerDay AS day,
-       |         CAST(count(*) AS BIGINT) AS n
-       |  FROM events GROUP BY 1, 2
-       |), span AS (
-       |  SELECT event_type, min(day) AS a, max(day) AS b FROM daily GROUP BY 1
-       |), dense AS (
-       |  SELECT s.event_type, ax.day, CAST(COALESCE(d.n, 0) AS BIGINT) AS x
-       |  FROM span s
-       |  CROSS JOIN LATERAL (SELECT unnest(range(s.a, s.b + 1)) AS day) ax
-       |  LEFT JOIN daily d ON d.event_type = s.event_type AND d.day = ax.day
-       |), lagged AS (
+    s"""WITH ${DailyCounts.DensifyCtes}, lagged AS (
        |  SELECT event_type, day, x,
        |         $lags
        |  FROM dense

@@ -37,8 +37,9 @@ import org.apache.spark.sql.functions._
   * branch of the forecast operator is unreachable here — it exists for
   * the forecast's own short-span corner).
   *
-  * Scale shape: ONE map-combinable daily-count aggregation is the only
-  * data-volume stage (the decompose's own bound). The cutoff×prefix
+  * Scale shape: ONE map-combinable daily-count aggregation
+  * ([[DailyCounts.daily]]) is the only data-volume stage (the
+  * decompose's own bound). The cutoff×prefix
   * frame is |types|·O(span²) — CALENDAR-squared metadata (a 3-year span
   * is ~10⁶ rows per type), partitioned by (type, cutoff) so every
   * window rides one bounded exchange; never data-bounded. */
@@ -50,8 +51,6 @@ object ForecastBacktest {
   /** Minimum days of history before a cutoff is evaluable (≥ a full
     * week + 1 ⇒ every dow class observed at every cutoff). */
   val MinTrain = 7
-
-  private val UsPerDay = 86400000000L
 
   def forecastBacktest(events: DataFrame, horizon: Int = Horizon): DataFrame =
     scoredErrors(events, horizon)
@@ -82,9 +81,7 @@ object ForecastBacktest {
     * same rolling-origin arithmetic as the |err| consumers. */
   private[operators] def scoredRaw(events: DataFrame,
                                    horizon: Int = Horizon): DataFrame = {
-    val daily = events
-      .select(col("event_type"), expr(s"unix_micros(ts) div $UsPerDay").as("day"))
-      .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
+    val daily = DailyCounts.daily(events)
       .localCheckpoint() // 2 consumers: the span agg + the dense join
     val dense = daily.groupBy("event_type")
       .agg(min("day").as("a"), max("day").as("bmax"))
@@ -192,13 +189,13 @@ object ForecastBacktest {
        |  FROM scored
        |)""".stripMargin
 
-  /** DuckDB twin: [[SeasonalDecompose.densifyCtes]] verbatim, then the
+  /** DuckDB twin: [[DailyCounts.DensifyCtes]] verbatim, then the
     * SAME per-cutoff decompose arithmetic over the prefix frame —
     * windows partitioned by (event_type, b) so each cutoff's trend sees
     * only its own prefix (the rolling-origin no-leak contract in SQL
     * form). */
   val forecastBacktestSql: String =
-    s"""WITH ${SeasonalDecompose.densifyCtes}, $backtestErrCtes
+    s"""WITH ${DailyCounts.DensifyCtes}, $backtestErrCtes
        |SELECT event_type, horizon,
        |       CAST(count(*) AS BIGINT) AS n_cutoffs,
        |       CAST(sum(err) AS BIGINT) // CAST(count(*) AS BIGINT) AS mae_milli,

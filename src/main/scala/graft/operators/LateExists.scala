@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import Retention.UsPerDay
+
 /** Correlated-EXISTS order screen (round 8, continuation) — the TPC-H Q4
   * shape: per order priority, how many orders have AT LEAST ONE late
   * line item (shipped ≥ [[LateDays]] days after the order date). The
@@ -27,8 +29,6 @@ object LateExists {
 
   /** A line is late if shipped this many days (or more) after the order. */
   val LateDays = 30
-
-  private val UsPerDay = 86400000000L
 
   def q4LateExists(orders: DataFrame, lineitem: DataFrame): DataFrame = {
     val late = orders.join(lineitem,

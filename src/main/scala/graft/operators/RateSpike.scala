@@ -18,7 +18,8 @@ import org.apache.spark.sql.functions._
   * spikes additionally require [[MinSpikeCount]] events (a 0→3 jump is
   * not an incident).
   *
-  * Scale shape: the (type, day) count is map-side combinable and
+  * Scale shape: the (type, day) count ([[DailyCounts.daily]]) is
+  * map-side combinable and
   * collapses event volume first; the axis densification
   * ([[EventSeries]] pattern — silent days must EXIST to be seen as
   * drops) explodes ≤ |types|·horizon rows inline; the baseline is one
@@ -32,10 +33,7 @@ object RateSpike {
   val MinSpikeCount = 5
 
   def rateSpike(events: DataFrame): DataFrame = {
-    val daily = events
-      .select(col("event_type"),
-        expr(s"unix_micros(ts) div ${Retention.UsPerDay}").as("day"))
-      .groupBy("event_type", "day").agg(count(lit(1)).as("n_events"))
+    val daily = DailyCounts.daily(events).withColumnRenamed("n", "n_events")
     val axis = daily.groupBy("event_type")
       .agg(min("day").as("min_day"), max("day").as("max_day"))
       .select(col("event_type"), col("min_day"),
@@ -58,21 +56,14 @@ object RateSpike {
     rateSpike(events).orderBy("event_type", "day")
 
   val rateSpikeSql: String =
-    s"""WITH e AS (
-       |  SELECT event_type,
-       |         epoch_us(date_trunc('microseconds', ts)) // ${Retention.UsPerDay} AS day
-       |  FROM events
-       |), daily AS (
-       |  SELECT event_type, day, CAST(count(*) AS BIGINT) AS n_events
-       |  FROM e GROUP BY 1, 2
-       |), axis AS (
+    s"""WITH ${DailyCounts.DailyCte}, axis AS (
        |  SELECT event_type, min_day, unnest(generate_series(min_day, max_day)) AS day
        |  FROM (SELECT event_type, min(day) AS min_day, max(day) AS max_day
        |        FROM daily GROUP BY 1)
        |), s AS (
        |  SELECT a.event_type, a.day, a.min_day,
-       |         COALESCE(d.n_events, 0) AS n,
-       |         COALESCE(CAST(sum(COALESCE(d.n_events, 0)) OVER (
+       |         COALESCE(d.n, 0) AS n,
+       |         COALESCE(CAST(sum(COALESCE(d.n, 0)) OVER (
        |           PARTITION BY a.event_type ORDER BY a.day
        |           RANGE BETWEEN 7 PRECEDING AND 1 PRECEDING) AS BIGINT), 0) AS trail7
        |  FROM axis a LEFT JOIN daily d

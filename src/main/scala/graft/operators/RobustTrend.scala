@@ -23,7 +23,8 @@ import org.apache.spark.sql.functions._
   * the value.
   *
   * Scale shape: ONE data-volume aggregation (map-side-combinable daily
-  * counts per type — the only stage that sees event rows); the pair
+  * counts per type, [[DailyCounts.daily]] — the only stage that sees
+  * event rows); the pair
   * self-join and median window run on the |types| × |days| frame —
   * HORIZON²-bounded (30 days ⇒ 435 pairs/type), independent of event
   * volume; daily frame localCheckpoint'd (self-join = two consumers).
@@ -31,12 +32,8 @@ import org.apache.spark.sql.functions._
   */
 object RobustTrend {
 
-  private val UsPerDay = 86400000000L
-
   def robustTrend(events: DataFrame): DataFrame = {
-    val daily = events
-      .select(col("event_type"), expr(s"unix_micros(ts) div $UsPerDay").as("day"))
-      .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
+    val daily = DailyCounts.daily(events)
       .localCheckpoint() // self-join: two consumers of the daily frame
     val slopes = daily.select(col("event_type"), col("day").as("d1"), col("n").as("c1"))
       .join(daily.select(col("event_type").as("et2"), col("day").as("d2"), col("n").as("c2")),
@@ -57,11 +54,7 @@ object RobustTrend {
   def robustTrendQ(events: DataFrame): DataFrame = robustTrend(events)
 
   val robustTrendSql: String =
-    s"""WITH daily AS (
-       |  SELECT event_type, epoch_us(date_trunc('microseconds', ts)) // $UsPerDay AS day,
-       |         CAST(count(*) AS BIGINT) AS n
-       |  FROM events GROUP BY 1, 2
-       |), slopes AS (
+    s"""WITH ${DailyCounts.DailyCte}, slopes AS (
        |  SELECT a.event_type, a.day AS d1, b.day AS d2,
        |         CAST(sign(b.n - a.n) AS BIGINT) * ((abs(b.n - a.n) * 1000) // (b.day - a.day)) AS slope_milli
        |  FROM daily a JOIN daily b

@@ -40,26 +40,15 @@ import org.apache.spark.sql.functions._
   * shorter than a week have degenerate dow classes (n = 1 ⇒ residual
   * exactly 0) — stated, not hidden.
   *
-  * Scale shape: ONE map-combinable daily-count aggregation is the only
-  * data-volume stage; the trend window rides the type-keyed exchange,
+  * Scale shape: ONE map-combinable daily-count aggregation
+  * ([[DailyCounts.dense]]) is the only data-volume stage; the trend window rides the type-keyed exchange,
   * the dow means are a map-combinable groupBy on the |types|×7 key
   * joined back broadcast — the dense frame is TIME-bounded, never
   * data-bounded. */
 object SeasonalDecompose {
 
-  private val UsPerDay = 86400000000L
-
   def seasonalDecompose(events: DataFrame): DataFrame = {
-    val daily = events
-      .select(col("event_type"), expr(s"unix_micros(ts) div $UsPerDay").as("day"))
-      .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
-      .localCheckpoint() // 2 consumers: the span agg + the dense join
-    val dense = daily.groupBy("event_type")
-      .agg(min("day").as("a"), max("day").as("b"))
-      .select(col("event_type"), explode(expr("sequence(a, b)")).as("day"))
-      .join(daily, Seq("event_type", "day"), "left")
-      .select(col("event_type"), col("day"),
-        coalesce(col("n"), lit(0L)).as("x"))
+    val dense = DailyCounts.dense(events)
     val w7 = Window.partitionBy("event_type").orderBy("day").rowsBetween(-3, 3)
     val detrended = dense
       .withColumn("ws", sum("x").over(w7))
@@ -84,26 +73,9 @@ object SeasonalDecompose {
   def seasonalDecomposeQ(events: DataFrame): DataFrame =
     seasonalDecompose(events).orderBy("event_type", "day")
 
-  /** The densification prefix alone — `daily`/`span`/`dense(event_type,
-    * day, x)` — shared with [[ForecastBacktest]]'s oracle (round 16),
-    * which re-runs the decompose arithmetic PER CUTOFF over its own
-    * prefix frame rather than consuming `sdecomp`. */
-  private[operators] val densifyCtes: String =
-    s"""daily AS (
-       |  SELECT event_type, epoch_us(date_trunc('microseconds', ts)) // $UsPerDay AS day,
-       |         CAST(count(*) AS BIGINT) AS n
-       |  FROM events GROUP BY 1, 2
-       |), span AS (
-       |  SELECT event_type, min(day) AS a, max(day) AS b FROM daily GROUP BY 1
-       |), dense AS (
-       |  SELECT s.event_type, ax.day, CAST(COALESCE(d.n, 0) AS BIGINT) AS x
-       |  FROM span s
-       |  CROSS JOIN LATERAL (SELECT unnest(range(s.a, s.b + 1)) AS day) ax
-       |  LEFT JOIN daily d ON d.event_type = s.event_type AND d.day = ax.day
-       |)""".stripMargin
-
   /** The decompose arithmetic alone (`tr`..`sdecomp`, consuming
-    * `dense`) — composable next to OTHER consumers of [[densifyCtes]]
+    * `dense`) — composable next to OTHER consumers of
+    * [[DailyCounts.DensifyCtes]]
     * in one WITH (the forecast_planned oracle nests the decompose AND
     * the backtest chains without CTE-name collisions). */
   private[operators] val decomposeTailCtes: String =
@@ -139,7 +111,7 @@ object SeasonalDecompose {
     * [[seasonalDecomposeSql]] and [[SeasonalAnomaly]]'s oracle (the
     * one-text rule). */
   private[operators] val decomposeCtes: String =
-    s"$densifyCtes, $decomposeTailCtes"
+    s"${DailyCounts.DensifyCtes}, $decomposeTailCtes"
 
   /** DuckDB twin: same densification, same partial-edge trend window,
     * same sign-factored dow means, same reconstruction-exact residual. */

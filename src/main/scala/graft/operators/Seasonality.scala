@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import Retention.UsPerDay
+
 /** Activity SEASONALITY profile (round 8, continuation) — the
   * (day-of-week × hour-of-day) load matrix: capacity planning, anomaly
   * baselines ("is Tuesday 3am traffic normal?") and bot detection (flat
@@ -24,7 +26,6 @@ import org.apache.spark.sql.functions._
   */
 object Seasonality {
 
-  private val UsPerDay = 86400000000L
   private val UsPerHour = 3600000000L
 
   def eventSeasonality(events: DataFrame): DataFrame = {

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import Retention.UsPerDay
+
 /** Order-to-first-ship LATENCY quantiles (round 8, continuation) — per
   * order priority, the exact distribution (min/p50/p90/max, integer
   * days) of the lag between an order and its FIRST shipped line: the
@@ -28,8 +30,6 @@ import org.apache.spark.sql.functions._
   * histogram rewrite is the dial beyond that), one closing agg.
   */
 object ShipLatency {
-
-  private val UsPerDay = 86400000000L
 
   def shipLatency(orders: DataFrame, lineitem: DataFrame): DataFrame = {
     val firstShip = lineitem

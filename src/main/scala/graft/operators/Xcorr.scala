@@ -25,8 +25,8 @@ import Parity.{r, rsql}
   * per-type spans of acf/ewma/cusum, whose question is per-series);
   * holes are real 0s as everywhere in the family.
   *
-  * Scale shape: ONE map-combinable daily-count aggregation is the only
-  * data-volume stage; the global span is a 1-row broadcast; the
+  * Scale shape: ONE map-combinable daily-count aggregation
+  * ([[DailyCounts.daily]]) is the only data-volume stage; the global span is a 1-row broadcast; the
   * lag-shifted self-join runs on the |types|×|days|×(2·MaxLag+1)
   * exploded frame keyed by the shifted day — day-keyed exchanges whose
   * size is calendar-bounded, never data-bounded; the closing agg is
@@ -42,12 +42,8 @@ object Xcorr {
       |          sqrt(CAST(n * sxx - sx * sx AS DOUBLE) * CAST(n * syy - sy * sy AS DOUBLE))
       |END""".stripMargin
 
-  private val UsPerDay = 86400000000L
-
   def xcorrDaily(events: DataFrame, maxLag: Int = MaxLag): DataFrame = {
-    val daily = events
-      .select(col("event_type"), expr(s"unix_micros(ts) div $UsPerDay").as("day"))
-      .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
+    val daily = DailyCounts.daily(events)
       .localCheckpoint() // 3 consumers: global span, type list, dense join
     val span = daily.agg(min("day").as("a"), max("day").as("b"))
     val dense = daily.select("event_type").distinct()
@@ -82,11 +78,7 @@ object Xcorr {
   /** DuckDB twin: same global-span densification, same exploded lag
     * join, same sums and formula text. */
   val xcorrDailySql: String =
-    s"""WITH daily AS (
-       |  SELECT event_type, epoch_us(date_trunc('microseconds', ts)) // $UsPerDay AS day,
-       |         CAST(count(*) AS BIGINT) AS n
-       |  FROM events GROUP BY 1, 2
-       |), span AS (
+    s"""WITH ${DailyCounts.DailyCte}, span AS (
        |  SELECT min(day) AS a, max(day) AS b FROM daily
        |), dense AS (
        |  SELECT t.event_type, ax.day, CAST(COALESCE(d.n, 0) AS BIGINT) AS x

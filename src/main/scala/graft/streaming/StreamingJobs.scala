@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.types._
 
 import graft.Tables
-import graft.operators.{Dedup, Sessionize}
+import graft.operators.{Dedup, Retention, Sessionize}
 import graft.sources.ParquetFooter
 
 /** Structured Streaming twins of the batch event and document operators
@@ -1254,7 +1254,6 @@ object StreamingJobs {
 
   // ------------------------------------------------------- streaming CUSUM
 
-  private val CusumUsPerDay = 86400000000L
   private val CusumMsPerDay = 86400000L
 
   case class CusumEvent(event_type: String, t_us: Long, ts: java.sql.Timestamp)
@@ -1289,11 +1288,11 @@ object StreamingJobs {
     val st0 = state.getOption.getOrElse {
       val firstDay =
         if (arrivals.isEmpty) wmDay
-        else arrivals.iterator.map(_.t_us / CusumUsPerDay).min
+        else arrivals.iterator.map(_.t_us / Retention.UsPerDay).min
       CusumStreamState(firstDay - 1, 0L, Map.empty)
     }
     val withCounts = arrivals.foldLeft(st0) { (st, e) =>
-      val d = e.t_us / CusumUsPerDay
+      val d = e.t_us / Retention.UsPerDay
       if (d <= st.lastClosed) st // below an already-closed day: dropped
       else st.copy(open = st.open.updated(d, st.open.getOrElse(d, 0L) + 1L))
     }

@@ -297,6 +297,7 @@ class EmptyInputSpec extends AnyFunSuite {
       "event_interarrival" -> Interarrival.eventInterarrival(empty),
       "rate_spike" -> RateSpike.rateSpike(empty),
       "robust_trend" -> RobustTrend.robustTrend(empty),
+      "change_point" -> ChangePoint.changePoint(empty),
       "session_concurrency" -> SessionConcurrency.sessionConcurrency(empty),
       "user_ltv" -> UserLtv.userLtv(empty),
       "attribution_lasttouch" -> Attribution.attributionLastTouch(empty),
