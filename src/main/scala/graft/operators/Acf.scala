@@ -25,8 +25,9 @@ import Parity.{r, rsql}
   * BEFORE any float exists; 4-decimal rounded-text emission).
   *
   * Scale shape: ONE data-volume aggregation (map-combinable daily
-  * counts, [[DailyCounts.dense]]); the span agg and densification run on |types|×|days| rows
-  * (the sequence explode is INLINE at the generator per the invariant);
+  * counts, [[DailyCounts.dense]]); the span agg and densification run
+  * on |types|×|days| rows (the sequence explode is INLINE at the
+  * generator per the invariant);
   * all [[MaxLag]] lead() windows share a single type-keyed exchange
   * (same partitioning + ordering); the stack() unpivot and the closing
   * (type, lag) agg stay on the tiny frame. */

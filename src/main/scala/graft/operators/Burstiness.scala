@@ -23,9 +23,8 @@ import org.apache.spark.sql.functions._
   * guard before any division.
   *
   * Scale: ONE map-combinable data-volume agg (daily counts,
-  * [[DailyCounts.dense]]); the span
-  * agg + densification (sequence inline at the generator) + moment agg
-  * run on |types|×|days| rows. */
+  * [[DailyCounts.dense]]); the span agg + densification (sequence
+  * inline at the generator) + moment agg run on |types|×|days| rows. */
 object Burstiness {
 
   def eventBurstiness(events: DataFrame): DataFrame =

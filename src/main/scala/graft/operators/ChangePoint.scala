@@ -65,8 +65,7 @@ object ChangePoint {
     * rank 1 is the global CUSUM argmax; rank 2 re-runs the same exact
     * statistic WITHIN each of the two segments rank 1 induces
     * (segment-local prefix mass, length and total — the classic
-    * segment-then-rescan step, unrolled once like
-    * [[EmbeddingPrincipal]]'s fixed-K loop) and takes the better
+    * segment-then-rescan step) and takes the better
     * segment's argmax under the same (score DESC, day ASC) total order.
     * So a spike+step series reports BOTH: whichever shift dominates
     * globally is rank 1, the other surfaces at rank 2 inside its

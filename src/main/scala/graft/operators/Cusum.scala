@@ -40,8 +40,9 @@ import org.apache.spark.sql.functions._
   * two-sided question).
   *
   * Scale shape (the [[Ewma]] pattern): ONE map-combinable daily-count
-  * aggregation ([[DailyCounts.dense]]) is the only data-volume stage; densification, the
-  * whole-partition μ window and both running windows share one
+  * aggregation ([[DailyCounts.dense]]) is the only data-volume stage;
+  * densification, the whole-partition μ window and both running windows
+  * share one
   * type-keyed exchange, each partition bounded by the TIME axis (days),
   * never by data volume. */
 object Cusum {

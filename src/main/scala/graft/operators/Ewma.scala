@@ -31,9 +31,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape (the [[Acf]] pattern): ONE map-combinable daily-count
   * aggregation ([[DailyCounts.dense]]) is the only data-volume stage;
-  * densification (a missing
-  * day is a REAL 0 — skipping it would smear the decay across holes)
-  * and the K lag() windows all share one type-keyed exchange. */
+  * densification (a missing day is a REAL 0 — skipping it would smear
+  * the decay across holes) and the K lag() windows all share one
+  * type-keyed exchange. */
 object Ewma {
 
   val Kernel = 16

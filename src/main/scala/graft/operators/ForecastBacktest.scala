@@ -39,8 +39,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: ONE map-combinable daily-count aggregation
   * ([[DailyCounts.daily]]) is the only data-volume stage (the
-  * decompose's own bound). The cutoff×prefix
-  * frame is |types|·O(span²) — CALENDAR-squared metadata (a 3-year span
+  * decompose's own bound). The cutoff×prefix frame is |types|·O(span²)
+  * — CALENDAR-squared metadata (a 3-year span
   * is ~10⁶ rows per type), partitioned by (type, cutoff) so every
   * window rides one bounded exchange; never data-bounded. */
 object ForecastBacktest {

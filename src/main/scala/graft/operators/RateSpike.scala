@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   * not an incident).
   *
   * Scale shape: the (type, day) count ([[DailyCounts.daily]]) is
-  * map-side combinable and
-  * collapses event volume first; the axis densification
+  * map-side combinable and collapses event volume first; the axis
+  * densification
   * ([[EventSeries]] pattern — silent days must EXIST to be seen as
   * drops) explodes ≤ |types|·horizon rows inline; the baseline is one
   * RANGE frame over the integer day axis per type — |types| partitions

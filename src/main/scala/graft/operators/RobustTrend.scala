@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: ONE data-volume aggregation (map-side-combinable daily
   * counts per type, [[DailyCounts.daily]] — the only stage that sees
-  * event rows); the pair
-  * self-join and median window run on the |types| × |days| frame —
+  * event rows); the pair self-join and median window run on the
+  * |types| × |days| frame —
   * HORIZON²-bounded (30 days ⇒ 435 pairs/type), independent of event
   * volume; daily frame localCheckpoint'd (self-join = two consumers).
   * Types with <2 days have no slope and are excluded by contract.

@@ -41,8 +41,9 @@ import org.apache.spark.sql.functions._
   * exactly 0) — stated, not hidden.
   *
   * Scale shape: ONE map-combinable daily-count aggregation
-  * ([[DailyCounts.dense]]) is the only data-volume stage; the trend window rides the type-keyed exchange,
-  * the dow means are a map-combinable groupBy on the |types|×7 key
+  * ([[DailyCounts.dense]]) is the only data-volume stage; the trend
+  * window rides the type-keyed exchange, the dow means are a
+  * map-combinable groupBy on the |types|×7 key
   * joined back broadcast — the dense frame is TIME-bounded, never
   * data-bounded. */
 object SeasonalDecompose {

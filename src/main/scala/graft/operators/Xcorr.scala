@@ -26,8 +26,9 @@ import Parity.{r, rsql}
   * holes are real 0s as everywhere in the family.
   *
   * Scale shape: ONE map-combinable daily-count aggregation
-  * ([[DailyCounts.daily]]) is the only data-volume stage; the global span is a 1-row broadcast; the
-  * lag-shifted self-join runs on the |types|×|days|×(2·MaxLag+1)
+  * ([[DailyCounts.daily]]) is the only data-volume stage; the global
+  * span is a 1-row broadcast; the lag-shifted self-join runs on the
+  * |types|×|days|×(2·MaxLag+1)
   * exploded frame keyed by the shifted day — day-keyed exchanges whose
   * size is calendar-bounded, never data-bounded; the closing agg is
   * |types|²·lags rows. */
