@@ -76,12 +76,9 @@ object ChangePoint {
     * sparse by contract: rank 1 needs n ≥ 2, rank 2 needs a segment
     * with ≥ 2 positions.
     *
-    * Runs as [[changePointK]] at K = 2, whose ranks 1-2 are this
-    * segmentation exactly (spec-pinned); [[changePoint2Sql]] stays the
-    * independent oracle. The K form runs 5 localCheckpoint jobs here
-    * where an unrolled twin ran 1; at sf0.1 (4-core VM, `graft.Bench
-    * --repeat 5`, six alternating runs each) the change_point_2 median
-    * read 0.79 s against the twin's 0.82 s. */
+    * Runs as [[changePointK]] at K = 2 (5 localCheckpoint jobs), whose
+    * ranks 1-2 are this segmentation exactly (spec-pinned);
+    * [[changePoint2Sql]] stays the independent oracle. */
   def changePoint2(events: DataFrame): DataFrame = changePointK(events, 2)
 
   def changePoint2Q(events: DataFrame): DataFrame = changePoint2(events)
